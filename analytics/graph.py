@@ -866,6 +866,10 @@ def link_ppr(spark: SparkSession, sf: str) -> DataFrame:
     rounded score (unreached nodes are exactly 0.0 — the seed-proximity
     frontier after 4 hops, cf. link_bfs_depth's ring cutoff).
 
+    Scores are per-seed-unit mass, not probabilities: every seed starts
+    with mass 1.0 and takes (1-d) reset mass per round, undivided by the
+    seed count, so the scores sum to up to the number of seeds, not to 1.
+
     Parity device: identical to link_pagerank — the per-round arithmetic
     tree is the same fixed shape in both engines, the reset CASE is
     integer-exact, and the single round(·, 4) pins the output; the

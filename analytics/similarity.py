@@ -1071,7 +1071,7 @@ ORACLE["ann_pq_adc"] = f"""
             FROM ex e JOIN c{PQ_ITER} c ON e.m = c.m AND e.jj = c.jj
             WHERE e.vec_id < {PQ_NQ}
             GROUP BY 1, 2, 3),
-    adc AS (SELECT l.qid, en.vec_id AS cid, sum(l.lt) AS d2
+    adc AS (SELECT l.qid, en.vec_id AS cid, CAST(sum(l.lt) AS BIGINT) AS d2
             FROM enc en JOIN lut l ON en.m = l.m AND en.code = l.code
             WHERE en.vec_id != l.qid
             GROUP BY 1, 2)

@@ -15,15 +15,28 @@ sandbox, so the catalog provides the two Iceberg properties the spec uses
     (SURVEY.md §3.3).
 
 Table kinds:
-  * snapshot tables (``frontier``, ``seen_filter``, ``robots_rules``,
+  * snapshot tables (``seen_filter``, ``robots_rules``,
     ``politeness_budgets``): each epoch writes a full immutable snapshot
-    dir; the manifest points at the newest.  At production scale this is
-    an Iceberg ``MERGE INTO`` that rewrites only matched (status,
-    host_bucket) partitions — :func:`iceberg_merge_frontier_sql` carries
-    that exact statement for the jar-enabled path (SURVEY.md §2.2 SC6).
+    dir (robots: an appended delta dir); the manifest points at the newest.
+  * the ``frontier`` snapshot is a map of cells to immutable leaf dirs:
+    one cell per host bucket for pending rows (rewritten only when the
+    epoch pops or disallows rows of that bucket, otherwise appended to by
+    insert dirs and compacted past ``max_cell_dirs``), and one cell per
+    terminal status that gains one leaf dir per epoch and is never
+    rewritten (see the cell notes below).  At production scale this is an
+    Iceberg ``MERGE INTO`` that rewrites only matched partitions —
+    :func:`iceberg_merge_frontier_sql` carries that exact statement for
+    the jar-enabled path (SURVEY.md §2.2 SC6).
   * append tables (``documents``, ``crawl_log``, ``lineage``,
     ``metrics``): each epoch appends a new directory; a read unions all
     committed epochs' directories (parquet append sink, SC4).
+
+No read of committed dirs starts a Spark job.  The manifest names every
+leaf dir, so a read passes the dirs themselves; Spark would still list them
+with a one-task-per-path job once a read passes more than 32 paths (its
+default ``parallelPartitionDiscovery.threshold``), so the session raises
+that threshold and the listing runs on the driver.  Frontier reads also
+pass the table schema, which skips the footer-inference job.
 """
 
 from __future__ import annotations
@@ -118,23 +131,26 @@ class SnapshotCatalog:
         return reader.parquet(*paths)
 
     # ---- cell-granular snapshots (frontier) ----
-    # The frontier snapshot is a dict of (status, host_bucket) CELLS, each a
-    # list of immutable leaf dirs: ``parts = {"pending/3": [dir, ...]}``.
-    # An epoch commit replaces only the pending cells it touched and APPENDS
-    # moved-row dirs to terminal cells — the manifest-level equivalent of
-    # Iceberg's add/remove-data-file commit (SC6), giving O(delta) epochs:
-    # done/failed cells are never rewritten, and a pending scan prunes at
-    # the MANIFEST (no file listing of terminal cells at all).
+    # The frontier snapshot is a dict of CELLS, each a list of immutable
+    # leaf dirs.  Pending rows live in one cell per host bucket
+    # (``"pending/3"``): the pop and the merge prune on the bucket, so an
+    # epoch rewrites only the pending cells it touched and appends insert
+    # dirs to the rest.  Rows that left 'pending' are only ever read whole
+    # (D2's url_hash anti-join), never pruned by bucket, so each epoch adds
+    # ONE leaf dir per terminal status to the cell named by the status
+    # alone (``"done"``, ``"failed"``, ``"disallowed"``); those dirs are never
+    # rewritten or compacted.  This is the manifest-level equivalent of
+    # Iceberg's add/remove-data-file commit (SC6): O(delta) epochs, and a
+    # pending scan prunes at the MANIFEST (terminal dirs are never listed).
 
     @staticmethod
-    def cell_key(status: str, bucket: int) -> str:
-        return f"{status}/{bucket}"
+    def cell_key(status: str, bucket: int | None = None) -> str:
+        return status if bucket is None else f"{status}/{bucket}"
 
-    def frontier_parts(self, epoch: int | None = None) -> dict | None:
-        """Cell map of the committed frontier, or None for a legacy
-        whole-table snapshot (pre-cell catalogs; migrated on next epoch)."""
+    def frontier_parts(self, epoch: int | None = None) -> dict:
+        """Cell map of the committed frontier."""
         ep = self.last_epoch() if epoch is None else epoch
-        return self.manifest(ep)["snapshots"]["frontier"].get("parts")
+        return self.manifest(ep)["snapshots"]["frontier"]["parts"]
 
     def read_parts(
         self,
@@ -145,14 +161,16 @@ class SnapshotCatalog:
     ) -> DataFrame | None:
         """Union of the selected cells' leaf dirs; None when no cell matches
         (caller supplies the empty frame — the catalog is schema-agnostic).
-        An explicit ``schema`` skips footer-based inference — one less
-        driver-side file touch per read on the per-epoch hot path."""
+        ``buckets`` selects bucketed (pending) cells only.  An explicit
+        ``schema`` skips footer-based schema inference, which is a Spark
+        job; the dir listing itself runs on the driver (engine/session.py
+        sets the parallel-listing threshold above any catalog's dir count)."""
         paths = []
         for cell, dirs in parts.items():
             st, _, bk = cell.partition("/")
             if status is not None and st != status:
                 continue
-            if buckets is not None and int(bk) not in buckets:
+            if buckets is not None and not (bk and int(bk) in buckets):
                 continue
             paths.extend(dirs)
         if not paths:

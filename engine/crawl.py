@@ -14,8 +14,21 @@ Per-epoch dataflow (SURVEY.md §3.1, shuffles labeled):
   → D1 bloom probe (cogrouped applyInPandas)            [shuffle 4: part_id]
   → D2 exact anti-join of maybe-seen rows vs frontier   [shuffle 5: url_hash, bloom-cut]
   → F7 touched-cell merge + insert-dir appends + D3 filter update
-    + L1 lineage + R1 robots for this epoch's new hosts → staging writes
+    + R1 robots for this epoch's new hosts → staging writes
+  → L1 lineage from the written files' parquet footers  [driver, no job]
   → K1 atomic manifest commit                           [driver]
+
+Frontier layout (engine/catalog.py cell notes): pending rows live in one
+cell per host_bucket, because the pop and the merge prune on the bucket;
+the merge rewrites only the pending cells this epoch popped or disallowed
+rows of, and inserts append one dir per bucket.  Rows that leave 'pending'
+are read only whole, by D2's anti-join, so each epoch writes them as ONE
+leaf dir per terminal status, appended to that status's cell and never
+rewritten or compacted.  Cell writes repartition to the session's shuffle
+partition count, so they run as several tasks with one file per cell.  No
+read lists its dirs through a Spark job: the session keeps the parallel
+listing threshold above any catalog's dir count (engine/session.py) and
+frontier reads pass the schema, so a read costs driver-side listing only.
 
 Determinism: every ordering decision reduces to the total key
 (priority, depth, url_hash), so the committed tables are identical at any
@@ -37,7 +50,7 @@ from engine.canonicalize import path_expr
 from engine.catalog import SnapshotCatalog
 from engine.fetch import fetch_parse
 from engine.frontier import pop_frontier, retry_transition
-from engine.lineage import partition_lineage, write_metrics_parquet
+from engine.lineage import write_lineage_parquet, write_metrics_parquet
 from engine.parse import extract_candidates
 from engine.robots import fetch_robots, robots_gate
 from engine.schemas import (
@@ -45,6 +58,7 @@ from engine.schemas import (
     FRONTIER,
     POLITENESS_BUDGETS,
     ROBOTS_RULES,
+    SEEN_FILTER,
 )
 from engine.seed import seeds_to_frontier
 from engine.synthgraph import GraphConfig, gen_budgets
@@ -67,7 +81,6 @@ class CrawlEngine:
         use_robots: bool = True,
         use_seen_filter: bool = True,
         default_k: int = 1,
-        partition_frontier_by_status: bool = True,  # retained arg: cells always partition by (status, host_bucket) now
         bench_budget: int | None = None,
         filter_kind: str = "bloom",
         max_cell_dirs: int = 16,
@@ -97,9 +110,9 @@ class CrawlEngine:
             self._budgets = None
         frontier = seeds_to_frontier(self.spark, seeds, self.n_buckets, seed_path)
         fr_path = cat.stage_path(0, "frontier")
-        cells = self._write_bucket_cells(frontier, os.path.join(fr_path, "pending"))
-        parts0 = {cat.cell_key("pending", b): [p] for b, p in cells.items()}
-        frontier = cat.read_parts(parts0)
+        cells = self._write_cells(frontier, os.path.join(fr_path, "pending"))
+        parts0 = {cell: [p] for cell, p in cells.items()}
+        frontier = cat.read_parts(parts0, schema=FRONTIER)
 
         # bench_budget: uniform politeness budget for throughput benches
         # (politeness *semantics* are identical; only the k value changes,
@@ -207,25 +220,19 @@ class CrawlEngine:
         budgets = self._budgets
         prev_epoch = cat.last_epoch()
         prev_manifest = cat.manifest(prev_epoch)
-        prev_meta = prev_manifest.get("meta", {})
-        prev_rows = prev_meta.get("frontier_rows")
-        prev_pending = prev_meta.get("pending")
-        prev_robots_rows = prev_meta.get("robots_rows")
+        prev_meta = prev_manifest["meta"]
+        prev_rows = prev_meta["frontier_rows"]
+        prev_pending = prev_meta["pending"]
+        prev_robots_rows = prev_meta["robots_rows"]
 
-        # SC3 scan prune: with a cell-granular snapshot the pending scan is
-        # pruned at the MANIFEST — terminal (done/failed/disallowed) cells
-        # are never even listed, let alone read.  Legacy whole-table
-        # snapshots fall back to a status filter (and are migrated to cells
-        # by this epoch's commit).
-        parts = prev_manifest["snapshots"]["frontier"].get("parts")
-        if parts is not None:
-            frontier = cat.read_parts(parts, schema=FRONTIER)
-            pending = cat.read_parts(parts, status="pending", schema=FRONTIER)
-            if pending is None:
-                pending = spark.createDataFrame([], FRONTIER)
-        else:
-            frontier = cat.read_snapshot("frontier")
-            pending = frontier.where(F.col("status") == "pending")
+        # SC3 scan prune: the pending scan is pruned at the MANIFEST —
+        # terminal (done/failed/disallowed) dirs are never even listed, let
+        # alone read.  Both reads list their dirs on the driver (no job).
+        parts = prev_manifest["snapshots"]["frontier"]["parts"]
+        frontier = cat.read_parts(parts, schema=FRONTIER)
+        pending = cat.read_parts(parts, status="pending", schema=FRONTIER)
+        if pending is None:
+            pending = spark.createDataFrame([], FRONTIER)
 
         # --- R2 gate; R1 ran AHEAD (init_run / previous epoch's overlap) ---
         # The committed robots table already covers every host that has
@@ -252,8 +259,6 @@ class CrawlEngine:
                 )
                 boot = fetch_robots(missing, cfg, epoch).persist()
                 n_boot = boot.count()
-                if prev_robots_rows is None:
-                    prev_robots_rows = robots.count()
                 if n_boot:
                     boot_path = os.path.join(
                         cat.stage_path(epoch, "robots_rules"), "bootstrap"
@@ -386,7 +391,7 @@ class CrawlEngine:
         )
         frontier_keys = frontier.select("url_hash")
         if self.use_seen_filter:
-            seen = cat.read_snapshot("seen_filter")
+            seen = cat.read_snapshot("seen_filter", schema=SEEN_FILTER)
             # slim strategy: Arrow-crosses 16 bytes/candidate (hash only)
             # instead of the full URL-carrying row, and its url_hash
             # join-back exchange is the same one flag_new needs.  The
@@ -441,7 +446,7 @@ class CrawlEngine:
         # Fragmentation is bounded by _compact_cells below.
         fut_insert_cells = pool.submit(_timed(
             "insert_cells",
-            self._write_bucket_cells,
+            self._write_cells,
             inserts.select(*cols),
             os.path.join(fr_dir, "inserts"),
         ))
@@ -482,51 +487,18 @@ class CrawlEngine:
                 cpath = os.path.join(cat.stage_path(epoch, "robots_rules"), "compact")
                 self._write(spark.read.schema(ROBOTS_RULES).parquet(*paths), cpath)
                 paths = [cpath]
-            base = prev_robots_rows if prev_robots_rows is not None else 0
-            return base + n, paths
+            return prev_robots_rows + n, paths
 
         fut_robots = pool.submit(_timed("robots_delta", robots_delta))
 
-        # --- L1 lineage ---
-        # Audits the COMMITTED layout: per-stage row counts are taken from
-        # the staged parquet each stage wrote (column-less count scans —
-        # parquet metadata, not data pages) instead of re-scanning the
-        # popped/flagged caches.  This removes two full cache passes from
-        # the tail; the job waits on the two writes it audits, both of
-        # which it overlaps with the merge/seen/robots work.
-        in_snap, out_snap = f"epoch={epoch - 1}", f"epoch={epoch}"
-        lineage_path = cat.stage_path(epoch, "lineage")
-
-        def write_lineage() -> None:
-            fut_crawl_log.result()
-            cell_paths = list(fut_insert_cells.result().values())
-            lineage = partition_lineage(
-                spark.read.parquet(crawl_log_path), epoch, "pop", in_snap, out_snap
-            ).unionByName(
-                partition_lineage(fetched, epoch, "fetch_parse", in_snap, out_snap)
-            )
-            if cell_paths:
-                lineage = lineage.unionByName(
-                    partition_lineage(
-                        spark.read.schema(FRONTIER).parquet(*cell_paths),
-                        epoch,
-                        "dedup_insert",
-                        in_snap,
-                        out_snap,
-                    )
-                )
-            self._write(lineage.coalesce(1), lineage_path)
-
-        fut_lineage = pool.submit(_timed("lineage", write_lineage))
-
         # --- F7 merge of TOUCHED pending cells (cell-granular, O(delta)) ---
-        # Only cells holding popped/disallowed rows are rewritten; rows
-        # leaving 'pending' are APPENDED as new immutable dirs under their
-        # terminal cell, which is never rewritten — the manifest-level
-        # analogue of Iceberg MERGE INTO's add/remove-file commit
-        # (engine/catalog.py SC6 notes).  Runs on the pool too: it needs
-        # only the two stat futures above, so it overlaps the probe/flag
-        # chain and every other write.
+        # Only pending cells holding popped/disallowed rows are rewritten;
+        # rows leaving 'pending' go to ONE new immutable dir per terminal
+        # status, appended to that status's cell and never rewritten — the
+        # manifest-level analogue of Iceberg MERGE INTO's add/remove-file
+        # commit (engine/catalog.py cell notes).  Runs on the pool too: it
+        # needs only the two stat futures above, so it overlaps the
+        # probe/flag chain and every other write.
         updates = retry_transition(fetched, cfg.max_retries).unionByName(
             disallowed.select(
                 "url_hash",
@@ -536,33 +508,16 @@ class CrawlEngine:
             )
         )
 
-        def write_merged() -> tuple[dict, dict, dict]:
+        def write_merged() -> tuple[set[str], dict]:
             st, ds = fut_fetch_stats.result(), fut_dis.result()
             touched = set(
                 b for b in set(st["bks"]) | set(ds["bks"]) if b is not None
             )
-            carry_cells: dict = {}
-            if parts is None:
-                # one-time migration of a legacy whole-table snapshot to cells
-                pending_src = frontier.where(
-                    (F.col("status") == "pending") & F.col("host_bucket").isin(touched)
-                )
-                legacy_carry = frontier.where(
-                    (F.col("status") != "pending") | ~F.col("host_bucket").isin(touched)
-                ).select(*cols)
-                base: dict = {}
-            else:
-                pending_src = cat.read_parts(
-                    parts, status="pending", buckets=touched, schema=FRONTIER
-                )
-                if pending_src is None:
-                    pending_src = spark.createDataFrame([], FRONTIER)
-                legacy_carry = None
-                base = {
-                    cell: list(dirs)
-                    for cell, dirs in parts.items()
-                    if not (cell.startswith("pending/") and int(cell.split("/")[1]) in touched)
-                }
+            pending_src = cat.read_parts(
+                parts, status="pending", buckets=touched, schema=FRONTIER
+            )
+            if pending_src is None:
+                pending_src = spark.createDataFrame([], FRONTIER)
             merged = (
                 pending_src.select(*cols)
                 .join(updates, "url_hash", "left")
@@ -571,12 +526,8 @@ class CrawlEngine:
                 .withColumn("priority", F.coalesce(F.col("new_priority"), F.col("priority")))
                 .drop("new_status", "new_retries", "new_priority")
             )
-            cells = self._write_status_cells(merged, os.path.join(fr_dir, "cells"))
-            if legacy_carry is not None:
-                carry_cells = self._write_status_cells(
-                    legacy_carry, os.path.join(fr_dir, "carry")
-                )
-            return base, cells, carry_cells
+            rewritten = {cat.cell_key("pending", b) for b in touched}
+            return rewritten, self._write_cells(merged, os.path.join(fr_dir, "cells"))
 
         fut_merged = pool.submit(_timed("merged", write_merged))
 
@@ -584,11 +535,10 @@ class CrawlEngine:
         try:
             stats = fut_fetch_stats.result()
             dis_stats = fut_dis.result()
-            base_parts, merged_cells, carry_cells = fut_merged.result()
+            rewritten, merged_cells = fut_merged.result()
             insert_cells = fut_insert_cells.result()
             ins_stats = ins_obs.get  # fired by the insert_cells write job
             fut_crawl_log.result()
-            fut_lineage.result()
             n_robots_rows, new_robots_paths = fut_robots.result()
             sf_path = fut_seen.result() if fut_seen is not None else None
         finally:
@@ -602,19 +552,28 @@ class CrawlEngine:
         n_cands, n_new = int(ins_stats["n_cands"]), int(ins_stats["n"])
 
         # assemble the cell map deterministically on the main thread:
-        # rewritten pending cells REPLACE their dir list, terminal/carry
-        # dirs and insert dirs APPEND
-        new_parts = dict(base_parts)
-        for (st, b), p in merged_cells.items():
-            if st == "pending":
-                new_parts[cat.cell_key("pending", b)] = [p]
-            else:
-                new_parts.setdefault(cat.cell_key(st, b), []).append(p)
-        for (st, b), p in carry_cells.items():
-            new_parts.setdefault(cat.cell_key(st, b), []).append(p)
-        for b, p in insert_cells.items():
-            new_parts.setdefault(cat.cell_key("pending", b), []).append(p)
+        # rewritten pending cells REPLACE their dir list, terminal dirs and
+        # insert dirs APPEND
+        new_parts = {c: list(d) for c, d in parts.items() if c not in rewritten}
+        for cells in (merged_cells, insert_cells):
+            for cell, p in cells.items():
+                new_parts.setdefault(cell, []).append(p)
         new_parts = self._compact_cells(new_parts, fr_dir)
+
+        # --- L1 lineage: row counts from the footers of the files this
+        # epoch wrote, read on the driver (no Spark job) ---
+        lineage_path = cat.stage_path(epoch, "lineage")
+        n_lineage = write_lineage_parquet(
+            lineage_path,
+            epoch,
+            {
+                "pop": [crawl_log_path],
+                "fetch_parse": [fetched_dir],
+                "dedup_insert": list(insert_cells.values()),
+            },
+            f"epoch={epoch - 1}",
+            f"epoch={epoch}",
+        )
 
         appends: dict = {
             # documents needs NO job at all: the append entry points at the
@@ -623,7 +582,7 @@ class CrawlEngine:
             # engine columns ride along, nullable-allowed per SURVEY.md §1.2)
             "documents": {"path": os.path.join(fetched_dir, "okp=1"), "rows": n_ok},
             "crawl_log": {"path": crawl_log_path, "rows": n_popped},
-            "lineage": {"path": lineage_path, "rows": 1},
+            "lineage": {"path": lineage_path, "rows": n_lineage},
         }
         snapshots: dict = {}
         if sf_path is not None:
@@ -640,17 +599,9 @@ class CrawlEngine:
         # pending_end and frontier_rows follow arithmetically from the
         # status-transition semantics (every popped row leaves 'pending'
         # and only retryable failures re-enter; inserts are all pending),
-        # so no post-write table scan is needed.  Falls back to counting
-        # for catalogs committed before this invariant was tracked.
-        frontier_rows = (prev_rows + n_new) if prev_rows is not None else None
-        if prev_pending is not None:
-            pending_end = (
-                prev_pending - n_popped - n_disallowed + n_retry_pending + n_new
-            )
-        else:
-            committed_pending = cat.read_parts(new_parts, status="pending")
-            pending_end = committed_pending.count() if committed_pending is not None else 0
-            frontier_rows = cat.read_parts(new_parts).count()
+        # so no post-write table scan is needed.
+        frontier_rows = prev_rows + n_new
+        pending_end = prev_pending - n_popped - n_disallowed + n_retry_pending + n_new
         wall = time.time() - t0
         metrics = {
             "urls_popped": n_popped,
@@ -720,22 +671,23 @@ class CrawlEngine:
 
     # ---------------------------------------------------------------- helpers
     def _compact_cells(self, new_parts: dict, fr_dir: str) -> dict:
-        """Bound cell fragmentation: a terminal cell accumulates one appended
-        dir per epoch that touches it; past ``max_cell_dirs`` the cell is
+        """Bound pending-cell fragmentation: an untouched pending cell gains
+        one insert dir per epoch; past ``max_cell_dirs`` the cell is
         rewritten into a single dir (Iceberg's rewrite_data_files analogue).
         Amortized cost stays O(delta): each row is rewritten at most once
-        per max_cell_dirs epochs."""
-        frag = {c: d for c, d in new_parts.items() if len(d) > self.max_cell_dirs}
+        per max_cell_dirs epochs.  Terminal cells gain one dir per epoch
+        and are never compacted."""
+        frag = {
+            c: d
+            for c, d in new_parts.items()
+            if c.startswith("pending/") and len(d) > self.max_cell_dirs
+        }
         if not frag:
             return new_parts
-        df = self.spark.read.parquet(*[p for dirs in frag.values() for p in dirs])
-        out = dict(new_parts)
-        for cell in frag:
-            del out[cell]
-        for (st, b), p in self._write_status_cells(
-            df, os.path.join(fr_dir, "compact")
-        ).items():
-            out[self.catalog.cell_key(st, b)] = [p]
+        df = self.catalog.read_parts(frag, schema=FRONTIER)
+        out = {c: d for c, d in new_parts.items() if c not in frag}
+        for cell, p in self._write_cells(df, os.path.join(fr_dir, "compact")).items():
+            out[cell] = [p]
         return out
 
     @staticmethod
@@ -745,47 +697,33 @@ class CrawlEngine:
             w = w.partitionBy(*partition_cols)
         w.parquet(path)
 
-    @staticmethod
-    def _write_bucket_cells(df: DataFrame, path: str) -> dict[int, str]:
-        """Write pending rows as one leaf dir per host_bucket cell.
+    def _write_cells(self, df: DataFrame, path: str) -> dict[str, str]:
+        """Write frontier rows as one leaf dir per cell: pending rows per
+        host_bucket, every other status in one dir.  Returns
+        {cell_key: leaf_dir}.
 
-        The ``_hb`` duplicate keeps host_bucket IN the data files (a hive
-        leaf dir read directly would otherwise lose its partition column);
-        repartition on it yields exactly one file per cell instead of
-        tasks × cells.  Returns {bucket: leaf_dir}.
-        """
+        The ``_cell`` partition column is derived, so status and
+        host_bucket stay IN the data files (a hive leaf dir read directly
+        loses its partition columns).  Repartitioning on it to an explicit
+        count gives each cell exactly one file, and, unlike a count-less
+        repartition that AQE coalesces to one task, spreads the cells over
+        the session's shuffle partitions."""
+        cell = F.when(
+            F.col("status") == "pending",
+            F.concat(F.lit("pending-"), F.col("host_bucket").cast("string")),
+        ).otherwise(F.col("status"))
+        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         (
-            df.withColumn("_hb", F.col("host_bucket"))
-            .repartition("_hb")
+            df.withColumn("_cell", cell)
+            .repartition(n, "_cell")
             .write.mode("overwrite")
-            .partitionBy("_hb")
+            .partitionBy("_cell")
             .parquet(path)
         )
-        return {
-            int(d.split("=")[1]): os.path.join(path, d)
-            for d in os.listdir(path)
-            if d.startswith("_hb=")
-        }
-
-    @staticmethod
-    def _write_status_cells(df: DataFrame, path: str) -> dict[tuple[str, int], str]:
-        """Write rows leaving 'pending' as (status, host_bucket) leaf dirs —
-        these get APPENDED to their terminal cells, which are never
-        rewritten.  Returns {(status, bucket): leaf_dir}."""
-        (
-            df.withColumn("_st", F.col("status"))
-            .withColumn("_hb", F.col("host_bucket"))
-            .repartition("_st", "_hb")
-            .write.mode("overwrite")
-            .partitionBy("_st", "_hb")
-            .parquet(path)
-        )
-        out: dict[tuple[str, int], str] = {}
-        for d_st in os.listdir(path):
-            if not d_st.startswith("_st="):
-                continue
-            st = d_st.split("=")[1]
-            for d_hb in os.listdir(os.path.join(path, d_st)):
-                if d_hb.startswith("_hb="):
-                    out[(st, int(d_hb.split("=")[1]))] = os.path.join(path, d_st, d_hb)
+        out: dict[str, str] = {}
+        for d in os.listdir(path):
+            if d.startswith("_cell="):
+                st, _, bk = d[len("_cell="):].partition("-")
+                key = self.catalog.cell_key(st, int(bk) if bk else None)
+                out[key] = os.path.join(path, d)
         return out

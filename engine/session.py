@@ -14,6 +14,13 @@ import os
 from pyspark.sql import SparkSession
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# A read of more than spark.sql.sources.parallelPartitionDiscovery.threshold
+# paths (default 32) lists them in a Spark job with one task per path.  The
+# catalog's manifests name every leaf dir and a crawl reads hundreds of
+# them per epoch, where that job cost ~2.5 s of a 3 s gate on 4 cores
+# while a driver-side listing takes milliseconds; so no catalog read may
+# reach the threshold.
+DRIVER_LISTING_MAX_PATHS = 1 << 16
 
 
 def build_session(
@@ -46,6 +53,10 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(DRIVER_LISTING_MAX_PATHS),
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])

@@ -24,6 +24,10 @@ SF_TEST = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def pytest_configure(config):
+    config.addinivalue_line("markers", "slow: crawls several epochs (tens of seconds)")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = build_session(app_name="tests", master="local[8]", shuffle_partitions=8)

@@ -1,46 +1,82 @@
 """F7 cell-granular merge: an epoch rewrites a strict subset of cells.
 
-SURVEY.md §1.2 / §2.1-F7: the frontier snapshot is partitioned by
-(status, host_bucket); epoch K's commit must (a) never rewrite a terminal
-cell — rows entering done/failed/disallowed are APPENDED as new immutable
-dirs — and (b) carry forward every untouched cell's dirs by identity.
-This is the sandbox analogue of Iceberg MERGE INTO's O(delta) file commit.
+SURVEY.md §1.2 / §2.1-F7: pending rows live in one cell per host_bucket and
+an epoch rewrites only the pending cells it touched; rows that leave
+'pending' are written as ONE new immutable dir per (epoch, terminal status),
+appended to that status's cell and never rewritten.  Untouched cells carry
+forward by identity.  This is the sandbox analogue of Iceberg MERGE INTO's
+O(delta) file commit.
 """
 
 from __future__ import annotations
 
+import os
+from collections import defaultdict
+
 import pytest
+from pyspark.sql import functions as F
 
 from engine.crawl import CrawlEngine
-from engine.synthgraph import TINY
+from engine.schemas import FRONTIER
+from engine.synthgraph import TINY, gen_seed_urls
+
+EPOCHS = 3
+
+
+def _files(d: str) -> list[tuple[str, int, int]]:
+    stats = {n: os.stat(os.path.join(d, n)) for n in os.listdir(d)}
+    return sorted((n, st.st_size, st.st_mtime_ns) for n, st in stats.items())
+
+
+@pytest.fixture(scope="module")
+def tiny_crawl(spark, tmp_path_factory):
+    """A 3-epoch TINY crawl, stepped epoch by epoch; records every terminal
+    dir's files right after the epoch that committed it."""
+    eng = CrawlEngine(
+        spark, str(tmp_path_factory.mktemp("cells")), TINY, n_buckets=8, n_filter_parts=4
+    )
+    eng.init_run(gen_seed_urls(TINY))
+    metrics, terminal_files = {}, {}
+    for ep in range(1, EPOCHS + 1):
+        metrics[ep] = eng.run_epoch(ep)
+        for cell, dirs in eng.catalog.frontier_parts(ep).items():
+            if not cell.startswith("pending/"):
+                for d in dirs:
+                    terminal_files.setdefault(d, _files(d))
+    return eng, metrics, terminal_files
 
 
 @pytest.mark.slow
-def test_terminal_cells_append_only(spark, tmp_path):
-    from engine.synthgraph import gen_seed_urls
-
-    eng = CrawlEngine(spark, str(tmp_path / "c"), TINY, n_buckets=8, n_filter_parts=4)
-    eng.run(3, gen_seed_urls(TINY))
+def test_terminal_cells_append_only(tiny_crawl):
+    eng, _, terminal_files = tiny_crawl
     cat = eng.catalog
-    assert cat.last_epoch() >= 3
+    assert cat.last_epoch() == EPOCHS
 
-    for ep in range(2, cat.last_epoch() + 1):
+    for ep in range(1, EPOCHS + 1):
         prev, cur = cat.frontier_parts(ep - 1), cat.frontier_parts(ep)
-        assert prev is not None and cur is not None
-        for cell, dirs in prev.items():
-            st = cell.split("/")[0]
-            if st == "pending":
+        for cell, dirs in cur.items():
+            if cell.startswith("pending/"):
                 continue
-            # terminal cell: previous dirs must survive verbatim, in order
-            assert cur.get(cell, [])[: len(dirs)] == dirs, (ep, cell)
-        # strict subset: at least one dir from an older epoch is reused
-        reused = [
-            d
-            for dirs in cur.values()
-            for d in dirs
-            if f"epoch={ep:06d}" not in d
-        ]
-        assert reused, f"epoch {ep} rewrote every cell"
+            # one cell per terminal status, not per (status, host_bucket)
+            assert cell in ("done", "failed", "disallowed"), cell
+            # earlier dirs survive verbatim, in order; the epoch adds at
+            # most one dir of its own
+            old = prev.get(cell, [])
+            assert dirs[: len(old)] == old, (ep, cell)
+            added = dirs[len(old):]
+            assert len(added) <= 1, (ep, cell, added)
+            assert all(f"epoch={ep:06d}" in d for d in added), (ep, cell, added)
+        if ep >= 2:
+            # strict subset: at least one dir from an older epoch is reused
+            reused = [
+                d for dirs in cur.values() for d in dirs if f"epoch={ep:06d}" not in d
+            ]
+            assert reused, f"epoch {ep} rewrote every cell"
+
+    # no terminal dir changed after the epoch that committed it
+    assert terminal_files
+    for d, files in terminal_files.items():
+        assert _files(d) == files, d
 
     # integrity: committed frontier has unique url_hash and matching count
     fr = cat.read_snapshot("frontier")
@@ -50,20 +86,67 @@ def test_terminal_cells_append_only(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_cell_compaction_bounds_fragmentation(spark, tmp_path):
-    """With max_cell_dirs=1 every fragmented cell is rewritten to a single
-    dir each epoch; committed frontier content is unchanged (same rows as
-    an uncompacted run)."""
-    from engine.synthgraph import gen_seed_urls
+def test_lineage_rows_match_metrics(tiny_crawl):
+    """Lineage rows (one per file a stage wrote) add up to the epoch's
+    metrics: pop and fetch_parse to urls_popped, dedup_insert to
+    outlinks_new."""
+    eng, metrics, _ = tiny_crawl
+    cat = eng.catalog
+    lineage = cat.read_appended("lineage")
+    sums = defaultdict(int)
+    for r in lineage.groupBy("epoch", "stage").agg(F.sum("rows_out").alias("n")).collect():
+        sums[(r["epoch"], r["stage"])] = r["n"]
+    for ep, m in metrics.items():
+        assert sums[(ep, "pop")] == m["urls_popped"], ep
+        assert sums[(ep, "fetch_parse")] == m["urls_popped"], ep
+        assert sums[(ep, "dedup_insert")] == m["outlinks_new"], ep
+        entry = cat.manifest(ep)["appends"]["lineage"]
+        assert entry["rows"] == lineage.where(F.col("epoch") == ep).count(), ep
+    assert lineage.where(F.col("partition_id") < 0).count() == 0
 
+
+def test_committed_frontier_read_starts_no_job(spark, tmp_path):
+    """Reading a committed frontier over more than 32 leaf dirs (Spark's
+    default parallel-listing threshold) lists them on the driver: no job."""
+    n_dirs = 40
+    rows = [
+        (b, f"https://h{b}.example/", f"h{b}.example", b, 0, 0.0, 0, "pending", 0, None)
+        for b in range(n_dirs)
+    ]
+    out = str(tmp_path / "cells")
+    (
+        spark.createDataFrame(rows, FRONTIER)
+        .withColumn("_b", F.col("host_bucket"))
+        .write.partitionBy("_b")
+        .parquet(out)
+    )
+    eng = CrawlEngine(spark, str(tmp_path / "c"), TINY, n_buckets=n_dirs)
+    cat = eng.catalog
+    parts = {cat.cell_key("pending", b): [os.path.join(out, f"_b={b}")] for b in range(n_dirs)}
+    cat.commit(0, {"frontier": {"rows": n_dirs, "parts": parts}}, appends={})
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    df = cat.read_parts(cat.frontier_parts(), schema=FRONTIER)
+    assert set(tracker.getJobIdsForGroup()) - before == set()
+    assert df.count() == n_dirs
+
+
+@pytest.mark.slow
+def test_cell_compaction_bounds_fragmentation(spark, tmp_path):
+    """With max_cell_dirs=1 every fragmented pending cell is rewritten to a
+    single dir each epoch, terminal cells are left alone (one dir per epoch
+    at most), and the committed frontier content is unchanged (same rows as
+    an uncompacted run)."""
     a = CrawlEngine(spark, str(tmp_path / "a"), TINY, n_buckets=8, n_filter_parts=4)
     b = CrawlEngine(
         spark, str(tmp_path / "b"), TINY, n_buckets=8, n_filter_parts=4, max_cell_dirs=1
     )
-    a.run(3, gen_seed_urls(TINY))
-    b.run(3, gen_seed_urls(TINY))
+    a.run(EPOCHS, gen_seed_urls(TINY))
+    b.run(EPOCHS, gen_seed_urls(TINY))
     for cell, dirs in b.catalog.frontier_parts().items():
-        assert len(dirs) <= 1, (cell, dirs)
+        limit = 1 if cell.startswith("pending/") else EPOCHS
+        assert len(dirs) <= limit, (cell, dirs)
     rows_a = sorted(
         tuple(r) for r in a.catalog.read_snapshot("frontier").collect()
     )

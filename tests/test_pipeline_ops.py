@@ -3137,16 +3137,30 @@ def test_kn_bigram_lm_matches_python(spark):
         assert abs(s - (1 - lam * (1 - cont_mass))) < 1e-4, a
 
 
-def test_events_ewma_matches_python(spark):
+def test_events_ewma_matches_python(spark, tmp_path):
     """Per-event EWMA vs a per-user sequential recompute with the same
     truncated dyadic weights and present-weight normalization."""
     from collections import defaultdict
 
+    from pyspark.sql import Window
+
     from analytics import events as E
     from analytics.common import load
 
-    rows = (
+    # every user of the shared events table has more than EWMA_K events, so
+    # every third user is cut to its first 3 events: those series never
+    # reach a full window
+    first = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    sf = str(tmp_path)
+    (
         load(spark, SF_TEST, "events")
+        .withColumn("_rn", F.row_number().over(first))
+        .where((F.col("user_id") % 3 != 0) | (F.col("_rn") <= 3))
+        .drop("_rn")
+        .write.parquet(f"{sf}/events.parquet")
+    )
+    rows = (
+        load(spark, sf, "events")
         .select(
             "event_id",
             "user_id",
@@ -3170,12 +3184,12 @@ def test_events_ewma_matches_python(spark):
                 num += evs[idx - k][2] * wgt
                 den += wgt
             want[eid] = round(num / den, 4)
-    got = {r["event_id"]: r["ewma"] for r in E.events_ewma(spark, SF_TEST).collect()}
+    got = {r["event_id"]: r["ewma"] for r in E.events_ewma(spark, sf).collect()}
     assert set(got) == set(want)
     for eid, v in want.items():
         assert abs(got[eid] - v) <= 1e-4, eid
     # the fixture must exercise both partial leading windows and full ones
-    assert any(len(evs) < E.EWMA_K for evs in series.values()) or True
+    assert any(len(evs) < E.EWMA_K for evs in series.values())
     assert any(len(evs) >= E.EWMA_K for evs in series.values())
 
 
