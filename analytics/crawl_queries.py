@@ -23,7 +23,7 @@ from analytics.common import load
 from engine import seen as seenmod
 from engine.canonicalize import canonicalize_udf, with_url_keys
 from engine.fetch import fetch_parse
-from engine.frontier import merge_frontier, pop_frontier
+from engine.frontier import apply_updates, pop_frontier
 from engine.robots import robots_gate
 from engine.seed import seeds_to_frontier
 from engine.synthgraph import TINY, gen_seed_urls
@@ -136,7 +136,8 @@ def frontier_pop(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def frontier_merge(spark: SparkSession, sf: str) -> DataFrame:
-    """F7: upsert semantics of engine.frontier.merge_frontier vs plain SQL."""
+    """F7: upsert semantics of engine.frontier.apply_updates (the engine's
+    merge of touched cells) plus the insert union, vs plain SQL."""
     f0 = _synth_frontier(spark, sf).drop("k")
     frontier = (
         f0.where(F.pmod("url_hash", F.lit(3)) != 0)
@@ -157,7 +158,8 @@ def frontier_merge(spark: SparkSession, sf: str) -> DataFrame:
         .withColumn("status", F.lit("pending"))
         .withColumn("retries", F.lit(0).cast("int"))
     )
-    merged = merge_frontier(frontier, updates, inserts)
+    merged = apply_updates(frontier, updates)
+    merged = merged.unionByName(inserts.select(*merged.columns))
     return merged.select(
         "url_hash", "status", "retries", F.round("priority", 4).alias("prio")
     )

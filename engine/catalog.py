@@ -24,9 +24,8 @@ Table kinds:
     insert dirs and compacted past ``max_cell_dirs``), and one cell per
     terminal status that gains one leaf dir per epoch and is never
     rewritten (see the cell notes below).  At production scale this is an
-    Iceberg ``MERGE INTO`` that rewrites only matched partitions —
-    :func:`iceberg_merge_frontier_sql` carries that exact statement for
-    the jar-enabled path (SURVEY.md §2.2 SC6).
+    Iceberg ``MERGE INTO`` that rewrites only matched partitions
+    (SURVEY.md §2.2 SC6).
   * append tables (``documents``, ``crawl_log``, ``lineage``,
     ``metrics``): each epoch appends a new directory; a read unions all
     committed epochs' directories (parquet append sink, SC4).
@@ -195,30 +194,3 @@ class SnapshotCatalog:
         if not paths:
             return None
         return self.spark.read.parquet(*paths)
-
-
-def iceberg_merge_frontier_sql(updates_view: str = "epoch_updates", inserts_view: str = "epoch_inserts") -> list[str]:
-    """Production-path Iceberg statements for the F7 frontier merge (SC6).
-
-    Not executable in this sandbox (no iceberg-spark-runtime jar,
-    SURVEY.md §0.3); kept as the exact SQL the jar-enabled deployment runs,
-    unit-tested for shape in tests/test_catalog.py.  With the frontier
-    Iceberg table partitioned by (status, bucket(N, host_bucket)),
-    MERGE INTO rewrites only the data files whose partitions contain
-    matched url_hash keys — the scan prunes on the runtime filter of the
-    source's url_hash set, so the epoch touches O(delta) not O(frontier).
-    """
-    merge = f"""
-MERGE INTO crawl.frontier t
-USING {updates_view} u
-ON t.url_hash = u.url_hash
-WHEN MATCHED THEN UPDATE SET
-  t.status = u.status, t.retries = u.retries, t.priority = u.priority
-""".strip()
-    insert = f"""
-MERGE INTO crawl.frontier t
-USING {inserts_view} s
-ON t.url_hash = s.url_hash
-WHEN NOT MATCHED THEN INSERT *
-""".strip()
-    return [merge, insert]

@@ -49,7 +49,7 @@ from engine import seen as seenmod
 from engine.canonicalize import path_expr
 from engine.catalog import SnapshotCatalog
 from engine.fetch import fetch_parse
-from engine.frontier import pop_frontier, retry_transition
+from engine.frontier import apply_updates, pop_frontier, retry_transition
 from engine.lineage import write_lineage_parquet, write_metrics_parquet
 from engine.parse import extract_candidates
 from engine.robots import fetch_robots, robots_gate
@@ -79,7 +79,6 @@ class CrawlEngine:
         filter_nbits: int = seenmod.DEFAULT_NBITS,
         filter_nhash: int = seenmod.DEFAULT_NHASH,
         use_robots: bool = True,
-        use_seen_filter: bool = True,
         default_k: int = 1,
         bench_budget: int | None = None,
         filter_kind: str = "bloom",
@@ -93,7 +92,6 @@ class CrawlEngine:
         self.filter_nbits = filter_nbits
         self.filter_nhash = filter_nhash
         self.use_robots = use_robots
-        self.use_seen_filter = use_seen_filter
         self.default_k = default_k
         self.bench_budget = bench_budget
         self.filter_kind = filter_kind
@@ -146,26 +144,24 @@ class CrawlEngine:
             self._write(self.spark.createDataFrame([], ROBOTS_RULES), rob_path)
 
         n_frontier = frontier.count()
-        snapshots = {
-            "frontier": {"rows": n_frontier, "parts": parts0},
-            "politeness_budgets": {"path": bud_path, "rows": budgets.count()},
-            "robots_rules": {"paths": [rob_path], "rows": n_rules},
-        }
-        if self.use_seen_filter:
-            blobs = seenmod.init_filter(
-                self.spark,
-                frontier.select("url_hash"),
-                self.n_filter_parts,
-                self.filter_nbits,
-                self.filter_nhash,
-                kind=self.filter_kind,
-            )
-            sf_path = cat.stage_path(0, "seen_filter")
-            self._write(blobs, sf_path)
-            snapshots["seen_filter"] = {"path": sf_path, "rows": self.n_filter_parts}
+        blobs = seenmod.init_filter(
+            self.spark,
+            frontier.select("url_hash"),
+            self.n_filter_parts,
+            self.filter_nbits,
+            self.filter_nhash,
+            kind=self.filter_kind,
+        )
+        sf_path = cat.stage_path(0, "seen_filter")
+        self._write(blobs, sf_path)
         cat.commit(
             0,
-            snapshots,
+            {
+                "frontier": {"rows": n_frontier, "parts": parts0},
+                "politeness_budgets": {"path": bud_path, "rows": budgets.count()},
+                "robots_rules": {"paths": [rob_path], "rows": n_rules},
+                "seen_filter": {"path": sf_path, "rows": self.n_filter_parts},
+            },
             appends={},
             meta={
                 "cfg": repr(self.cfg),
@@ -271,268 +267,246 @@ class CrawlEngine:
             gated = robots_gate(pending.withColumn("path", path_expr()), robots).drop("path")
         else:
             gated = pending.withColumn("allowed", F.lit(True))
-        gated = gated.persist()
-        _mark("gate_build")
-        disallowed = gated.where(~F.col("allowed"))
-        eligible = gated.where(F.col("allowed"))
-
-        # --- politeness k + F5 pop ---
-        # effective k = logical budget ∧ delay cap: a host with
-        # min_delay_s = d > 0 fits only floor(epoch_window_s/d)+1 fetches
-        # in the epoch's logical window (same rule as pyref/oracle.py and
-        # synthgraph.delay_cap — floor division on doubles in both).
-        delay_cap_expr = F.when(
-            F.col("min_delay_s") > 0,
-            (F.floor(F.lit(cfg.epoch_window_s) / F.col("min_delay_s")) + 1).cast("int"),
-        ).otherwise(F.lit((1 << 31) - 1))
-        elig_k = (
-            eligible.join(
-                F.broadcast(
-                    budgets.select(
-                        "host",
-                        F.col("max_fetches_per_epoch").alias("k"),
-                        "min_delay_s",
-                    )
-                ),
-                "host",
-                "left",
-            )
-            .fillna({"k": self.default_k, "min_delay_s": 0.0})
-            .withColumn("k", F.least(F.col("k"), delay_cap_expr))
-        )
-        popped = pop_frontier(elig_k, self.salt).persist()
-        # Materialize each persisted stage ONCE, in dependency order, before
-        # anything downstream references it from multiple branches.  Without
-        # this, the first write action recomputes the whole lazy chain
-        # (pandas-UDF fetch included) once per branch — measured 98s vs 5s
-        # for the frontier write at 8k pops.  The counts double as metrics;
-        # popped/gated caches are populated by the fetch-stats job below.
-        crawl_log = popped.select(
-            F.lit(epoch).cast("int").alias("epoch"),
-            "host",
-            "fetch_seq_in_host",
-            "url",
-            "url_hash",
-        )
-        # the pool opens BEFORE the fetch write so the (cheap) crawl_log
-        # write overlaps it: both consume the popped cache, whose block
-        # locks make the first job compute each partition and the other
-        # reuse it — one fewer job serialized into the epoch tail
+        # the pool of overlapped writes and every cache are released whether
+        # or not the epoch commits: a failed epoch leaves no writer running
+        # into its staging dirs and no persisted frame behind
         pool = ThreadPoolExecutor(max_workers=10)
-        crawl_log_path = cat.stage_path(epoch, "crawl_log")
-        fut_crawl_log = pool.submit(_timed("crawl_log", self._write, crawl_log, crawl_log_path))
-
-        # --- F6/X1/X2 ---
-        # Materialize the fetch output ONCE as a staged parquet table
-        # instead of a DISK_ONLY cache.  Rationale (the 100 TB shape): a
-        # cached row is monolithic — every downstream consumer (stats agg,
-        # candidate extraction, retry transition, lineage) deserializes the
-        # spans payload it never uses — whereas a parquet scan prunes to
-        # the columns each consumer reads.  The fat spans column is written
-        # exactly once (Python → Arrow → parquet) and never read again this
-        # epoch: the committed ``documents`` append IS the ok=1 cells of
-        # this directory (zero-copy publish; extra engine columns on the
-        # documents table are allowed, SURVEY.md §1.2).  ``okp`` is an int
-        # partition column (hive partition inference has no boolean type),
-        # so the failed-row consumers prune to the tiny okp=0 cells.
-        bucket_of_host = F.pmod(F.xxhash64("host"), F.lit(self.n_buckets)).cast("int")
-        fetched_dir = cat.stage_path(epoch, "fetched")
-        self._write(
-            fetch_parse(popped, cfg)
-            .withColumn("okp", F.col("ok").cast("int"))
-            .withColumn("doc_id", F.col("url"))
-            .withColumn("epoch", F.lit(epoch).cast("int"))
-            .withColumn(
-                "n_outlinks", F.coalesce(F.size("outlinks"), F.lit(0)).cast("int")
-            )
-            .withColumn("host_bucket", bucket_of_host),
-            fetched_dir,
-            partition_cols=["okp"],
-        )
-        fetched = spark.read.schema(FETCHED_STAGED).parquet(fetched_dir)
-        retryable = (~F.col("ok")) & (F.col("retries") + 1 < F.lit(cfg.max_retries))
-        _mark("fetch_write")
-
-        # --- everything after the fetch write overlaps on one pool ---
-        # Every remaining epoch output derives only from materialized state
-        # (the gated/popped caches the fetch write populated, the staged
-        # fetched parquet, or the flagged cache below), so the stat jobs and
-        # write jobs are mutually independent and run concurrently.  This
-        # overlaps per-job driver latency (Catalyst analysis, scheduling,
-        # file-commit protocol) that otherwise serializes ~8 jobs per epoch
-        # — the constant cost that caps N->4N scaling efficiency on fast
-        # epochs.  Atomicity is untouched: nothing is visible until the
-        # manifest rename below, and a failure in ANY job aborts the epoch
-        # before commit (futures re-raise at the gather).
-        # fetch metrics + popped host_bucket set: one job over slim int
-        # columns of the staged parquet (spans never deserialized)
-        fut_fetch_stats = pool.submit(_timed(
-            "fetch_stats",
-            lambda: fetched.agg(
-                F.count(F.when(F.col("ok"), 1)).alias("n_ok"),
-                F.count(F.when(~F.col("ok"), 1)).alias("n_fail"),
-                F.count(F.when(retryable, 1)).alias("n_retry_pending"),
-                F.coalesce(
-                    F.sum(F.when(F.col("ok"), F.col("n_outlinks"))), F.lit(0)
-                ).alias("links"),
-                F.collect_set("host_bucket").alias("bks"),
-            ).collect()[0],
-        ))
-        fut_dis = pool.submit(_timed(
-            "dis_stats",
-            lambda: disallowed.agg(
-                F.count("*").alias("n"), F.collect_set("host_bucket").alias("bks")
-            ).collect()[0],
-        ))
-
-        # --- D1/D2 ---
-        cands = extract_candidates(
-            fetched.where(F.col("okp") == 1), cfg, self.n_buckets
-        )
-        frontier_keys = frontier.select("url_hash")
-        if self.use_seen_filter:
-            seen = cat.read_snapshot("seen_filter", schema=SEEN_FILTER)
-            # slim strategy: Arrow-crosses 16 bytes/candidate (hash only)
-            # instead of the full URL-carrying row, and its url_hash
-            # join-back exchange is the same one flag_new needs.  The
-            # 'broadcast' JVM strategy is measurably WORSE at the default
-            # blob size (engine/seen.py probe_filter docstring) — kept for
-            # small-blob configs only.
-            probed = seenmod.probe_filter(
-                cands, seen, self.n_filter_parts, strategy="slim", key_unique=True
-            )
-            flagged = seenmod.flag_new(probed, frontier_keys).persist()
-        else:
-            seen = None
-            # dropDuplicates for the same duplicate-immunity as
-            # seen.flag_new (left join ≡ left_anti only under key-unique
-            # marker; the dedup reuses the join's url_hash exchange)
-            marker = frontier_keys.dropDuplicates().withColumn("_seen", F.lit(True))
-            flagged = (
-                cands.join(marker, "url_hash", "left")
-                .withColumn("is_new", F.col("_seen").isNull())
-                .drop("_seen")
-                .persist()
-            )
-        # candidate + insert counts ride the insert write as observation
-        # metrics (CollectMetrics above the is_new filter) instead of a
-        # dedicated agg job — one fewer full pass over the flagged cache
-        # in the epoch tail.  ``Observation.get`` is resolved at the
-        # gather, after the write job (or the seen-filter update, which
-        # executes the same subtree) has fired it.
-        ins_obs = Observation(f"ins_stats_e{epoch}")
-        cols = [f.name for f in FRONTIER.fields]
-        inserts = flagged.observe(
-            ins_obs,
-            F.count(F.lit(1)).alias("n_cands"),
-            F.count(F.when(F.col("is_new"), 1)).alias("n"),
-        ).where("is_new").select(
-            "url_hash",
-            "url",
-            "host",
-            "host_bucket",
-            "depth",
-            F.col("depth").cast("double").alias("priority"),
-            F.lit(epoch).cast("int").alias("discovered_epoch"),
-            F.lit("pending").alias("status"),
-            F.lit(0).cast("int").alias("retries"),
-            "parent_hash",
-        )
-        fr_dir = cat.stage_path(epoch, "frontier")
-        # F7 inserts: written as APPENDED per-bucket dirs under their
-        # pending cells — a pending cell whose rows were not popped or
-        # disallowed this epoch is never read OR rewritten for an insert
-        # (true O(delta): the r02 form still rewrote insert-only cells).
-        # Fragmentation is bounded by _compact_cells below.
-        fut_insert_cells = pool.submit(_timed(
-            "insert_cells",
-            self._write_cells,
-            inserts.select(*cols),
-            os.path.join(fr_dir, "inserts"),
-        ))
-
-        # --- D3 filter update ---
-        def write_seen() -> str:
-            new_blobs = seenmod.update_filter(
-                seen, inserts.select("url_hash"), self.n_filter_parts, epoch
-            )
-            sf_path = cat.stage_path(epoch, "seen_filter")
-            self._write(new_blobs, sf_path)
-            return sf_path
-
-        fut_seen = pool.submit(_timed("seen", write_seen)) if self.use_seen_filter else None
-
-        # --- R1 for NEXT epoch's gate: rules for hosts first discovered by
-        # this epoch's inserts, committed with this epoch (the
-        # robots_complete invariant) ---
-        def robots_delta() -> tuple[int | None, list[str] | None]:
-            if not self.use_robots:
-                return prev_robots_rows, None
-            new_hosts = (
-                flagged.where("is_new")
-                .select("host")
-                .distinct()
-                .join(robots.select("host").distinct(), "host", "left_anti")
-            )
-            delta = fetch_robots(new_hosts, cfg, epoch).persist()
-            n = delta.count()
-            if not n:
-                delta.unpersist()
-                return prev_robots_rows, None
-            dpath = os.path.join(cat.stage_path(epoch, "robots_rules"), "delta")
-            self._write(delta, dpath)
-            delta.unpersist()
-            paths = robots_paths + [dpath]
-            if len(paths) > self.max_cell_dirs:
-                cpath = os.path.join(cat.stage_path(epoch, "robots_rules"), "compact")
-                self._write(spark.read.schema(ROBOTS_RULES).parquet(*paths), cpath)
-                paths = [cpath]
-            return prev_robots_rows + n, paths
-
-        fut_robots = pool.submit(_timed("robots_delta", robots_delta))
-
-        # --- F7 merge of TOUCHED pending cells (cell-granular, O(delta)) ---
-        # Only pending cells holding popped/disallowed rows are rewritten;
-        # rows leaving 'pending' go to ONE new immutable dir per terminal
-        # status, appended to that status's cell and never rewritten — the
-        # manifest-level analogue of Iceberg MERGE INTO's add/remove-file
-        # commit (engine/catalog.py cell notes).  Runs on the pool too: it
-        # needs only the two stat futures above, so it overlaps the
-        # probe/flag chain and every other write.
-        updates = retry_transition(fetched, cfg.max_retries).unionByName(
-            disallowed.select(
-                "url_hash",
-                F.lit("disallowed").alias("new_status"),
-                F.col("retries").alias("new_retries"),
-                F.lit(None).cast("double").alias("new_priority"),
-            )
-        )
-
-        def write_merged() -> tuple[set[str], dict]:
-            st, ds = fut_fetch_stats.result(), fut_dis.result()
-            touched = set(
-                b for b in set(st["bks"]) | set(ds["bks"]) if b is not None
-            )
-            pending_src = cat.read_parts(
-                parts, status="pending", buckets=touched, schema=FRONTIER
-            )
-            if pending_src is None:
-                pending_src = spark.createDataFrame([], FRONTIER)
-            merged = (
-                pending_src.select(*cols)
-                .join(updates, "url_hash", "left")
-                .withColumn("status", F.coalesce(F.col("new_status"), F.col("status")))
-                .withColumn("retries", F.coalesce(F.col("new_retries"), F.col("retries")))
-                .withColumn("priority", F.coalesce(F.col("new_priority"), F.col("priority")))
-                .drop("new_status", "new_retries", "new_priority")
-            )
-            rewritten = {cat.cell_key("pending", b) for b in touched}
-            return rewritten, self._write_cells(merged, os.path.join(fr_dir, "cells"))
-
-        fut_merged = pool.submit(_timed("merged", write_merged))
-
-        # --- gather (any failure aborts before commit) ---
+        gated = gated.persist()
+        popped = flagged = None
         try:
+            _mark("gate_build")
+            disallowed = gated.where(~F.col("allowed"))
+            eligible = gated.where(F.col("allowed"))
+
+            # --- politeness k + F5 pop ---
+            # effective k = logical budget ∧ delay cap: a host with
+            # min_delay_s = d > 0 fits only floor(epoch_window_s/d)+1 fetches
+            # in the epoch's logical window (same rule as pyref/oracle.py and
+            # synthgraph.delay_cap — floor division on doubles in both).
+            delay_cap_expr = F.when(
+                F.col("min_delay_s") > 0,
+                (F.floor(F.lit(cfg.epoch_window_s) / F.col("min_delay_s")) + 1).cast("int"),
+            ).otherwise(F.lit((1 << 31) - 1))
+            elig_k = (
+                eligible.join(
+                    F.broadcast(
+                        budgets.select(
+                            "host",
+                            F.col("max_fetches_per_epoch").alias("k"),
+                            "min_delay_s",
+                        )
+                    ),
+                    "host",
+                    "left",
+                )
+                .fillna({"k": self.default_k, "min_delay_s": 0.0})
+                .withColumn("k", F.least(F.col("k"), delay_cap_expr))
+            )
+            popped = pop_frontier(elig_k, self.salt).persist()
+            # Materialize each persisted stage ONCE, in dependency order, before
+            # anything downstream references it from multiple branches.  Without
+            # this, the first write action recomputes the whole lazy chain
+            # (pandas-UDF fetch included) once per branch — measured 98s vs 5s
+            # for the frontier write at 8k pops.  The counts double as metrics;
+            # popped/gated caches are populated by the fetch-stats job below.
+            crawl_log = popped.select(
+                F.lit(epoch).cast("int").alias("epoch"),
+                "host",
+                "fetch_seq_in_host",
+                "url",
+                "url_hash",
+            )
+            # the crawl_log write is submitted BEFORE the fetch write so the
+            # (cheap) write overlaps it: both consume the popped cache, whose
+            # block locks make the first job compute each partition and the
+            # other reuse it — one fewer job serialized into the epoch tail
+            crawl_log_path = cat.stage_path(epoch, "crawl_log")
+            fut_crawl_log = pool.submit(_timed("crawl_log", self._write, crawl_log, crawl_log_path))
+
+            # --- F6/X1/X2 ---
+            # Materialize the fetch output ONCE as a staged parquet table
+            # instead of a DISK_ONLY cache.  Rationale (the 100 TB shape): a
+            # cached row is monolithic — every downstream consumer (stats agg,
+            # candidate extraction, retry transition, lineage) deserializes the
+            # spans payload it never uses — whereas a parquet scan prunes to
+            # the columns each consumer reads.  The fat spans column is written
+            # exactly once (Python → Arrow → parquet) and never read again this
+            # epoch: the committed ``documents`` append IS the ok=1 cells of
+            # this directory (zero-copy publish; extra engine columns on the
+            # documents table are allowed, SURVEY.md §1.2).  ``okp`` is an int
+            # partition column (hive partition inference has no boolean type),
+            # so the failed-row consumers prune to the tiny okp=0 cells.
+            bucket_of_host = F.pmod(F.xxhash64("host"), F.lit(self.n_buckets)).cast("int")
+            fetched_dir = cat.stage_path(epoch, "fetched")
+            self._write(
+                fetch_parse(popped, cfg)
+                .withColumn("okp", F.col("ok").cast("int"))
+                .withColumn("doc_id", F.col("url"))
+                .withColumn("epoch", F.lit(epoch).cast("int"))
+                .withColumn(
+                    "n_outlinks", F.coalesce(F.size("outlinks"), F.lit(0)).cast("int")
+                )
+                .withColumn("host_bucket", bucket_of_host),
+                fetched_dir,
+                partition_cols=["okp"],
+            )
+            fetched = spark.read.schema(FETCHED_STAGED).parquet(fetched_dir)
+            retryable = (~F.col("ok")) & (F.col("retries") + 1 < F.lit(cfg.max_retries))
+            _mark("fetch_write")
+
+            # --- everything after the fetch write overlaps on one pool ---
+            # Every remaining epoch output derives only from materialized state
+            # (the gated/popped caches the fetch write populated, the staged
+            # fetched parquet, or the flagged cache below), so the stat jobs and
+            # write jobs are mutually independent and run concurrently.  This
+            # overlaps per-job driver latency (Catalyst analysis, scheduling,
+            # file-commit protocol) that otherwise serializes ~8 jobs per epoch
+            # — the constant cost that caps N->4N scaling efficiency on fast
+            # epochs.  Atomicity is untouched: nothing is visible until the
+            # manifest rename below, and a failure in ANY job aborts the epoch
+            # before commit (futures re-raise at the gather).
+            # fetch metrics + popped host_bucket set: one job over slim int
+            # columns of the staged parquet (spans never deserialized)
+            fut_fetch_stats = pool.submit(_timed(
+                "fetch_stats",
+                lambda: fetched.agg(
+                    F.count(F.when(F.col("ok"), 1)).alias("n_ok"),
+                    F.count(F.when(~F.col("ok"), 1)).alias("n_fail"),
+                    F.count(F.when(retryable, 1)).alias("n_retry_pending"),
+                    F.coalesce(
+                        F.sum(F.when(F.col("ok"), F.col("n_outlinks"))), F.lit(0)
+                    ).alias("links"),
+                    F.collect_set("host_bucket").alias("bks"),
+                ).collect()[0],
+            ))
+            fut_dis = pool.submit(_timed(
+                "dis_stats",
+                lambda: disallowed.agg(
+                    F.count("*").alias("n"), F.collect_set("host_bucket").alias("bks")
+                ).collect()[0],
+            ))
+
+            # --- D1/D2 ---
+            cands = extract_candidates(
+                fetched.where(F.col("okp") == 1), cfg, self.n_buckets
+            )
+            seen = cat.read_snapshot("seen_filter", schema=SEEN_FILTER)
+            # the probe Arrow-crosses 16 bytes/candidate (hash only), and its
+            # url_hash join-back exchange is the same one flag_new needs
+            probed = seenmod.probe_filter(cands, seen, self.n_filter_parts, key_unique=True)
+            flagged = seenmod.flag_new(probed, frontier.select("url_hash")).persist()
+            # candidate + insert counts ride the insert write as observation
+            # metrics (CollectMetrics above the is_new filter) instead of a
+            # dedicated agg job — one fewer full pass over the flagged cache
+            # in the epoch tail.  ``Observation.get`` is resolved at the
+            # gather, after the write job (or the seen-filter update, which
+            # executes the same subtree) has fired it.
+            ins_obs = Observation(f"ins_stats_e{epoch}")
+            cols = [f.name for f in FRONTIER.fields]
+            inserts = flagged.observe(
+                ins_obs,
+                F.count(F.lit(1)).alias("n_cands"),
+                F.count(F.when(F.col("is_new"), 1)).alias("n"),
+            ).where("is_new").select(
+                "url_hash",
+                "url",
+                "host",
+                "host_bucket",
+                "depth",
+                F.col("depth").cast("double").alias("priority"),
+                F.lit(epoch).cast("int").alias("discovered_epoch"),
+                F.lit("pending").alias("status"),
+                F.lit(0).cast("int").alias("retries"),
+                "parent_hash",
+            )
+            fr_dir = cat.stage_path(epoch, "frontier")
+            # F7 inserts: written as APPENDED per-bucket dirs under their
+            # pending cells — a pending cell whose rows were not popped or
+            # disallowed this epoch is never read OR rewritten for an insert
+            # (true O(delta): the r02 form still rewrote insert-only cells).
+            # Fragmentation is bounded by _compact_cells below.
+            fut_insert_cells = pool.submit(_timed(
+                "insert_cells",
+                self._write_cells,
+                inserts.select(*cols),
+                os.path.join(fr_dir, "inserts"),
+            ))
+
+            # --- D3 filter update ---
+            def write_seen() -> str:
+                new_blobs = seenmod.update_filter(
+                    seen, inserts.select("url_hash"), self.n_filter_parts, epoch
+                )
+                sf_path = cat.stage_path(epoch, "seen_filter")
+                self._write(new_blobs, sf_path)
+                return sf_path
+
+            fut_seen = pool.submit(_timed("seen", write_seen))
+
+            # --- R1 for NEXT epoch's gate: rules for hosts first discovered by
+            # this epoch's inserts, committed with this epoch (the
+            # robots_complete invariant) ---
+            def robots_delta() -> tuple[int | None, list[str] | None]:
+                if not self.use_robots:
+                    return prev_robots_rows, None
+                new_hosts = (
+                    flagged.where("is_new")
+                    .select("host")
+                    .distinct()
+                    .join(robots.select("host").distinct(), "host", "left_anti")
+                )
+                delta = fetch_robots(new_hosts, cfg, epoch).persist()
+                try:
+                    n = delta.count()
+                    if not n:
+                        return prev_robots_rows, None
+                    dpath = os.path.join(cat.stage_path(epoch, "robots_rules"), "delta")
+                    self._write(delta, dpath)
+                finally:
+                    delta.unpersist()
+                paths = robots_paths + [dpath]
+                if len(paths) > self.max_cell_dirs:
+                    cpath = os.path.join(cat.stage_path(epoch, "robots_rules"), "compact")
+                    self._write(spark.read.schema(ROBOTS_RULES).parquet(*paths), cpath)
+                    paths = [cpath]
+                return prev_robots_rows + n, paths
+
+            fut_robots = pool.submit(_timed("robots_delta", robots_delta))
+
+            # --- F7 merge of TOUCHED pending cells (cell-granular, O(delta)) ---
+            # Only pending cells holding popped/disallowed rows are rewritten;
+            # rows leaving 'pending' go to ONE new immutable dir per terminal
+            # status, appended to that status's cell and never rewritten — the
+            # manifest-level analogue of Iceberg MERGE INTO's add/remove-file
+            # commit (engine/catalog.py cell notes).  Runs on the pool too: it
+            # needs only the two stat futures above, so it overlaps the
+            # probe/flag chain and every other write.
+            updates = retry_transition(fetched, cfg.max_retries).unionByName(
+                disallowed.select(
+                    "url_hash",
+                    F.lit("disallowed").alias("new_status"),
+                    F.col("retries").alias("new_retries"),
+                    F.lit(None).cast("double").alias("new_priority"),
+                )
+            )
+
+            def write_merged() -> tuple[set[str], dict]:
+                st, ds = fut_fetch_stats.result(), fut_dis.result()
+                touched = set(
+                    b for b in set(st["bks"]) | set(ds["bks"]) if b is not None
+                )
+                pending_src = cat.read_parts(
+                    parts, status="pending", buckets=touched, schema=FRONTIER
+                )
+                if pending_src is None:
+                    pending_src = spark.createDataFrame([], FRONTIER)
+                merged = apply_updates(pending_src.select(*cols), updates)
+                rewritten = {cat.cell_key("pending", b) for b in touched}
+                return rewritten, self._write_cells(merged, os.path.join(fr_dir, "cells"))
+
+            fut_merged = pool.submit(_timed("merged", write_merged))
+
+            # --- gather (any failure aborts before commit) ---
             stats = fut_fetch_stats.result()
             dis_stats = fut_dis.result()
             rewritten, merged_cells = fut_merged.result()
@@ -540,105 +514,103 @@ class CrawlEngine:
             ins_stats = ins_obs.get  # fired by the insert_cells write job
             fut_crawl_log.result()
             n_robots_rows, new_robots_paths = fut_robots.result()
-            sf_path = fut_seen.result() if fut_seen is not None else None
+            sf_path = fut_seen.result()
+            _mark("overlap_stats_writes")
+
+            n_ok, n_fail = int(stats["n_ok"]), int(stats["n_fail"])
+            n_retry_pending, n_links = int(stats["n_retry_pending"]), int(stats["links"])
+            n_popped = n_ok + n_fail
+            n_disallowed = int(dis_stats["n"])
+            n_cands, n_new = int(ins_stats["n_cands"]), int(ins_stats["n"])
+
+            # assemble the cell map deterministically on the main thread:
+            # rewritten pending cells REPLACE their dir list, terminal dirs and
+            # insert dirs APPEND
+            new_parts = {c: list(d) for c, d in parts.items() if c not in rewritten}
+            for cells in (merged_cells, insert_cells):
+                for cell, p in cells.items():
+                    new_parts.setdefault(cell, []).append(p)
+            new_parts = self._compact_cells(new_parts, fr_dir)
+
+            # --- L1 lineage: row counts from the footers of the files this
+            # epoch wrote, read on the driver (no Spark job) ---
+            lineage_path = cat.stage_path(epoch, "lineage")
+            n_lineage = write_lineage_parquet(
+                lineage_path,
+                epoch,
+                {
+                    "pop": [crawl_log_path],
+                    "fetch_parse": [fetched_dir],
+                    "dedup_insert": list(insert_cells.values()),
+                },
+                f"epoch={epoch - 1}",
+                f"epoch={epoch}",
+            )
+
+            appends: dict = {
+                # documents needs NO job at all: the append entry points at the
+                # okp=1 cells of the already-written fetched staging dir (doc_id
+                # / spans / url / host / epoch are in the files; the extra
+                # engine columns ride along, nullable-allowed per SURVEY.md §1.2)
+                "documents": {"path": os.path.join(fetched_dir, "okp=1"), "rows": n_ok},
+                "crawl_log": {"path": crawl_log_path, "rows": n_popped},
+                "lineage": {"path": lineage_path, "rows": n_lineage},
+            }
+            snapshots: dict = {"seen_filter": {"path": sf_path, "rows": self.n_filter_parts}}
+            if new_robots_paths is not None:
+                snapshots["robots_rules"] = {"paths": new_robots_paths, "rows": n_robots_rows}
+            elif self.use_robots and robots_paths != orig_robots_paths:
+                # legacy bootstrap extended the committed dirs but no insert
+                # delta followed — still must commit the bootstrap dir
+                snapshots["robots_rules"] = {"paths": robots_paths, "rows": n_robots_rows}
+            _mark("assemble")
+
+            # --- metrics (definitions shared with pyref.oracle) ---
+            # pending_end and frontier_rows follow arithmetically from the
+            # status-transition semantics (every popped row leaves 'pending'
+            # and only retryable failures re-enter; inserts are all pending),
+            # so no post-write table scan is needed.
+            frontier_rows = prev_rows + n_new
+            pending_end = prev_pending - n_popped - n_disallowed + n_retry_pending + n_new
+            wall = time.time() - t0
+            metrics = {
+                "urls_popped": n_popped,
+                "urls_fetch_ok": n_ok,
+                "urls_fetch_fail": n_fail,
+                "docs_parsed": n_ok,
+                "outlinks_extracted": n_links,
+                "outlinks_candidates": n_cands,
+                "outlinks_new": n_new,
+                "disallowed": n_disallowed,
+                "pending_end": pending_end,
+                "wall_ms": wall * 1000.0,
+                "urls_per_sec": (n_popped / wall) if wall > 0 else 0.0,
+            }
+            # metrics are driver-resident scalars: write the parquet directly via
+            # pyarrow — zero Spark jobs, same schema as engine.schemas.METRICS
+            mpath = cat.stage_path(epoch, "metrics")
+            write_metrics_parquet(mpath, epoch, metrics)
+            appends["metrics"] = {"path": mpath, "rows": len(metrics)}
+
+            # --- K1 atomic commit ---
+            snapshots["frontier"] = {"rows": frontier_rows, "parts": new_parts}
+            cat.commit(
+                epoch,
+                snapshots,
+                appends,
+                meta={
+                    "metrics": metrics,
+                    "frontier_rows": frontier_rows,
+                    "pending": pending_end,
+                    "robots_rows": n_robots_rows,
+                    "robots_complete": self.use_robots,
+                },
+            )
         finally:
             pool.shutdown(wait=True)
-        _mark("overlap_stats_writes")
-
-        n_ok, n_fail = int(stats["n_ok"]), int(stats["n_fail"])
-        n_retry_pending, n_links = int(stats["n_retry_pending"]), int(stats["links"])
-        n_popped = n_ok + n_fail
-        n_disallowed = int(dis_stats["n"])
-        n_cands, n_new = int(ins_stats["n_cands"]), int(ins_stats["n"])
-
-        # assemble the cell map deterministically on the main thread:
-        # rewritten pending cells REPLACE their dir list, terminal dirs and
-        # insert dirs APPEND
-        new_parts = {c: list(d) for c, d in parts.items() if c not in rewritten}
-        for cells in (merged_cells, insert_cells):
-            for cell, p in cells.items():
-                new_parts.setdefault(cell, []).append(p)
-        new_parts = self._compact_cells(new_parts, fr_dir)
-
-        # --- L1 lineage: row counts from the footers of the files this
-        # epoch wrote, read on the driver (no Spark job) ---
-        lineage_path = cat.stage_path(epoch, "lineage")
-        n_lineage = write_lineage_parquet(
-            lineage_path,
-            epoch,
-            {
-                "pop": [crawl_log_path],
-                "fetch_parse": [fetched_dir],
-                "dedup_insert": list(insert_cells.values()),
-            },
-            f"epoch={epoch - 1}",
-            f"epoch={epoch}",
-        )
-
-        appends: dict = {
-            # documents needs NO job at all: the append entry points at the
-            # okp=1 cells of the already-written fetched staging dir (doc_id
-            # / spans / url / host / epoch are in the files; the extra
-            # engine columns ride along, nullable-allowed per SURVEY.md §1.2)
-            "documents": {"path": os.path.join(fetched_dir, "okp=1"), "rows": n_ok},
-            "crawl_log": {"path": crawl_log_path, "rows": n_popped},
-            "lineage": {"path": lineage_path, "rows": n_lineage},
-        }
-        snapshots: dict = {}
-        if sf_path is not None:
-            snapshots["seen_filter"] = {"path": sf_path, "rows": self.n_filter_parts}
-        if new_robots_paths is not None:
-            snapshots["robots_rules"] = {"paths": new_robots_paths, "rows": n_robots_rows}
-        elif self.use_robots and robots_paths != orig_robots_paths:
-            # legacy bootstrap extended the committed dirs but no insert
-            # delta followed — still must commit the bootstrap dir
-            snapshots["robots_rules"] = {"paths": robots_paths, "rows": n_robots_rows}
-        _mark("assemble")
-
-        # --- metrics (definitions shared with pyref.oracle) ---
-        # pending_end and frontier_rows follow arithmetically from the
-        # status-transition semantics (every popped row leaves 'pending'
-        # and only retryable failures re-enter; inserts are all pending),
-        # so no post-write table scan is needed.
-        frontier_rows = prev_rows + n_new
-        pending_end = prev_pending - n_popped - n_disallowed + n_retry_pending + n_new
-        wall = time.time() - t0
-        metrics = {
-            "urls_popped": n_popped,
-            "urls_fetch_ok": n_ok,
-            "urls_fetch_fail": n_fail,
-            "docs_parsed": n_ok,
-            "outlinks_extracted": n_links,
-            "outlinks_candidates": n_cands,
-            "outlinks_new": n_new,
-            "disallowed": n_disallowed,
-            "pending_end": pending_end,
-            "wall_ms": wall * 1000.0,
-            "urls_per_sec": (n_popped / wall) if wall > 0 else 0.0,
-        }
-        # metrics are driver-resident scalars: write the parquet directly via
-        # pyarrow — zero Spark jobs, same schema as engine.schemas.METRICS
-        mpath = cat.stage_path(epoch, "metrics")
-        write_metrics_parquet(mpath, epoch, metrics)
-        appends["metrics"] = {"path": mpath, "rows": len(metrics)}
-
-        # --- K1 atomic commit ---
-        snapshots["frontier"] = {"rows": frontier_rows, "parts": new_parts}
-        cat.commit(
-            epoch,
-            snapshots,
-            appends,
-            meta={
-                "metrics": metrics,
-                "frontier_rows": frontier_rows,
-                "pending": pending_end,
-                "robots_rows": n_robots_rows,
-                "robots_complete": self.use_robots,
-            },
-        )
-
-        for df in (gated, popped, flagged):
-            df.unpersist()
+            for df in (gated, popped, flagged):
+                if df is not None:
+                    df.unpersist()
         _mark("commit")
         if os.environ.get("SPARK_GRAFT_EPOCH_TIMING"):
             import json as _json

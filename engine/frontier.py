@@ -1,4 +1,4 @@
-"""Frontier operators: P1 priority, F5 salted window-rank pop, F7 merge, Q1 retry.
+"""Frontier operators: F5 salted window-rank pop, F7 update apply, Q1 retry + P1 priority.
 
 F5 is the heart of the engine (BASELINE.json:6 "depth/priority-ordered
 frontier pop … salted window-rank over hash-partitioned host groups to
@@ -28,13 +28,6 @@ POP_ORDER = ("priority", "depth", "url_hash")
 STATUSES = ("pending", "done", "failed", "disallowed")
 
 
-def priority_expr(depth_col="depth", retries_col="retries"):
-    """P1: monotone in depth (parents before deeper children); retry penalty
-    of 0.5/attempt is exact in binary floating point, so the engine and the
-    pyref oracle order identically (no libm in the ordering key)."""
-    return F.col(depth_col).cast("double") + 0.5 * F.col(retries_col).cast("double")
-
-
 def pop_frontier(eligible: DataFrame, salt: int) -> DataFrame:
     """F5: per-host top-k pop; ``eligible`` must carry a per-host ``k`` column.
 
@@ -58,30 +51,23 @@ def pop_frontier(eligible: DataFrame, salt: int) -> DataFrame:
     )
 
 
-def merge_frontier(frontier: DataFrame, updates: DataFrame, inserts: DataFrame) -> DataFrame:
-    """F7: apply status transitions + insert new pending rows (exactly once).
+def apply_updates(frontier: DataFrame, updates: DataFrame) -> DataFrame:
+    """F7: apply this epoch's status transitions to frontier rows.
 
     ``updates``: (url_hash, new_status, new_retries, new_priority) for rows
-    popped or disallowed this epoch.  ``inserts``: full-schema new rows.
-    Sandbox realization of the Iceberg ``MERGE INTO`` in
-    engine/catalog.py:iceberg_merge_frontier_sql — a left join + coalesce
-    producing the next immutable snapshot (SC5), written partitioned by
-    status so the next epoch's pending scan partition-prunes (O5).
+    popped or disallowed this epoch.  A left join + coalesce, so rows with
+    no update pass through unchanged; the engine writes the result as the
+    touched cells of the next immutable snapshot (SC5), and the insert
+    union of a full MERGE is the caller's (the engine appends insert dirs
+    instead of rewriting cells).
     """
-    upd = updates.select(
-        "url_hash",
-        F.col("new_status"),
-        F.col("new_retries"),
-        F.col("new_priority"),
-    )
-    merged = (
-        frontier.join(upd, "url_hash", "left")
+    return (
+        frontier.join(updates, "url_hash", "left")
         .withColumn("status", F.coalesce(F.col("new_status"), F.col("status")))
         .withColumn("retries", F.coalesce(F.col("new_retries"), F.col("retries")))
         .withColumn("priority", F.coalesce(F.col("new_priority"), F.col("priority")))
         .drop("new_status", "new_retries", "new_priority")
     )
-    return merged.unionByName(inserts.select(*merged.columns))
 
 
 def retry_transition(fetched: DataFrame, max_retries: int) -> DataFrame:
@@ -92,6 +78,8 @@ def retry_transition(fetched: DataFrame, max_retries: int) -> DataFrame:
         .when(new_retries >= F.lit(max_retries), F.lit("failed"))
         .otherwise(F.lit("pending"))
     )
+    # P1 priority: depth plus 0.5 per retry.  0.5 per retry is exact in
+    # binary floating point, so engine and pyref order identically.
     new_priority = F.when(
         ~F.col("ok") & (new_retries < F.lit(max_retries)),
         F.col("depth").cast("double") + 0.5 * new_retries.cast("double"),

@@ -53,14 +53,6 @@ def fetch_robots(missing_hosts: DataFrame, cfg: GraphConfig, epoch: int) -> Data
     return missing_hosts.select("host").mapInPandas(gen, ROBOTS_RULES)
 
 
-def ensure_robots(pending: DataFrame, robots: DataFrame, cfg: GraphConfig, epoch: int) -> DataFrame:
-    """R1 driver: robots ∪ rules for hosts the frontier needs but lacks."""
-    missing = pending.select("host").distinct().join(
-        robots.select("host").distinct(), "host", "left_anti"
-    )
-    return robots.unionByName(fetch_robots(missing, cfg, epoch))
-
-
 def robots_gate(pending: DataFrame, robots: DataFrame) -> DataFrame:
     """R2: adds boolean ``allowed``; requires a ``path`` column on pending."""
     rules_arr = robots.groupBy("host").agg(

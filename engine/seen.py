@@ -6,7 +6,9 @@ per ``part_id = pmod(url_hash, N_FILTER_PARTS)`` partition, stored as a
 binary column row (SURVEY.md §1.2 seen_filter).  Probe (D1) and update (D3)
 are cogrouped ``applyInPandas`` (UD4) with numpy-vectorized k-hash bit ops —
 no per-row Python (BASELINE.json:6 "per-partition membership via
-Arrow-batched pandas UDFs").
+Arrow-batched pandas UDFs").  The probe has one physical path: only the
+candidates' (part_id, url_hash) pairs cross Arrow, and the verdict joins
+back on url_hash (:func:`probe_filter`).
 
 Exactness guarantee: the filter only *routes* — candidates it has definitely
 never seen skip the expensive anti-join against the full frontier key set;
@@ -18,8 +20,8 @@ At 10^10-URL scale this is the shuffle cut that matters: the frontier key
 set is ~80 GB of url_hash; the anti-join only ever shuffles the (small)
 maybe-seen fraction of each epoch's discoveries, while the blobs
 (N_FILTER_PARTS × nbits/8 bytes) stay partition-aligned with the candidate
-stream — the cogroup shuffles candidates by part_id (1 shuffle) and blobs
-(tiny) only.
+stream — the cogroup shuffles candidate hashes by part_id (1 shuffle) and
+blobs (tiny) only.
 """
 
 from __future__ import annotations
@@ -160,50 +162,28 @@ def probe_filter(
     candidates: DataFrame,
     blobs: DataFrame,
     n_parts: int,
-    strategy: str = "slim",
     key_unique: bool = False,
 ) -> DataFrame:
-    """D1: adds ``maybe_seen`` to candidates.  Three physical strategies,
-    same result rows:
+    """D1: adds ``maybe_seen`` to candidates.
 
-    - ``broadcast`` — bloom-only JVM fast path: blobs are unpacked once
-      into int64 word arrays (one tiny Arrow pass over n_parts rows),
-      broadcast-joined on part_id, and the k-hash bit probes run as
-      shift/mask expressions inside WholeStageCodegen.  Zero shuffle of
-      the candidate stream and zero per-candidate Python — but MEASURED
-      SLOWER than ``slim`` at the default blob size: the broadcast join's
-      output row materializes the matched build-side row, so every
-      candidate row drags a copy of its part's nbits/8-byte word array
-      (512 KiB × 672 k candidates ≈ 340 GB of row copying; 78 s vs 7 s
-      at local[8]).  Only profitable when per-part blobs are a few KiB
-      (many small parts); the engine therefore uses ``slim``.
-    - ``slim`` (default) — the 100 TB path: only (part_id, url_hash)
-      crosses Arrow into the cogrouped numpy probe (16 bytes/row instead
-      of the full URL-carrying candidate row), and the verdict joins back
-      on url_hash.  The join-back shuffle replaces the cogroup's
-      candidate shuffle one-for-one, and downstream D2 (flag_new) joins
-      on the same url_hash key, so AQE reuses the exchange — net effect
-      vs ``cogroup`` is strictly less Arrow traffic at equal shuffles.
-    - ``cogroup`` — the r01 form (full candidate rows through the
-      cogroup); kept as the reference implementation and for
-      mixed-kind/odd-schema callers.  Strategy equality is pinned by
-      tests/test_units.py::test_probe_strategies_agree.
+    Only (part_id, url_hash) crosses Arrow into the cogrouped numpy probe
+    (16 bytes/row instead of the full URL-carrying candidate row), and the
+    verdict joins back on url_hash.  The join-back shuffle replaces a
+    full-row cogroup's candidate shuffle one-for-one, and downstream D2
+    (flag_new) joins on the same url_hash key, so AQE reuses the exchange.
+
+    ``key_unique``: the caller guarantees one row per url_hash (the
+    engine's candidates come out of extract_candidates' groupBy), so the
+    dedup pass, needed only so the left join-back cannot multiply rows, is
+    skipped.
     """
-    if strategy == "broadcast":
-        return _probe_broadcast(candidates, blobs, n_parts)
-    if strategy == "slim":
-        # key_unique: the caller guarantees one row per url_hash (the
-        # engine's candidates come out of extract_candidates' groupBy), so
-        # the dedup pass — needed only so the left join-back cannot
-        # multiply rows — is skipped entirely.
-        slim = with_part_id(candidates.select("url_hash"), n_parts)
-        if not key_unique:
-            slim = slim.dropDuplicates(["url_hash"])
-        verdict = _probe_cogroup(slim, blobs).drop("part_id")
-        return with_part_id(candidates, n_parts).join(verdict, "url_hash", "left").fillna(
-            {"maybe_seen": False}
-        )
-    return _probe_cogroup(with_part_id(candidates, n_parts), blobs)
+    slim = with_part_id(candidates.select("url_hash"), n_parts)
+    if not key_unique:
+        slim = slim.dropDuplicates(["url_hash"])
+    verdict = _probe_cogroup(slim, blobs).drop("part_id")
+    return with_part_id(candidates, n_parts).join(verdict, "url_hash", "left").fillna(
+        {"maybe_seen": False}
+    )
 
 
 def _probe_cogroup(cands: DataFrame, blobs: DataFrame) -> DataFrame:
@@ -233,73 +213,6 @@ def _probe_cogroup(cands: DataFrame, blobs: DataFrame) -> DataFrame:
         .cogroup(blobs.groupBy("part_id"))
         .applyInPandas(probe, out_schema)
     )
-
-
-def _probe_broadcast(candidates: DataFrame, blobs: DataFrame, n_parts: int) -> DataFrame:
-    """Bloom probe as pure JVM bit arithmetic against broadcast word arrays.
-
-    Bit-position parity with the numpy ``_positions``/``_probe_bits`` pair
-    (pinned by tests/test_units.py::test_probe_strategies_agree):
-    ``nbits`` is asserted a power of two, so the uint64 mods reduce to
-    bitwise ANDs that signed int64 arithmetic computes identically, and
-    ``shiftrightunsigned`` matches the uint64 logical shift.  Blob bytes
-    are viewed as little-endian int64 words, so bit p of the byte array is
-    bit (p & 63) of word (p >> 6).
-    """
-    from pyspark.sql.types import ArrayType, IntegerType, LongType
-
-    words_schema = StructType(
-        [
-            StructField("part_id", IntegerType()),
-            StructField("nbits", LongType()),
-            StructField("nhash", IntegerType()),
-            StructField("words", ArrayType(LongType())),
-        ]
-    )
-
-    def unpack(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                assert r["kind"] == "bloom", "broadcast probe is bloom-only"
-                nbits = int(r["nbits"])
-                assert nbits & (nbits - 1) == 0, "broadcast probe needs pow2 nbits"
-                assert int(r["nhash"]) <= _MAX_NHASH, "unrolled probe caps nhash"
-                rows.append(
-                    (
-                        int(r["part_id"]),
-                        nbits,
-                        int(r["nhash"]),
-                        np.frombuffer(r["bits"], dtype="<i8").tolist(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["part_id", "nbits", "nhash", "words"])
-
-    words = blobs.mapInPandas(unpack, words_schema)
-    cands = with_part_id(candidates, n_parts)
-    joined = cands.join(F.broadcast(words), "part_id", "left")
-    mask = F.col("nbits") - F.lit(1)
-    h1 = F.col("url_hash").bitwiseAND(mask)
-    h2 = F.expr("shiftrightunsigned(url_hash, 31)").bitwiseOR(F.lit(1)).bitwiseAND(mask)
-    joined = joined.withColumn("_h1", h1).withColumn("_h2", h2)
-    # unrolled AND over the k probes: every term is ordinary long
-    # arithmetic + element_at — WholeStageCodegen end to end.  nhash is
-    # data, not schema: unroll to the max supported k and guard each term
-    # with i < nhash (a constant-folded comparison per row group).
-    bit_ok = F.lit(True)
-    for i in range(_MAX_NHASH):
-        term = F.expr(
-            f"(shiftrightunsigned(element_at(words, cast(shiftright(((_h1 + {i} * _h2) & (nbits - 1)), 6) as int) + 1), "
-            f"cast(((_h1 + {i} * _h2) & 63) as int)) & 1) = 1"
-        )
-        bit_ok = bit_ok & F.when(F.lit(i) < F.col("nhash"), term).otherwise(F.lit(True))
-    probedcol = F.when(F.col("words").isNull(), F.lit(False)).otherwise(bit_ok)
-    return joined.withColumn("maybe_seen", probedcol).drop(
-        "nbits", "nhash", "words", "_h1", "_h2"
-    )
-
-
-_MAX_NHASH = 8
 
 
 def update_filter(blobs: DataFrame, new_hashes: DataFrame, n_parts: int, epoch: int) -> DataFrame:

@@ -3,10 +3,13 @@ parity on the flaky graph — run on a reduced graph to keep the suite fast."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
+import engine.crawl as crawlmod
 from engine.crawl import CrawlEngine
 from engine.synthgraph import GraphConfig, gen_seed_urls
 from pyref.oracle import run_crawl as oracle_run
@@ -44,6 +47,45 @@ def test_resume_equals_uninterrupted(spark, tmp_path):
     eng_b2 = CrawlEngine(spark, str(tmp_path / "b"), SMALL, n_filter_parts=4, salt=4)
     eng_b2.run(3, seeds=seeds, resume=True)
     assert _final_state(eng_a) == _final_state(eng_b2)
+
+
+@pytest.fixture(scope="module")
+def two_epoch_state(spark, tmp_path_factory):
+    eng = CrawlEngine(spark, str(tmp_path_factory.mktemp("ref")), SMALL, n_filter_parts=4, salt=4)
+    eng.run(2, seeds=gen_seed_urls(SMALL))
+    return _final_state(eng)
+
+
+@pytest.mark.parametrize("point", ["fetch_parse", "write_lineage_parquet"])
+def test_failed_epoch_leaves_no_writer_or_cache(
+    spark, tmp_path, monkeypatch, two_epoch_state, point
+):
+    """A raise in epoch 2, before the gather while the pool's crawl_log
+    write is live (``fetch_parse``) or after it (``write_lineage_parquet``),
+    keeps epoch 1 committed, leaves no write running and no cache
+    persisted, and a same-session retry of the epoch reaches the
+    uninterrupted run's state."""
+    eng = CrawlEngine(spark, str(tmp_path / "f"), SMALL, n_filter_parts=4, salt=4)
+    eng.run(1, seeds=gen_seed_urls(SMALL))
+    sc = spark.sparkContext
+    n_persisted = sc._jsc.getPersistentRDDs().size()
+
+    def fault(*args, **kwargs):
+        raise RuntimeError(f"injected fault in {point}")
+
+    with monkeypatch.context() as m:
+        m.setattr(crawlmod, point, fault)
+        with pytest.raises(RuntimeError, match="injected fault"):
+            eng.run_epoch(2)
+    # the crawl_log write the epoch started has finished: nothing can still
+    # be writing into the staging dir that the retry overwrites
+    crawl_log = eng.catalog.stage_path(2, "crawl_log")
+    assert os.path.exists(os.path.join(crawl_log, "_SUCCESS")), "a write outlived the epoch"
+    assert eng.catalog.last_epoch() == 1
+    assert sc._jsc.getPersistentRDDs().size() == n_persisted
+
+    eng.run_epoch(2)
+    assert _final_state(eng) == two_epoch_state
 
 
 def test_flaky_retry_parity(spark, tmp_path):

@@ -1,15 +1,16 @@
 """Unit tests: C1 vectors, xxh64 parity, robots matching, bloom round-trip,
-catalog SQL shape, and the no-per-row-Python CI gate (SURVEY.md §5.3, §5.7)."""
+the seen-filter probe, and the CI gates against per-row Python and
+unreferenced engine definitions (SURVEY.md §5.3, §5.7)."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
 import numpy as np
 import pytest
 
-from engine.catalog import iceberg_merge_frontier_sql
 from engine.seen import _positions, _probe_bits, _set_bits
 from engine.synthgraph import TINY, robots_allowed, synth_doc
 from engine.urlnorm import canonicalize_url, host_of, path_of
@@ -107,12 +108,6 @@ def test_synth_doc_offsets_strictly_increasing():
             assert (kind == "media") == (media is not None)
 
 
-def test_iceberg_merge_sql_shape():
-    stmts = iceberg_merge_frontier_sql()
-    assert any("MERGE INTO" in s and "WHEN MATCHED" in s for s in stmts)
-    assert any("WHEN NOT MATCHED THEN INSERT" in s for s in stmts)
-
-
 def test_no_per_row_python_gate():
     """BASELINE.json:15: vectorized Arrow UDFs only — ban F.udf and .rdd."""
     repo = Path(__file__).resolve().parent.parent
@@ -121,6 +116,27 @@ def test_no_per_row_python_gate():
         for py in (repo / pkg).glob("*.py"):
             text = py.read_text()
             assert not banned.search(text), f"per-row Python or RDD usage in {py.name}"
+
+
+def test_engine_defs_are_referenced():
+    """Every top-level def/class in engine/ is referenced by name at least
+    once outside its own definition, in engine/, analytics/, tests/,
+    tools/, perfbench/ or a root script: code no caller reaches is deleted,
+    not kept."""
+    repo = Path(__file__).resolve().parent.parent
+    dirs = ("engine", "analytics", "tests", "tools", "perfbench")
+    files = [p for d in dirs for p in (repo / d).glob("*.py")] + list(repo.glob("*.py"))
+    texts = {p: p.read_text() for p in files}
+    unreferenced = []
+    for py in sorted((repo / "engine").glob("*.py")):
+        for node in ast.parse(texts[py]).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            word = re.compile(rf"\b{re.escape(node.name)}\b")
+            own = len(word.findall(ast.get_source_segment(texts[py], node)))
+            if sum(len(word.findall(t)) for t in texts.values()) == own:
+                unreferenced.append(f"{py.name}:{node.name}")
+    assert not unreferenced, f"engine definitions nothing references: {unreferenced}"
 
 
 def test_seed_ingest_from_text_file(spark, tmp_path):
@@ -191,11 +207,12 @@ def test_canonical_fast_path_is_sound():
     assert n_fast > len(urls) // 2  # the fast path actually covers the bulk
 
 
-def test_probe_strategies_agree(spark):
-    """broadcast (JVM bit math), slim (hash-only Arrow), and cogroup
-    (reference) probes return the identical maybe_seen verdict for every
-    candidate — including hashes with the sign bit set (the uint64-view
-    parity the broadcast shift/mask arithmetic must reproduce exactly)."""
+def test_probe_matches_numpy_reference(spark):
+    """probe_filter's verdict equals a numpy probe of the built blobs
+    (_probe_bits over _positions, per part_id) for every candidate row,
+    including hashes with the sign bit set, whose uint64 view the bit
+    positions depend on; with duplicated candidate rows and with
+    key-unique ones."""
     from engine import seen as seenmod
 
     rng = np.random.default_rng(7)
@@ -207,20 +224,25 @@ def test_probe_strategies_agree(spark):
     probe_hashes = np.concatenate(
         [seeds[:1000], rng.integers(-(2**63), 2**63 - 1, size=3000, dtype=np.int64)]
     )
-    cands = spark.createDataFrame(
-        [(int(h), f"u{i}") for i, h in enumerate(probe_hashes)], "url_hash long, url string"
-    )
+    want = {}
+    for r in blobs.collect():
+        h = probe_hashes[probe_hashes % n_parts == r["part_id"]]
+        bits = np.frombuffer(r["bits"], dtype=np.uint8)
+        want.update(zip(h.tolist(), _probe_bits(bits, _positions(h, nbits, nhash)).tolist()))
+    assert len(want) == len(probe_hashes)
+    assert not all(want.values()), "reference must reject some fresh hashes"
 
-    outs = {}
-    for strat in ("broadcast", "slim", "cogroup"):
-        rows = seenmod.probe_filter(cands, blobs, n_parts, strategy=strat).collect()
-        outs[strat] = {r["url_hash"]: r["maybe_seen"] for r in rows}
-        assert len(rows) == len(probe_hashes), strat
-    assert outs["broadcast"] == outs["cogroup"]
-    assert outs["slim"] == outs["cogroup"]
-    # every seeded hash must be maybe_seen (bloom: no false negatives)
-    for h in seeds[:1000]:
-        assert outs["broadcast"][int(h)] is True
+    unique = [(int(h), f"u{i}") for i, h in enumerate(probe_hashes)]
+    duplicated = unique + [(h, url + "-dup") for h, url in unique[::4]]
+    for rows_in, key_unique in ((duplicated, False), (unique, True)):
+        cands = spark.createDataFrame(rows_in, "url_hash long, url string")
+        rows = seenmod.probe_filter(cands, blobs, n_parts, key_unique=key_unique).collect()
+        assert sorted((r["url_hash"], r["url"]) for r in rows) == sorted(rows_in)
+        for r in rows:
+            assert r["maybe_seen"] == want[r["url_hash"]], r
+        # bloom: no false negatives on seeded hashes
+        seen_rows = {r["url_hash"]: r["maybe_seen"] for r in rows}
+        assert all(seen_rows[int(h)] for h in seeds[:1000])
     blobs.unpersist()
 
 
