@@ -1,10 +1,13 @@
 """C1/C2/C3 — URL canonicalization, fingerprint, host bucketing (SURVEY.md §2.1).
 
-C1 is an Arrow-batched scalar pandas_udf over the shared pure function
-(engine/urlnorm.py) — the same code the pyref oracle runs, so the URL-seen
-set matches by construction.  C2 is Spark's built-in ``F.xxhash64`` (exact
-spec match, BASELINE.json:6; JVM-side, codegen'd).  C3 derives host/path
-with native regexp_extract so Catalyst can fold/prune them (no Python).
+C1 is the shared pure function (engine/urlnorm.py) — the same code the
+pyref oracle runs, so the URL-seen set matches by construction.  Seeds
+cross into it through the Arrow-batched ``canonicalize_udf``; a crawl's
+outlinks are canonicalized inside the fused fetch crossing
+(engine/fetch.py ``canonical_links``).  C2 is Spark's built-in
+``F.xxhash64`` (exact spec match, BASELINE.json:6; JVM-side, codegen'd).
+C3 derives host/path with native regexp_extract so Catalyst can fold/prune
+them (no Python).
 No per-row ``F.udf`` anywhere (BASELINE.json:15 discipline).
 """
 
@@ -24,10 +27,10 @@ _PATH_RE = r"^[a-z]+://[^/]+(/[^?]*)"
 # Fast-path test: URLs matching this are FIXED POINTS of canonicalize_url
 # (lowercase scheme+host, no port/userinfo/query/fragment/percent-escapes,
 # and a path alphabet that cannot contain dot-segments), so they skip the
-# JVM->Python Arrow crossing entirely.  Conservative by construction: any
-# URL this regex cannot prove canonical takes the full pandas-UDF path.
-# On web-shaped link distributions the fast path covers the large majority
-# of outlinks — the dominant per-epoch Python cost at scale.
+# full normalization.  Conservative by construction: any URL this regex
+# cannot prove canonical takes the full canonicalize_url path.  On
+# web-shaped link distributions the fast path covers the large majority of
+# outlinks — the dominant per-epoch Python cost at scale.
 CANONICAL_FAST_RE = r"^https?://[a-z0-9]([a-z0-9.-]*[a-z0-9])?/[A-Za-z0-9_/-]*$"
 
 
@@ -35,14 +38,6 @@ CANONICAL_FAST_RE = r"^https?://[a-z0-9]([a-z0-9.-]*[a-z0-9])?/[A-Za-z0-9_/-]*$"
 def canonicalize_udf(urls: pd.Series) -> pd.Series:
     """C1 for absolute URLs (seed ingest)."""
     return urls.map(lambda u: canonicalize_url(u) if u is not None else None)
-
-
-@F.pandas_udf(StringType())
-def canonicalize_with_base_udf(urls: pd.Series, bases: pd.Series) -> pd.Series:
-    """C1 for outlinks: resolve relative against the parent URL (X2)."""
-    return pd.Series(
-        [canonicalize_url(u, base=b) if u is not None else None for u, b in zip(urls, bases)]
-    )
 
 
 def host_expr(url_col: str = "url") -> Column:

@@ -8,12 +8,15 @@ Per-epoch dataflow (SURVEY.md §3.1, shuffles labeled):
     never sits on the epoch critical path)
   → politeness k (broadcast join budgets)
   → F5 salted two-stage window-rank pop                 [shuffle 1: (host,salt); shuffle 2: host (pruned)]
-  → F6+X1+X2 fused fetch/parse/extract (mapInPandas)    [narrow]
-  ── everything below overlaps on one thread pool ──
-  → C1 canonicalize outlinks + intra-epoch dedup window [shuffle 3: url_hash]
-  → D1 bloom probe (cogrouped applyInPandas)            [shuffle 4: part_id]
-  → D2 exact anti-join of maybe-seen rows vs frontier   [shuffle 5: url_hash, bloom-cut]
-  → F7 touched-cell merge + insert-dir appends + D3 filter update
+  → F6+X1+X2+C1 fused fetch/parse/extract/canonicalize (mapInPandas,
+    raw outlinks → canonical ``links``)                 [narrow]
+  ── the F7 touched-cell merge starts here, on a thread pool ──
+  → dedup phase, on the main thread, materialized ONCE into a cache:
+    X2 explode ``links`` + intra-epoch min_by dedup     [shuffle 3: url_hash]
+    → D1 bloom probe (cogrouped applyInPandas)          [shuffle 4: part_id]
+    → D2 exact anti-join of maybe-seen rows vs frontier [shuffle 5: url_hash, bloom-cut]
+  ── everything below overlaps on the pool, each future its own write ──
+  → F7 insert-dir appends + D3 filter update
     + R1 robots for this epoch's new hosts → staging writes
   → L1 lineage from the written files' parquet footers  [driver, no job]
   → K1 atomic manifest commit                           [driver]
@@ -39,6 +42,7 @@ protocol both rely on.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 
@@ -271,8 +275,15 @@ class CrawlEngine:
         # or not the epoch commits: a failed epoch leaves no writer running
         # into its staging dirs and no persisted frame behind
         pool = ThreadPoolExecutor(max_workers=10)
-        gated = gated.persist()
-        popped = flagged = None
+        # the disallowed count and buckets ride the gated cache as an
+        # observation: the pop's first job builds the cache and fires it
+        dis_obs = Observation(f"dis_stats_e{epoch}")
+        gated = gated.observe(
+            dis_obs,
+            F.count(F.when(~F.col("allowed"), 1)).alias("n"),
+            F.collect_set(F.when(~F.col("allowed"), F.col("host_bucket"))).alias("bks"),
+        ).persist()
+        popped = probed = flagged = None
         try:
             _mark("gate_build")
             disallowed = gated.where(~F.col("allowed"))
@@ -307,8 +318,8 @@ class CrawlEngine:
             # anything downstream references it from multiple branches.  Without
             # this, the first write action recomputes the whole lazy chain
             # (pandas-UDF fetch included) once per branch — measured 98s vs 5s
-            # for the frontier write at 8k pops.  The counts double as metrics;
-            # popped/gated caches are populated by the fetch-stats job below.
+            # for the frontier write at 8k pops.  The popped/gated caches are
+            # populated by the crawl_log and fetch writes below.
             crawl_log = popped.select(
                 F.lit(epoch).cast("int").alias("epoch"),
                 "host",
@@ -323,11 +334,11 @@ class CrawlEngine:
             crawl_log_path = cat.stage_path(epoch, "crawl_log")
             fut_crawl_log = pool.submit(_timed("crawl_log", self._write, crawl_log, crawl_log_path))
 
-            # --- F6/X1/X2 ---
+            # --- F6/X1/X2/C1 ---
             # Materialize the fetch output ONCE as a staged parquet table
             # instead of a DISK_ONLY cache.  Rationale (the 100 TB shape): a
-            # cached row is monolithic — every downstream consumer (stats agg,
-            # candidate extraction, retry transition, lineage) deserializes the
+            # cached row is monolithic — every downstream consumer (candidate
+            # extraction, retry transition, lineage) deserializes the
             # spans payload it never uses — whereas a parquet scan prunes to
             # the columns each consumer reads.  The fat spans column is written
             # exactly once (Python → Arrow → parquet) and never read again this
@@ -335,9 +346,13 @@ class CrawlEngine:
             # this directory (zero-copy publish; extra engine columns on the
             # documents table are allowed, SURVEY.md §1.2).  ``okp`` is an int
             # partition column (hive partition inference has no boolean type),
-            # so the failed-row consumers prune to the tiny okp=0 cells.
+            # so the failed-row consumers prune to the tiny okp=0 cells.  The
+            # fetch metrics and the popped host_bucket set ride the write as
+            # an observation (no stats job over the staged files).
             bucket_of_host = F.pmod(F.xxhash64("host"), F.lit(self.n_buckets)).cast("int")
             fetched_dir = cat.stage_path(epoch, "fetched")
+            retryable = (~F.col("ok")) & (F.col("retries") + 1 < F.lit(cfg.max_retries))
+            fetch_obs = Observation(f"fetch_stats_e{epoch}")
             self._write(
                 fetch_parse(popped, cfg)
                 .withColumn("okp", F.col("ok").cast("int"))
@@ -346,30 +361,9 @@ class CrawlEngine:
                 .withColumn(
                     "n_outlinks", F.coalesce(F.size("outlinks"), F.lit(0)).cast("int")
                 )
-                .withColumn("host_bucket", bucket_of_host),
-                fetched_dir,
-                partition_cols=["okp"],
-            )
-            fetched = spark.read.schema(FETCHED_STAGED).parquet(fetched_dir)
-            retryable = (~F.col("ok")) & (F.col("retries") + 1 < F.lit(cfg.max_retries))
-            _mark("fetch_write")
-
-            # --- everything after the fetch write overlaps on one pool ---
-            # Every remaining epoch output derives only from materialized state
-            # (the gated/popped caches the fetch write populated, the staged
-            # fetched parquet, or the flagged cache below), so the stat jobs and
-            # write jobs are mutually independent and run concurrently.  This
-            # overlaps per-job driver latency (Catalyst analysis, scheduling,
-            # file-commit protocol) that otherwise serializes ~8 jobs per epoch
-            # — the constant cost that caps N->4N scaling efficiency on fast
-            # epochs.  Atomicity is untouched: nothing is visible until the
-            # manifest rename below, and a failure in ANY job aborts the epoch
-            # before commit (futures re-raise at the gather).
-            # fetch metrics + popped host_bucket set: one job over slim int
-            # columns of the staged parquet (spans never deserialized)
-            fut_fetch_stats = pool.submit(_timed(
-                "fetch_stats",
-                lambda: fetched.agg(
+                .withColumn("host_bucket", bucket_of_host)
+                .observe(
+                    fetch_obs,
                     F.count(F.when(F.col("ok"), 1)).alias("n_ok"),
                     F.count(F.when(~F.col("ok"), 1)).alias("n_fail"),
                     F.count(F.when(retryable, 1)).alias("n_retry_pending"),
@@ -377,37 +371,75 @@ class CrawlEngine:
                         F.sum(F.when(F.col("ok"), F.col("n_outlinks"))), F.lit(0)
                     ).alias("links"),
                     F.collect_set("host_bucket").alias("bks"),
-                ).collect()[0],
-            ))
-            fut_dis = pool.submit(_timed(
-                "dis_stats",
-                lambda: disallowed.agg(
-                    F.count("*").alias("n"), F.collect_set("host_bucket").alias("bks")
-                ).collect()[0],
-            ))
+                ),
+                fetched_dir,
+                partition_cols=["okp"],
+            )
+            fetched = spark.read.schema(FETCHED_STAGED).parquet(fetched_dir)
+            stats, dis_stats = fetch_obs.get, dis_obs.get
+            _mark("fetch_write")
 
-            # --- D1/D2 ---
+            # --- F7 merge of TOUCHED pending cells (cell-granular, O(delta)) ---
+            # Only pending cells holding popped/disallowed rows are rewritten;
+            # rows leaving 'pending' go to ONE new immutable dir per terminal
+            # status, appended to that status's cell and never rewritten — the
+            # manifest-level analogue of Iceberg MERGE INTO's add/remove-file
+            # commit (engine/catalog.py cell notes).  It needs only the two
+            # observations above, so it runs on the pool from here and
+            # overlaps the dedup phase and every write after it.  Atomicity is
+            # untouched: nothing is visible until the manifest rename below,
+            # and a failure in ANY job aborts the epoch before commit
+            # (futures re-raise at the gather).
+            updates = retry_transition(fetched, cfg.max_retries).unionByName(
+                disallowed.select(
+                    "url_hash",
+                    F.lit("disallowed").alias("new_status"),
+                    F.col("retries").alias("new_retries"),
+                    F.lit(None).cast("double").alias("new_priority"),
+                )
+            )
+            touched = {b for b in set(stats["bks"]) | set(dis_stats["bks"]) if b is not None}
+            fr_dir = cat.stage_path(epoch, "frontier")
+            cols = [f.name for f in FRONTIER.fields]
+
+            def write_merged() -> dict:
+                pending_src = cat.read_parts(
+                    parts, status="pending", buckets=touched, schema=FRONTIER
+                )
+                if pending_src is None:
+                    pending_src = spark.createDataFrame([], FRONTIER)
+                merged = apply_updates(pending_src.select(*cols), updates)
+                return self._write_cells(merged, os.path.join(fr_dir, "cells"))
+
+            fut_merged = pool.submit(_timed("merged", write_merged))
+
+            # --- dedup phase: X2 → D1 → D2, computed once ---
+            # ``flagged`` (every candidate, with ``is_new``) is materialized
+            # here, on the main thread, by one noop write: the extract and
+            # the probe each run once (the probe's cache serves both routes of
+            # flag_new), and the candidate + insert counts fire as an
+            # observation under the cache.  The futures below then only
+            # read the cache and write.
             cands = extract_candidates(
                 fetched.where(F.col("okp") == 1), cfg, self.n_buckets
             )
             seen = cat.read_snapshot("seen_filter", schema=SEEN_FILTER)
-            # the probe Arrow-crosses 16 bytes/candidate (hash only), and its
-            # url_hash join-back exchange is the same one flag_new needs
-            probed = seenmod.probe_filter(cands, seen, self.n_filter_parts, key_unique=True)
-            flagged = seenmod.flag_new(probed, frontier.select("url_hash")).persist()
-            # candidate + insert counts ride the insert write as observation
-            # metrics (CollectMetrics above the is_new filter) instead of a
-            # dedicated agg job — one fewer full pass over the flagged cache
-            # in the epoch tail.  ``Observation.get`` is resolved at the
-            # gather, after the write job (or the seen-filter update, which
-            # executes the same subtree) has fired it.
+            probed = seenmod.probe_filter(cands, seen, self.n_filter_parts).persist()
             ins_obs = Observation(f"ins_stats_e{epoch}")
-            cols = [f.name for f in FRONTIER.fields]
-            inserts = flagged.observe(
-                ins_obs,
-                F.count(F.lit(1)).alias("n_cands"),
-                F.count(F.when(F.col("is_new"), 1)).alias("n"),
-            ).where("is_new").select(
+            flagged = (
+                seenmod.flag_new(probed, frontier.select("url_hash"))
+                .observe(
+                    ins_obs,
+                    F.count(F.lit(1)).alias("n_cands"),
+                    F.count(F.when(F.col("is_new"), 1)).alias("n"),
+                )
+                .persist()
+            )
+            flagged.write.format("noop").mode("overwrite").save()
+            ins_stats = ins_obs.get
+            _mark("dedup")
+
+            inserts = flagged.where("is_new").select(
                 "url_hash",
                 "url",
                 "host",
@@ -419,7 +451,6 @@ class CrawlEngine:
                 F.lit(0).cast("int").alias("retries"),
                 "parent_hash",
             )
-            fr_dir = cat.stage_path(epoch, "frontier")
             # F7 inserts: written as APPENDED per-bucket dirs under their
             # pending cells — a pending cell whose rows were not popped or
             # disallowed this epoch is never read OR rewritten for an insert
@@ -450,20 +481,24 @@ class CrawlEngine:
                 if not self.use_robots:
                     return prev_robots_rows, None
                 new_hosts = (
-                    flagged.where("is_new")
-                    .select("host")
+                    inserts.select("host")
                     .distinct()
                     .join(robots.select("host").distinct(), "host", "left_anti")
                 )
-                delta = fetch_robots(new_hosts, cfg, epoch).persist()
-                try:
-                    n = delta.count()
-                    if not n:
-                        return prev_robots_rows, None
-                    dpath = os.path.join(cat.stage_path(epoch, "robots_rules"), "delta")
-                    self._write(delta, dpath)
-                finally:
-                    delta.unpersist()
+                # the count rides the write, so the counted rows are the
+                # written rows (a real fetcher is non-deterministic)
+                rob_obs = Observation(f"robots_delta_e{epoch}")
+                dpath = os.path.join(cat.stage_path(epoch, "robots_rules"), "delta")
+                self._write(
+                    fetch_robots(new_hosts, cfg, epoch).observe(
+                        rob_obs, F.count(F.lit(1)).alias("n")
+                    ),
+                    dpath,
+                )
+                n = rob_obs.get["n"]
+                if not n:
+                    shutil.rmtree(dpath)
+                    return prev_robots_rows, None
                 paths = robots_paths + [dpath]
                 if len(paths) > self.max_cell_dirs:
                     cpath = os.path.join(cat.stage_path(epoch, "robots_rules"), "compact")
@@ -473,45 +508,9 @@ class CrawlEngine:
 
             fut_robots = pool.submit(_timed("robots_delta", robots_delta))
 
-            # --- F7 merge of TOUCHED pending cells (cell-granular, O(delta)) ---
-            # Only pending cells holding popped/disallowed rows are rewritten;
-            # rows leaving 'pending' go to ONE new immutable dir per terminal
-            # status, appended to that status's cell and never rewritten — the
-            # manifest-level analogue of Iceberg MERGE INTO's add/remove-file
-            # commit (engine/catalog.py cell notes).  Runs on the pool too: it
-            # needs only the two stat futures above, so it overlaps the
-            # probe/flag chain and every other write.
-            updates = retry_transition(fetched, cfg.max_retries).unionByName(
-                disallowed.select(
-                    "url_hash",
-                    F.lit("disallowed").alias("new_status"),
-                    F.col("retries").alias("new_retries"),
-                    F.lit(None).cast("double").alias("new_priority"),
-                )
-            )
-
-            def write_merged() -> tuple[set[str], dict]:
-                st, ds = fut_fetch_stats.result(), fut_dis.result()
-                touched = set(
-                    b for b in set(st["bks"]) | set(ds["bks"]) if b is not None
-                )
-                pending_src = cat.read_parts(
-                    parts, status="pending", buckets=touched, schema=FRONTIER
-                )
-                if pending_src is None:
-                    pending_src = spark.createDataFrame([], FRONTIER)
-                merged = apply_updates(pending_src.select(*cols), updates)
-                rewritten = {cat.cell_key("pending", b) for b in touched}
-                return rewritten, self._write_cells(merged, os.path.join(fr_dir, "cells"))
-
-            fut_merged = pool.submit(_timed("merged", write_merged))
-
             # --- gather (any failure aborts before commit) ---
-            stats = fut_fetch_stats.result()
-            dis_stats = fut_dis.result()
-            rewritten, merged_cells = fut_merged.result()
+            merged_cells = fut_merged.result()
             insert_cells = fut_insert_cells.result()
-            ins_stats = ins_obs.get  # fired by the insert_cells write job
             fut_crawl_log.result()
             n_robots_rows, new_robots_paths = fut_robots.result()
             sf_path = fut_seen.result()
@@ -526,6 +525,7 @@ class CrawlEngine:
             # assemble the cell map deterministically on the main thread:
             # rewritten pending cells REPLACE their dir list, terminal dirs and
             # insert dirs APPEND
+            rewritten = {cat.cell_key("pending", b) for b in touched}
             new_parts = {c: list(d) for c, d in parts.items() if c not in rewritten}
             for cells in (merged_cells, insert_cells):
                 for cell, p in cells.items():
@@ -608,7 +608,7 @@ class CrawlEngine:
             )
         finally:
             pool.shutdown(wait=True)
-            for df in (gated, popped, flagged):
+            for df in (gated, popped, probed, flagged):
                 if df is not None:
                     df.unpersist()
         _mark("commit")

@@ -1,12 +1,12 @@
-"""X2 — outlink extraction + canonicalization of discovered URLs.
+"""X2 — candidate extraction from the canonical outlinks.
 
-X1 span parsing is fused into engine/fetch.py (same Arrow crossing); this
-module owns the relational tail: explode the per-document outlink arrays
-(native UDTF-shaped ``explode``, UD6 — no Python UDTF), resolve+canonicalize
-each raw link against its parent (C1 pandas_udf), attach url keys (C2/C3),
-and collapse same-epoch duplicate discoveries to the candidate with the
-smallest (depth, parent_hash) — the normative intra-batch dedup rule shared
-with the pyref oracle.
+X1 span parsing and C1 canonicalization are fused into engine/fetch.py
+(same Arrow crossing, the ``links`` column); this module owns the
+relational tail, JVM-only: explode the per-document canonical link arrays
+(native UDTF-shaped ``explode``, UD6 — no Python UDTF), attach url keys
+(C2/C3), and collapse same-epoch duplicate discoveries to the candidate
+with the smallest (depth, parent_hash) — the normative intra-batch dedup
+rule shared with the pyref oracle.
 """
 
 from __future__ import annotations
@@ -14,48 +14,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from engine.canonicalize import (
-    CANONICAL_FAST_RE,
-    canonicalize_with_base_udf,
-    with_url_keys,
-)
+from engine.canonicalize import with_url_keys
 from engine.synthgraph import GraphConfig
 
 
 def extract_candidates(fetched: DataFrame, cfg: GraphConfig, n_buckets: int) -> DataFrame:
-    """Successful fetches → deduped canonical child-URL candidates.
-
-    C1 fast path: links the CANONICAL_FAST_RE proves already-canonical
-    bypass the pandas UDF (a filter+union of two narrow branches — Spark
-    evaluates Python UDFs eagerly even under ``when()``, so the split is
-    the only way to actually skip the Arrow crossing for the ~95% of
-    already-clean links).
-    """
-    raw = fetched.where(F.col("ok") & (F.col("depth") < F.lit(cfg.max_depth))).select(
+    """Successful fetches → deduped canonical child-URL candidates."""
+    links = fetched.where(F.col("ok") & (F.col("depth") < F.lit(cfg.max_depth))).select(
         F.col("url_hash").alias("parent_hash"),
-        F.col("url").alias("base_url"),
         (F.col("depth") + 1).cast("int").alias("depth"),
-        F.explode("outlinks").alias("raw_url"),
-    )
-    is_fast = F.col("raw_url").rlike(CANONICAL_FAST_RE)
-    fast = raw.where(is_fast).withColumn("url", F.col("raw_url"))
-    slow = raw.where(F.coalesce(~is_fast, F.lit(True))).withColumn(
-        "url", canonicalize_with_base_udf("raw_url", "base_url")
-    )
-    links = (
-        fast.unionByName(slow)
-        .where(F.col("url").isNotNull())
-        .drop("raw_url", "base_url")
+        F.explode("links").alias("url"),
     )
     keyed = with_url_keys(links, n_buckets)
     # same-epoch dedup: keep min (depth, parent_hash) per url_hash (normative).
-    # min_by instead of a row_number window: a hash aggregate gets map-side
-    # partial aggregation, so same-epoch duplicate discoveries (the common
-    # case — popular pages are re-linked by many parents) collapse BEFORE
-    # the url_hash shuffle instead of after it, and the sort the window
-    # needed disappears.  Ties on (depth, parent_hash) are rows identical
-    # in every carried column (same parent, same canonical url), so the
-    # pick is deterministic either way.
+    # min_by instead of a row_number window: the aggregate runs a partial
+    # pass before the url_hash shuffle, so same-epoch duplicate discoveries
+    # (the common case — popular pages are re-linked by many parents)
+    # collapse BEFORE the exchange instead of after it.  The struct-valued
+    # buffer makes it a SortAggregate, so each side still sorts its rows.
+    # Ties on (depth, parent_hash) are rows identical in every carried
+    # column (same parent, same canonical url), so the pick is
+    # deterministic either way.
     other = [c for c in keyed.columns if c != "url_hash"]
     return (
         keyed.groupBy("url_hash")

@@ -110,7 +110,7 @@ METRICS = StructType(
     ]
 )
 
-# Output schema of the fused F6+X1+X2 mapInPandas stage (engine/fetch.py).
+# Output schema of the fused F6+X1+X2+C1 mapInPandas stage (engine/fetch.py).
 FETCHED = StructType(
     [
         StructField("url_hash", LongType()),
@@ -121,6 +121,9 @@ FETCHED = StructType(
         StructField("ok", BooleanType()),
         StructField("spans", ArrayType(SPAN_TYPE)),
         StructField("outlinks", ArrayType(StringType())),
+        # C1 output: ``outlinks`` resolved against ``url`` and canonicalized,
+        # in raw order, unusable links dropped (engine/fetch.py)
+        StructField("links", ArrayType(StringType())),
         # logical fetch time within the epoch window: fetch_seq_in_host *
         # min_delay_s (politeness delay bookkeeping; 0.0 when no delay)
         StructField("fetch_at_s", DoubleType()),

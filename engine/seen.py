@@ -6,9 +6,10 @@ per ``part_id = pmod(url_hash, N_FILTER_PARTS)`` partition, stored as a
 binary column row (SURVEY.md §1.2 seen_filter).  Probe (D1) and update (D3)
 are cogrouped ``applyInPandas`` (UD4) with numpy-vectorized k-hash bit ops —
 no per-row Python (BASELINE.json:6 "per-partition membership via
-Arrow-batched pandas UDFs").  The probe has one physical path: only the
-candidates' (part_id, url_hash) pairs cross Arrow, and the verdict joins
-back on url_hash (:func:`probe_filter`).
+Arrow-batched pandas UDFs").  The probe has one physical path: the
+candidate rows cross Arrow once and come back carrying their verdict
+(:func:`probe_filter`); the engine caches that result, so the two routes of
+:func:`flag_new` read one probe.
 
 Exactness guarantee: the filter only *routes* — candidates it has definitely
 never seen skip the expensive anti-join against the full frontier key set;
@@ -20,8 +21,8 @@ At 10^10-URL scale this is the shuffle cut that matters: the frontier key
 set is ~80 GB of url_hash; the anti-join only ever shuffles the (small)
 maybe-seen fraction of each epoch's discoveries, while the blobs
 (N_FILTER_PARTS × nbits/8 bytes) stay partition-aligned with the candidate
-stream — the cogroup shuffles candidate hashes by part_id (1 shuffle) and
-blobs (tiny) only.
+stream — the cogroup shuffles candidates by part_id (1 shuffle) and blobs
+(tiny) only.
 """
 
 from __future__ import annotations
@@ -158,37 +159,15 @@ def init_filter(
     return built.unionByName(empty_blobs)
 
 
-def probe_filter(
-    candidates: DataFrame,
-    blobs: DataFrame,
-    n_parts: int,
-    key_unique: bool = False,
-) -> DataFrame:
-    """D1: adds ``maybe_seen`` to candidates.
+def probe_filter(candidates: DataFrame, blobs: DataFrame, n_parts: int) -> DataFrame:
+    """D1: adds ``maybe_seen`` (and ``part_id``) to every candidate row.
 
-    Only (part_id, url_hash) crosses Arrow into the cogrouped numpy probe
-    (16 bytes/row instead of the full URL-carrying candidate row), and the
-    verdict joins back on url_hash.  The join-back shuffle replaces a
-    full-row cogroup's candidate shuffle one-for-one, and downstream D2
-    (flag_new) joins on the same url_hash key, so AQE reuses the exchange.
-
-    ``key_unique``: the caller guarantees one row per url_hash (the
-    engine's candidates come out of extract_candidates' groupBy), so the
-    dedup pass, needed only so the left join-back cannot multiply rows, is
-    skipped.
-    """
-    slim = with_part_id(candidates.select("url_hash"), n_parts)
-    if not key_unique:
-        slim = slim.dropDuplicates(["url_hash"])
-    verdict = _probe_cogroup(slim, blobs).drop("part_id")
-    return with_part_id(candidates, n_parts).join(verdict, "url_hash", "left").fillna(
-        {"maybe_seen": False}
-    )
-
-
-def _probe_cogroup(cands: DataFrame, blobs: DataFrame) -> DataFrame:
-    """Cogrouped applyInPandas probe (UD4) over rows already carrying
-    part_id; numpy-vectorized per partition."""
+    One cogrouped applyInPandas (UD4) over the full candidate rows, numpy-
+    vectorized per partition: the rows cross Arrow once and come back with
+    their verdict, so no join-back is needed.  Integer columns must be
+    null-free: a nullable int64 batch arrives in pandas as float64 (see
+    :func:`init_filter`)."""
+    cands = with_part_id(candidates, n_parts)
     out_schema = StructType(cands.schema.fields + [StructField("maybe_seen", BooleanType())])
     cols = cands.columns
 
@@ -318,19 +297,19 @@ def flag_new(candidates_probed: DataFrame, frontier_keys: DataFrame) -> DataFram
     ``is_new`` instead of anti-join-filtering — ``where(is_new)`` is
     row-identical to the left_anti formulation (J4, the driver-checked
     `j4_left_anti_join` parity query), and the flag lets the engine compute
-    candidate-count and insert-count metrics in ONE job over one cached
-    frame.  Bloom shuffle-cut preserved: only maybe-seen rows reach the
-    join.
+    candidate-count and insert-count metrics over one cached frame.  Bloom
+    shuffle-cut preserved: only maybe-seen rows reach the join.  The two
+    routes each read ``candidates_probed``, so a caller that must not run
+    the probe twice passes it persisted.
 
     The marker side is ``dropDuplicates``-ed: the left join is only
     row-identical to left_anti when the join key is unique, and while the
     F7 merge enforces one-frontier-row-per-url_hash, a corrupted frontier
     would otherwise silently MULTIPLY candidate rows (inflating
     n_cands/inserts and writing duplicate frontier rows).  The dedup's
-    pre-shuffle partial agg hashes on the same url_hash the join shuffles
-    on, so its exchange is reused by the join — near-free at any scale,
-    and it turns the uniqueness invariant from an assumption into a
-    guarantee."""
+    exchange hashes on the url_hash the join needs, so the join adds no
+    exchange on the frontier side — near-free at any scale, and it turns
+    the uniqueness invariant from an assumption into a guarantee."""
     definitely_new = candidates_probed.withColumn("is_new", ~F.col("maybe_seen")).where(
         ~F.col("maybe_seen")
     )

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import engine.crawl as crawlmod
+from engine import seen as seenmod
 from engine.crawl import CrawlEngine
 from engine.synthgraph import GraphConfig, gen_seed_urls
 from pyref.oracle import run_crawl as oracle_run
@@ -56,25 +57,29 @@ def two_epoch_state(spark, tmp_path_factory):
     return _final_state(eng)
 
 
-@pytest.mark.parametrize("point", ["fetch_parse", "write_lineage_parquet"])
+@pytest.mark.parametrize("point", ["fetch_parse", "flag_new", "write_lineage_parquet"])
 def test_failed_epoch_leaves_no_writer_or_cache(
     spark, tmp_path, monkeypatch, two_epoch_state, point
 ):
-    """A raise in epoch 2, before the gather while the pool's crawl_log
-    write is live (``fetch_parse``) or after it (``write_lineage_parquet``),
-    keeps epoch 1 committed, leaves no write running and no cache
-    persisted, and a same-session retry of the epoch reaches the
-    uninterrupted run's state."""
+    """A raise in epoch 2 — before the gather while the pool's crawl_log
+    write is live (``fetch_parse``), inside the dedup phase once the
+    probe's cache is built and the merge write runs (``flag_new``), or
+    after the gather (``write_lineage_parquet``) — keeps epoch 1
+    committed, leaves no write running and no cache persisted, and a
+    same-session retry of the epoch reaches the uninterrupted run's
+    state."""
     eng = CrawlEngine(spark, str(tmp_path / "f"), SMALL, n_filter_parts=4, salt=4)
     eng.run(1, seeds=gen_seed_urls(SMALL))
     sc = spark.sparkContext
     n_persisted = sc._jsc.getPersistentRDDs().size()
 
     def fault(*args, **kwargs):
+        if point == "flag_new":  # args[0]: the persisted probe result
+            args[0].write.format("noop").mode("overwrite").save()
         raise RuntimeError(f"injected fault in {point}")
 
     with monkeypatch.context() as m:
-        m.setattr(crawlmod, point, fault)
+        m.setattr(seenmod if point == "flag_new" else crawlmod, point, fault)
         with pytest.raises(RuntimeError, match="injected fault"):
             eng.run_epoch(2)
     # the crawl_log write the epoch started has finished: nothing can still

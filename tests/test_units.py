@@ -211,8 +211,8 @@ def test_probe_matches_numpy_reference(spark):
     """probe_filter's verdict equals a numpy probe of the built blobs
     (_probe_bits over _positions, per part_id) for every candidate row,
     including hashes with the sign bit set, whose uint64 view the bit
-    positions depend on; with duplicated candidate rows and with
-    key-unique ones."""
+    positions depend on; with duplicated candidate rows and with unique
+    ones, every input row comes back exactly once."""
     from engine import seen as seenmod
 
     rng = np.random.default_rng(7)
@@ -234,9 +234,9 @@ def test_probe_matches_numpy_reference(spark):
 
     unique = [(int(h), f"u{i}") for i, h in enumerate(probe_hashes)]
     duplicated = unique + [(h, url + "-dup") for h, url in unique[::4]]
-    for rows_in, key_unique in ((duplicated, False), (unique, True)):
+    for rows_in in (duplicated, unique):
         cands = spark.createDataFrame(rows_in, "url_hash long, url string")
-        rows = seenmod.probe_filter(cands, blobs, n_parts, key_unique=key_unique).collect()
+        rows = seenmod.probe_filter(cands, blobs, n_parts).collect()
         assert sorted((r["url_hash"], r["url"]) for r in rows) == sorted(rows_in)
         for r in rows:
             assert r["maybe_seen"] == want[r["url_hash"]], r
