@@ -21,10 +21,10 @@ Table kinds:
   * the ``frontier`` snapshot is a map of cells to immutable leaf dirs:
     one cell per host bucket for pending rows (rewritten only when the
     epoch pops or disallows rows of that bucket, otherwise appended to by
-    insert dirs and compacted past ``max_cell_dirs``), and one cell per
-    terminal status that gains one leaf dir per epoch and is never
-    rewritten (see the cell notes below).  At production scale this is an
-    Iceberg ``MERGE INTO`` that rewrites only matched partitions
+    insert dirs and compacted past ``crawl.MAX_CELL_DIRS`` dirs), and one
+    cell per terminal status that gains one leaf dir per epoch and is
+    never rewritten (see the cell notes below).  At production scale this
+    is an Iceberg ``MERGE INTO`` that rewrites only matched partitions
     (SURVEY.md §2.2 SC6).
   * append tables (``documents``, ``crawl_log``, ``lineage``,
     ``metrics``): each epoch appends a new directory; a read unions all

@@ -68,6 +68,14 @@ from engine.seed import seeds_to_frontier
 from engine.synthgraph import GraphConfig, gen_budgets
 
 
+# politeness budget of a host with no budgets row: every graph host has
+# one, so this only keeps the budgets join total
+DEFAULT_K = 1
+# dirs a pending cell, or the robots snapshot, may hold before it is
+# rewritten into one dir
+MAX_CELL_DIRS = 16
+
+
 class CrawlEngine:
     """Spark-native crawl engine over snapshot-versioned (Iceberg-role) tables."""
 
@@ -80,39 +88,33 @@ class CrawlEngine:
         n_buckets: int = 64,
         n_filter_parts: int = 16,
         salt: int = 16,
-        filter_nbits: int = seenmod.DEFAULT_NBITS,
-        filter_nhash: int = seenmod.DEFAULT_NHASH,
-        use_robots: bool = True,
-        default_k: int = 1,
         bench_budget: int | None = None,
         filter_kind: str = "bloom",
-        max_cell_dirs: int = 16,
     ):
         self.spark = spark
         self.cfg = cfg
         self.n_buckets = n_buckets
         self.n_filter_parts = n_filter_parts
         self.salt = salt
-        self.filter_nbits = filter_nbits
-        self.filter_nhash = filter_nhash
-        self.use_robots = use_robots
-        self.default_k = default_k
         self.bench_budget = bench_budget
         self.filter_kind = filter_kind
-        self.max_cell_dirs = max_cell_dirs
         self.catalog = SnapshotCatalog(spark, root)
         self._budgets: DataFrame | None = None  # cross-epoch cache (immutable dim)
 
     # ------------------------------------------------------------------ init
-    def init_run(self, seeds: list[str] | None = None, seed_path: str | None = None) -> None:
+    def init_run(self, seeds: list[str]) -> None:
         """Epoch-0 commit: frontier from seeds, budgets, seed-host robots, filter."""
         cat = self.catalog
         if self._budgets is not None:
             self._budgets.unpersist()
             self._budgets = None
-        frontier = seeds_to_frontier(self.spark, seeds, self.n_buckets, seed_path)
+        fr_obs = Observation("seed_frontier")
+        frontier = seeds_to_frontier(self.spark, seeds, self.n_buckets).observe(
+            fr_obs, F.count(F.lit(1)).alias("n")
+        )
         fr_path = cat.stage_path(0, "frontier")
         cells = self._write_cells(frontier, os.path.join(fr_path, "pending"))
+        n_frontier = fr_obs.get["n"]
         parts0 = {cell: [p] for cell, p in cells.items()}
         frontier = cat.read_parts(parts0, schema=FRONTIER)
 
@@ -124,36 +126,24 @@ class CrawlEngine:
             if self.bench_budget is not None
             else gen_budgets(self.cfg)
         )
-        budgets = self.spark.createDataFrame(rows, POLITENESS_BUDGETS)
         bud_path = cat.stage_path(0, "politeness_budgets")
-        self._write(budgets, bud_path)
+        self._write(self.spark.createDataFrame(rows, POLITENESS_BUDGETS), bud_path)
 
-        # R1 prefetch: rules for the SEED hosts are acquired at init, and
-        # every later epoch acquires rules for its INSERT hosts as part of
-        # that epoch's overlapped writes — so no epoch ever starts with a
-        # synchronous missing-rules job on its critical path.  Invariant
-        # (meta "robots_complete"): the committed robots table covers every
-        # host that has ever held a frontier row, which is a superset of
-        # the hosts any pending scan can produce — the R2 gate never sees
-        # a rule-less host.
+        # R1 prefetch: rules for the SEED hosts are acquired here, and every
+        # epoch acquires rules for its INSERT hosts as part of its
+        # overlapped writes.  Every host that ever held a frontier row
+        # entered as a seed or an insert, so the committed robots table
+        # covers every host a pending scan can produce: the R2 gate never
+        # sees a rule-less host, and no epoch starts with a synchronous
+        # rules job.  The dir stays even when empty, so the robots snapshot
+        # always names at least one path.
         rob_path = cat.stage_path(0, "robots_rules")
-        if self.use_robots:
-            seed_hosts = frontier.select("host").distinct()
-            rules = fetch_robots(seed_hosts, self.cfg, 0).persist()
-            n_rules = rules.count()
-            self._write(rules, rob_path)
-            rules.unpersist()
-        else:
-            n_rules = 0
-            self._write(self.spark.createDataFrame([], ROBOTS_RULES), rob_path)
+        n_rules = self._write_rules(frontier.select("host").distinct(), 0, rob_path)
 
-        n_frontier = frontier.count()
         blobs = seenmod.init_filter(
             self.spark,
             frontier.select("url_hash"),
             self.n_filter_parts,
-            self.filter_nbits,
-            self.filter_nhash,
             kind=self.filter_kind,
         )
         sf_path = cat.stage_path(0, "seen_filter")
@@ -162,7 +152,7 @@ class CrawlEngine:
             0,
             {
                 "frontier": {"rows": n_frontier, "parts": parts0},
-                "politeness_budgets": {"path": bud_path, "rows": budgets.count()},
+                "politeness_budgets": {"path": bud_path, "rows": len(rows)},
                 "robots_rules": {"paths": [rob_path], "rows": n_rules},
                 "seen_filter": {"path": sf_path, "rows": self.n_filter_parts},
             },
@@ -176,11 +166,6 @@ class CrawlEngine:
                 "frontier_rows": n_frontier,
                 "pending": n_frontier,
                 "robots_rows": n_rules,
-                # only a robots-ON run can vouch coverage; a robots-off
-                # history must NOT skip the bootstrap fetch when the catalog
-                # is later re-opened with robots enabled (hosts discovered
-                # during robots-off epochs have no committed rules)
-                "robots_complete": self.use_robots,
             },
         )
 
@@ -236,41 +221,12 @@ class CrawlEngine:
 
         # --- R2 gate; R1 ran AHEAD (init_run / previous epoch's overlap) ---
         # The committed robots table already covers every host that has
-        # ever held a frontier row (meta "robots_complete" invariant), so
-        # the epoch start needs NO synchronous rules job — the one-time
-        # acquisition for this epoch's newly-discovered hosts runs below,
-        # overlapped with the writes.
-        robots = None
-        robots_paths: list[str] = []
-        orig_robots_paths: list[str] = []
-        if self.use_robots:
-            entry = prev_manifest["snapshots"]["robots_rules"]
-            robots_paths = list(entry.get("paths") or [entry["path"]])
-            orig_robots_paths = list(robots_paths)
-            robots = spark.read.schema(ROBOTS_RULES).parquet(*robots_paths)
-            if not prev_meta.get("robots_complete"):
-                # legacy catalog (manifests committed before the prefetch
-                # invariant): acquire rules for pending hosts synchronously
-                # ONCE; this commit marks the invariant, later epochs stay
-                # on the fast path.  persist-before-count: a real fetcher is
-                # non-deterministic, the counted rows must be the written rows
-                missing = pending.select("host").distinct().join(
-                    robots.select("host").distinct(), "host", "left_anti"
-                )
-                boot = fetch_robots(missing, cfg, epoch).persist()
-                n_boot = boot.count()
-                if n_boot:
-                    boot_path = os.path.join(
-                        cat.stage_path(epoch, "robots_rules"), "bootstrap"
-                    )
-                    self._write(boot, boot_path)
-                    robots_paths.append(boot_path)
-                    robots = spark.read.schema(ROBOTS_RULES).parquet(*robots_paths)
-                    prev_robots_rows += n_boot
-                boot.unpersist()
-            gated = robots_gate(pending.withColumn("path", path_expr()), robots).drop("path")
-        else:
-            gated = pending.withColumn("allowed", F.lit(True))
+        # ever held a frontier row (init_run's R1 note), so the epoch start
+        # needs NO synchronous rules job — the acquisition for this epoch's
+        # newly-discovered hosts runs below, overlapped with the writes.
+        robots_paths = prev_manifest["snapshots"]["robots_rules"]["paths"]
+        robots = spark.read.schema(ROBOTS_RULES).parquet(*robots_paths)
+        gated = robots_gate(pending.withColumn("path", path_expr()), robots).drop("path")
         # the pool of overlapped writes and every cache are released whether
         # or not the epoch commits: a failed epoch leaves no writer running
         # into its staging dirs and no persisted frame behind
@@ -310,7 +266,7 @@ class CrawlEngine:
                     "host",
                     "left",
                 )
-                .fillna({"k": self.default_k, "min_delay_s": 0.0})
+                .fillna({"k": DEFAULT_K, "min_delay_s": 0.0})
                 .withColumn("k", F.least(F.col("k"), delay_cap_expr))
             )
             popped = pop_frontier(elig_k, self.salt).persist()
@@ -475,32 +431,21 @@ class CrawlEngine:
             fut_seen = pool.submit(_timed("seen", write_seen))
 
             # --- R1 for NEXT epoch's gate: rules for hosts first discovered by
-            # this epoch's inserts, committed with this epoch (the
-            # robots_complete invariant) ---
-            def robots_delta() -> tuple[int | None, list[str] | None]:
-                if not self.use_robots:
-                    return prev_robots_rows, None
+            # this epoch's inserts, committed with this epoch (init_run's R1
+            # note); an empty delta leaves no dir and keeps the snapshot ---
+            def robots_delta() -> tuple[int, list[str] | None]:
                 new_hosts = (
                     inserts.select("host")
                     .distinct()
                     .join(robots.select("host").distinct(), "host", "left_anti")
                 )
-                # the count rides the write, so the counted rows are the
-                # written rows (a real fetcher is non-deterministic)
-                rob_obs = Observation(f"robots_delta_e{epoch}")
                 dpath = os.path.join(cat.stage_path(epoch, "robots_rules"), "delta")
-                self._write(
-                    fetch_robots(new_hosts, cfg, epoch).observe(
-                        rob_obs, F.count(F.lit(1)).alias("n")
-                    ),
-                    dpath,
-                )
-                n = rob_obs.get["n"]
+                n = self._write_rules(new_hosts, epoch, dpath)
                 if not n:
                     shutil.rmtree(dpath)
                     return prev_robots_rows, None
                 paths = robots_paths + [dpath]
-                if len(paths) > self.max_cell_dirs:
+                if len(paths) > MAX_CELL_DIRS:
                     cpath = os.path.join(cat.stage_path(epoch, "robots_rules"), "compact")
                     self._write(spark.read.schema(ROBOTS_RULES).parquet(*paths), cpath)
                     paths = [cpath]
@@ -559,10 +504,6 @@ class CrawlEngine:
             snapshots: dict = {"seen_filter": {"path": sf_path, "rows": self.n_filter_parts}}
             if new_robots_paths is not None:
                 snapshots["robots_rules"] = {"paths": new_robots_paths, "rows": n_robots_rows}
-            elif self.use_robots and robots_paths != orig_robots_paths:
-                # legacy bootstrap extended the committed dirs but no insert
-                # delta followed — still must commit the bootstrap dir
-                snapshots["robots_rules"] = {"paths": robots_paths, "rows": n_robots_rows}
             _mark("assemble")
 
             # --- metrics (definitions shared with pyref.oracle) ---
@@ -603,7 +544,6 @@ class CrawlEngine:
                     "frontier_rows": frontier_rows,
                     "pending": pending_end,
                     "robots_rows": n_robots_rows,
-                    "robots_complete": self.use_robots,
                 },
             )
         finally:
@@ -644,15 +584,15 @@ class CrawlEngine:
     # ---------------------------------------------------------------- helpers
     def _compact_cells(self, new_parts: dict, fr_dir: str) -> dict:
         """Bound pending-cell fragmentation: an untouched pending cell gains
-        one insert dir per epoch; past ``max_cell_dirs`` the cell is
+        one insert dir per epoch; past ``MAX_CELL_DIRS`` the cell is
         rewritten into a single dir (Iceberg's rewrite_data_files analogue).
         Amortized cost stays O(delta): each row is rewritten at most once
-        per max_cell_dirs epochs.  Terminal cells gain one dir per epoch
+        per MAX_CELL_DIRS epochs.  Terminal cells gain one dir per epoch
         and are never compacted."""
         frag = {
             c: d
             for c, d in new_parts.items()
-            if c.startswith("pending/") and len(d) > self.max_cell_dirs
+            if c.startswith("pending/") and len(d) > MAX_CELL_DIRS
         }
         if not frag:
             return new_parts
@@ -661,6 +601,17 @@ class CrawlEngine:
         for cell, p in self._write_cells(df, os.path.join(fr_dir, "compact")).items():
             out[cell] = [p]
         return out
+
+    def _write_rules(self, hosts: DataFrame, epoch: int, path: str) -> int:
+        """R1: write the fetched robots rules of ``hosts`` to ``path`` and
+        return the row count, observed on the write, so the counted rows
+        are the written rows (a real fetcher is non-deterministic)."""
+        obs = Observation(f"robots_rules_e{epoch}")
+        self._write(
+            fetch_robots(hosts, self.cfg, epoch).observe(obs, F.count(F.lit(1)).alias("n")),
+            path,
+        )
+        return obs.get["n"]
 
     @staticmethod
     def _write(df: DataFrame, path: str, partition_cols: list[str] | None = None) -> None:

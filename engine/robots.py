@@ -1,11 +1,13 @@
 """R1/R2 — robots.txt acquisition and longest-prefix rule matching.
 
-R1: hosts present in the pending frontier but absent from ``robots_rules``
-get their rules fetched once (left_anti discovery, mapInPandas fetch —
-synthetic in sandbox, HTTP in production).  Rule-less hosts get a marker
-row (rule_order=-1, path_prefix='', allow=true): '' prefix-matches every
-path at length 0, so it IS the RFC 9309 default-allow — no special-casing
-downstream, and the host is never re-fetched.
+R1: rules are fetched once per host (mapInPandas fetch — synthetic in
+sandbox, HTTP in production): for the seed hosts at init, and for each
+epoch's insert hosts that have no rules yet (left_anti discovery).  Every
+host that ever holds a frontier row therefore has rules before any pending
+scan can pop it.  Rule-less hosts get a marker row (rule_order=-1,
+path_prefix='', allow=true): '' prefix-matches every path at length 0, so
+it IS the RFC 9309 default-allow — no special-casing downstream, and the
+host is never re-fetched.
 
 R2: zero-shuffle gate.  Rules are collapsed to one array per host (tiny
 table), broadcast-joined, and the longest-prefix match is evaluated with

@@ -16,6 +16,7 @@ from collections import defaultdict
 import pytest
 from pyspark.sql import functions as F
 
+import engine.crawl as crawlmod
 from engine.crawl import CrawlEngine
 from engine.schemas import FRONTIER
 from engine.synthgraph import TINY, gen_seed_urls
@@ -133,16 +134,15 @@ def test_committed_frontier_read_starts_no_job(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_cell_compaction_bounds_fragmentation(spark, tmp_path):
-    """With max_cell_dirs=1 every fragmented pending cell is rewritten to a
+def test_cell_compaction_bounds_fragmentation(spark, tmp_path, monkeypatch):
+    """With MAX_CELL_DIRS=1 every fragmented pending cell is rewritten to a
     single dir each epoch, terminal cells are left alone (one dir per epoch
     at most), and the committed frontier content is unchanged (same rows as
     an uncompacted run)."""
     a = CrawlEngine(spark, str(tmp_path / "a"), TINY, n_buckets=8, n_filter_parts=4)
-    b = CrawlEngine(
-        spark, str(tmp_path / "b"), TINY, n_buckets=8, n_filter_parts=4, max_cell_dirs=1
-    )
+    b = CrawlEngine(spark, str(tmp_path / "b"), TINY, n_buckets=8, n_filter_parts=4)
     a.run(EPOCHS, gen_seed_urls(TINY))
+    monkeypatch.setattr(crawlmod, "MAX_CELL_DIRS", 1)
     b.run(EPOCHS, gen_seed_urls(TINY))
     for cell, dirs in b.catalog.frontier_parts().items():
         limit = 1 if cell.startswith("pending/") else EPOCHS

@@ -17,6 +17,10 @@ from engine.urlnorm import canonicalize_url
 # Spark jobs of one TINY epoch (epoch 1 after init_run, test session
 # local[8] with 8 shuffle partitions); 41 before the dedup stage ran once
 TINY_EPOCH1_JOBS = 33
+# Spark jobs of init_run on TINY, same session; 16 while init_run
+# persisted and counted its robots rules and counted the frontier and the
+# budgets
+TINY_INIT_JOBS = 9
 
 
 def _plan_node_names(spark, plan) -> list[str]:
@@ -99,10 +103,16 @@ def test_extract_candidates_is_jvm_only(spark):
 
 @pytest.fixture(scope="module")
 def tiny_epoch(spark, tmp_path_factory):
-    """One TINY epoch after init_run: its job count and the physical plan
-    of the frame flag_new returns, captured while the epoch's caches live."""
+    """init_run and one TINY epoch after it: the job count of each, the
+    persistent-RDD count init_run left behind, and the physical plan of the
+    frame flag_new returns, captured while the epoch's caches live."""
     eng = CrawlEngine(spark, str(tmp_path_factory.mktemp("dedup")), TINY)
+    tracker = spark.sparkContext.statusTracker()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before, n_persisted = set(tracker.getJobIdsForGroup()), persisted().size()
     eng.init_run(gen_seed_urls(TINY))
+    after_init = set(tracker.getJobIdsForGroup())
+    init = {"jobs": len(after_init - before), "persisted": persisted().size() - n_persisted}
     plans = []
     flag_new = seenmod.flag_new
 
@@ -111,17 +121,15 @@ def tiny_epoch(spark, tmp_path_factory):
         plans.append(df._jdf.queryExecution().executedPlan())
         return df
 
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
     with pytest.MonkeyPatch.context() as m:
         m.setattr(seenmod, "flag_new", capture)
         eng.run_epoch(1)
-    n_jobs = len(set(tracker.getJobIdsForGroup()) - before)
-    return n_jobs, [_plan_node_names(spark, p) for p in plans]
+    n_jobs = len(set(tracker.getJobIdsForGroup()) - after_init)
+    return init, n_jobs, [_plan_node_names(spark, p) for p in plans]
 
 
 def test_dedup_frame_plans_one_probe_and_one_extract(tiny_epoch):
-    _, plans = tiny_epoch
+    _, _, plans = tiny_epoch
     assert len(plans) == 1
     names = plans[0]
     assert names.count("FlatMapCoGroupsInPandas") == 1, names
@@ -130,5 +138,12 @@ def test_dedup_frame_plans_one_probe_and_one_extract(tiny_epoch):
 
 
 def test_tiny_epoch_job_count(tiny_epoch):
-    n_jobs, _ = tiny_epoch
+    _, n_jobs, _ = tiny_epoch
     assert n_jobs == TINY_EPOCH1_JOBS
+
+
+def test_tiny_init_job_count(tiny_epoch):
+    """init_run observes its row counts on its writes: no count job, and
+    no cache left behind."""
+    init, _, _ = tiny_epoch
+    assert init == {"jobs": TINY_INIT_JOBS, "persisted": 0}

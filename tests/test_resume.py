@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 import engine.crawl as crawlmod
 from engine import seen as seenmod
 from engine.crawl import CrawlEngine
+from engine.schemas import ROBOTS_RULES
 from engine.synthgraph import GraphConfig, gen_seed_urls
 from pyref.oracle import run_crawl as oracle_run
 
@@ -132,32 +133,51 @@ def test_politeness_never_exceeded(spark, tmp_path):
         assert r["mx"] == r["n"] - 1  # dense 0-based sequence
 
 
-def test_robots_off_history_bootstraps_on_reopen(spark, tmp_path):
-    """A robots-off history must NOT vouch robots coverage: re-opening the
-    catalog with robots enabled has to take the bootstrap fetch for hosts
-    discovered during the robots-off epochs (regression: ``robots_complete``
-    was committed True unconditionally, silently default-allowing them)."""
-    seeds = gen_seed_urls(SMALL)
-    root = str(tmp_path / "r")
-    eng_off = CrawlEngine(spark, root, SMALL, n_filter_parts=4, salt=4, use_robots=False)
-    eng_off.run(1, seeds=seeds)
-    cat = eng_off.catalog
-    assert cat.manifest(cat.last_epoch())["meta"]["robots_complete"] is False
+def test_robots_rules_cover_every_frontier_host(spark, tmp_path):
+    """R1 needs no bootstrap: after init_run and after every epoch, each
+    host holding a frontier row (any status) has committed robots rules,
+    and the manifest's robots_rules row count is the committed table's.
+    Half the hosts are seeded, so later epochs discover the rest."""
+    eng = CrawlEngine(spark, str(tmp_path / "r"), SMALL, n_filter_parts=4, salt=4)
+    eng.init_run(gen_seed_urls(SMALL)[: SMALL.n_hosts // 2])
+    cat = eng.catalog
+    n_rule_hosts = []
+    for epoch in range(4):
+        if epoch:
+            eng.run_epoch(epoch)
+        assert cat.last_epoch() == epoch
+        frontier_hosts = {
+            r["host"] for r in cat.read_snapshot("frontier").select("host").distinct().collect()
+        }
+        rules = cat.read_snapshot("robots_rules")
+        rule_hosts = {r["host"] for r in rules.select("host").distinct().collect()}
+        assert frontier_hosts and frontier_hosts <= rule_hosts, epoch
+        assert cat.manifest(epoch)["snapshots"]["robots_rules"]["rows"] == rules.count(), epoch
+        n_rule_hosts.append(len(rule_hosts))
+    assert n_rule_hosts[-1] > n_rule_hosts[0], "fixture must discover hosts after init"
 
-    eng_on = CrawlEngine(spark, root, SMALL, n_filter_parts=4, salt=4, use_robots=True)
-    eng_on.run(2, seeds=seeds, resume=True)
-    cat = eng_on.catalog
-    assert cat.manifest(cat.last_epoch())["meta"]["robots_complete"] is True
-    pending_hosts = {
-        r["host"]
-        for r in cat.read_snapshot("frontier")
-        .where(F.col("status") == "pending")
-        .select("host")
-        .distinct()
-        .collect()
-    }
-    rule_hosts = {
-        r["host"]
-        for r in cat.read_snapshot("robots_rules").select("host").distinct().collect()
-    }
-    assert pending_hosts <= rule_hosts, "bootstrap must cover robots-off-era hosts"
+
+def test_failed_init_leaves_no_commit_or_cache(spark, tmp_path, monkeypatch, two_epoch_state):
+    """A raise inside init_run's robots write (the fetcher's Python worker
+    fails) commits nothing, leaves no cache persisted, and a resume then
+    reaches the uninterrupted run's state."""
+
+    def failing_fetch(hosts, cfg, epoch):
+        def boom(batches):
+            raise RuntimeError("injected fault in fetch_robots")
+            yield  # a generator: the raise runs in the Python worker
+
+        return hosts.select("host").mapInPandas(boom, ROBOTS_RULES)
+
+    eng = CrawlEngine(spark, str(tmp_path / "i"), SMALL, n_filter_parts=4, salt=4)
+    sc = spark.sparkContext
+    n_persisted = sc._jsc.getPersistentRDDs().size()
+    with monkeypatch.context() as m:
+        m.setattr(crawlmod, "fetch_robots", failing_fetch)
+        with pytest.raises(Exception, match="injected fault"):
+            eng.init_run(gen_seed_urls(SMALL))
+    assert eng.catalog.last_epoch() is None
+    assert sc._jsc.getPersistentRDDs().size() == n_persisted
+
+    eng.run(2, seeds=gen_seed_urls(SMALL), resume=True)
+    assert _final_state(eng) == two_epoch_state

@@ -1,6 +1,7 @@
 """Unit tests: C1 vectors, xxh64 parity, robots matching, bloom round-trip,
-the seen-filter probe, and the CI gates against per-row Python and
-unreferenced engine definitions (SURVEY.md §5.3, §5.7)."""
+the seen-filter probe, and the CI gates against per-row Python,
+unreferenced engine definitions and engine options no caller sets
+(SURVEY.md §5.3, §5.7)."""
 
 from __future__ import annotations
 
@@ -137,6 +138,28 @@ def test_engine_defs_are_referenced():
             if sum(len(word.findall(t)) for t in texts.values()) == own:
                 unreferenced.append(f"{py.name}:{node.name}")
     assert not unreferenced, f"engine definitions nothing references: {unreferenced}"
+
+
+def test_engine_options_are_set_by_a_caller():
+    """Every keyword option of CrawlEngine.__init__ is set by a non-test
+    caller (run_crawl.py, bench.py, perfbench/ or tools/): an option that
+    only tests set is a knob nothing needs."""
+    import inspect
+
+    from engine.crawl import CrawlEngine
+
+    repo = Path(__file__).resolve().parent.parent
+    files = [repo / "run_crawl.py", repo / "bench.py"]
+    files += list((repo / "perfbench").glob("*.py")) + list((repo / "tools").glob("*.py"))
+    text = "\n".join(p.read_text() for p in files)
+    params = inspect.signature(CrawlEngine.__init__).parameters.values()
+    options = [p.name for p in params if p.kind is p.KEYWORD_ONLY]
+    unset = [
+        name
+        for name in options
+        if not re.search(rf"\b{name}\s*=(?!=)|[\"']{name}[\"']", text)
+    ]
+    assert options and not unset, f"CrawlEngine options no caller sets: {unset}"
 
 
 def test_seed_ingest_from_text_file(spark, tmp_path):
