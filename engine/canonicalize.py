@@ -50,10 +50,16 @@ def path_expr(url_col: str = "url") -> Column:
     return F.regexp_extract(F.col(url_col), _PATH_RE, 1)
 
 
+def host_bucket_expr(n_buckets: int) -> Column:
+    """Frontier host bucket of the ``host`` column: the one rule that names
+    a row's pending cell, for frontier rows and fetched rows alike."""
+    return F.pmod(F.xxhash64(F.col("host")), F.lit(n_buckets)).cast("int")
+
+
 def with_url_keys(df: DataFrame, n_buckets: int, url_col: str = "url") -> DataFrame:
     """C2 + C3: url_hash, host, host_bucket columns from a canonical URL."""
     return (
         df.withColumn("url_hash", F.xxhash64(F.col(url_col)))
         .withColumn("host", host_expr(url_col))
-        .withColumn("host_bucket", F.pmod(F.xxhash64(F.col("host")), F.lit(n_buckets)).cast("int"))
+        .withColumn("host_bucket", host_bucket_expr(n_buckets))
     )

@@ -45,6 +45,9 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from engine.schemas import FRONTIER
 
 SNAPSHOT_TABLES = ("frontier", "seen_filter", "robots_rules", "politeness_budgets")
 APPEND_TABLES = ("documents", "crawl_log", "lineage", "metrics")
@@ -120,8 +123,8 @@ class SnapshotCatalog:
     def read_snapshot(self, table: str, epoch: int | None = None, schema=None) -> DataFrame:
         ep = self.last_epoch() if epoch is None else epoch
         entry = self.manifest(ep)["snapshots"][table]
-        if "parts" in entry:
-            return self.read_parts(entry["parts"], schema=schema)
+        if "parts" in entry:  # the cell-granular frontier
+            return self.read_parts(entry["parts"], schema=schema or FRONTIER)
         # "paths": append-list snapshot (robots delta dirs); "path": single dir
         paths = entry.get("paths") or [entry["path"]]
         reader = self.spark.read
@@ -154,16 +157,16 @@ class SnapshotCatalog:
     def read_parts(
         self,
         parts: dict,
+        schema: StructType,
         status: str | None = None,
         buckets: set[int] | None = None,
-        schema=None,
-    ) -> DataFrame | None:
-        """Union of the selected cells' leaf dirs; None when no cell matches
-        (caller supplies the empty frame — the catalog is schema-agnostic).
-        ``buckets`` selects bucketed (pending) cells only.  An explicit
-        ``schema`` skips footer-based schema inference, which is a Spark
-        job; the dir listing itself runs on the driver (engine/session.py
-        sets the parallel-listing threshold above any catalog's dir count)."""
+    ) -> DataFrame:
+        """Union of the selected cells' leaf dirs, read with ``schema``; an
+        empty frame of ``schema`` when no cell matches.  ``buckets`` selects
+        bucketed (pending) cells only.  The schema skips footer-based
+        schema inference, which is a Spark job; the dir listing itself runs
+        on the driver (engine/session.py sets the parallel-listing threshold
+        above any catalog's dir count)."""
         paths = []
         for cell, dirs in parts.items():
             st, _, bk = cell.partition("/")
@@ -173,11 +176,8 @@ class SnapshotCatalog:
                 continue
             paths.extend(dirs)
         if not paths:
-            return None
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(*paths)
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def read_appended(self, table: str, up_to_epoch: int | None = None) -> DataFrame | None:
         last = self.last_epoch() if up_to_epoch is None else up_to_epoch

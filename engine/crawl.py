@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from engine import seen as seenmod
-from engine.canonicalize import path_expr
+from engine.canonicalize import host_bucket_expr, path_expr
 from engine.catalog import SnapshotCatalog
 from engine.fetch import fetch_parse
 from engine.frontier import apply_updates, pop_frontier, retry_transition
@@ -216,8 +216,6 @@ class CrawlEngine:
         parts = prev_manifest["snapshots"]["frontier"]["parts"]
         frontier = cat.read_parts(parts, schema=FRONTIER)
         pending = cat.read_parts(parts, status="pending", schema=FRONTIER)
-        if pending is None:
-            pending = spark.createDataFrame([], FRONTIER)
 
         # --- R2 gate; R1 ran AHEAD (init_run / previous epoch's overlap) ---
         # The committed robots table already covers every host that has
@@ -305,7 +303,6 @@ class CrawlEngine:
             # so the failed-row consumers prune to the tiny okp=0 cells.  The
             # fetch metrics and the popped host_bucket set ride the write as
             # an observation (no stats job over the staged files).
-            bucket_of_host = F.pmod(F.xxhash64("host"), F.lit(self.n_buckets)).cast("int")
             fetched_dir = cat.stage_path(epoch, "fetched")
             retryable = (~F.col("ok")) & (F.col("retries") + 1 < F.lit(cfg.max_retries))
             fetch_obs = Observation(f"fetch_stats_e{epoch}")
@@ -317,7 +314,7 @@ class CrawlEngine:
                 .withColumn(
                     "n_outlinks", F.coalesce(F.size("outlinks"), F.lit(0)).cast("int")
                 )
-                .withColumn("host_bucket", bucket_of_host)
+                .withColumn("host_bucket", host_bucket_expr(self.n_buckets))
                 .observe(
                     fetch_obs,
                     F.count(F.when(F.col("ok"), 1)).alias("n_ok"),
@@ -362,8 +359,6 @@ class CrawlEngine:
                 pending_src = cat.read_parts(
                     parts, status="pending", buckets=touched, schema=FRONTIER
                 )
-                if pending_src is None:
-                    pending_src = spark.createDataFrame([], FRONTIER)
                 merged = apply_updates(pending_src.select(*cols), updates)
                 return self._write_cells(merged, os.path.join(fr_dir, "cells"))
 

@@ -32,7 +32,7 @@ def _check_nb(nb: int) -> int:
     outside its probe pair, producing FALSE NEGATIVES (measured: 7/17000
     at nb=7000) — and a seen-filter FN bypasses the exact D2 anti-join,
     breaking the engine's exactness contract.  Enforced everywhere a table
-    is created or decoded; callers derive nb via round_down_pow2."""
+    is created or decoded; callers derive nb via buckets_for."""
     if nb <= 0 or (nb & (nb - 1)) != 0:
         raise ValueError(f"cuckoo nb_buckets must be a power of two, got {nb}")
     return nb
@@ -43,6 +43,12 @@ def round_down_pow2(n: int) -> int:
     return 1 << max(0, n.bit_length() - 1)
 
 
+def buckets_for(nbits: int) -> int:
+    """Bucket count of the table stored in an ``nbits`` blob (the stash
+    aside): the largest power of two that fits."""
+    return round_down_pow2(nbits // (FP_BITS * SLOTS))
+
+
 def _fingerprint(h: np.ndarray) -> np.ndarray:
     """16-bit nonzero fingerprint from the high bits of the 64-bit hash."""
     fp = ((h.view(np.uint64) >> np.uint64(48)) & np.uint64(0xFFFF)).astype(np.uint16)
@@ -50,14 +56,19 @@ def _fingerprint(h: np.ndarray) -> np.ndarray:
     return fp
 
 
-def _bucket1(h: np.ndarray, nb: int) -> np.ndarray:
-    return (h.view(np.uint64) & np.uint64(nb - 1)).astype(np.int64)
-
-
-def _alt_bucket(b: np.ndarray, fp: np.ndarray, nb: int) -> np.ndarray:
+def _alt_bucket(b, fp, nb: int) -> np.ndarray:
+    """The other bucket of ``fp``'s pair, elementwise (arrays or scalars)."""
     # standard partial-key cuckoo: alt = b XOR H(fp); H = splitmix-ish odd mult
-    hfp = (fp.astype(np.uint64) * np.uint64(0x5BD1E995)) & np.uint64(0xFFFFFFFF)
-    return ((b.view(np.uint64) ^ hfp) & np.uint64(nb - 1)).astype(np.int64)
+    hfp = (np.asarray(fp).astype(np.uint64) * np.uint64(0x5BD1E995)) & np.uint64(0xFFFFFFFF)
+    b = np.asarray(b, dtype=np.int64).view(np.uint64)
+    return ((b ^ hfp) & np.uint64(nb - 1)).astype(np.int64)
+
+
+def _keys(hashes: np.ndarray, nb: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(fingerprint, bucket1, bucket2) of each hash in an ``nb``-bucket table."""
+    fp = _fingerprint(hashes)
+    b1 = (hashes.view(np.uint64) & np.uint64(nb - 1)).astype(np.int64)
+    return fp, b1, _alt_bucket(b1, fp, nb)
 
 
 def new_table(nb_buckets: int) -> np.ndarray:
@@ -82,9 +93,7 @@ def insert_many(table: np.ndarray, stash: np.ndarray, hashes: np.ndarray) -> np.
     pass places the easy majority; the eviction loop only touches the few
     collisions (amortized O(1) kicks/item at <=95% load)."""
     nb = len(table) // SLOTS
-    fp = _fingerprint(hashes)
-    b1 = _bucket1(hashes, nb)
-    b2 = _alt_bucket(b1, fp, nb)
+    fp, b1, b2 = _keys(hashes, nb)
     overflow: list[int] = []
     rng = np.random.default_rng(42)  # deterministic kick choice
     for f, x, y in zip(fp, b1, b2):
@@ -107,8 +116,7 @@ def insert_many(table: np.ndarray, stash: np.ndarray, hashes: np.ndarray) -> np.
             base = cur_b * SLOTS
             slot = int(rng.integers(SLOTS))
             cur_fp, table[base + slot] = int(table[base + slot]), cur_fp
-            hfp = (np.uint64(cur_fp) * np.uint64(0x5BD1E995)) & np.uint64(0xFFFFFFFF)
-            cur_b = int((np.uint64(cur_b) ^ hfp) & np.uint64(nb - 1))
+            cur_b = int(_alt_bucket(cur_b, cur_fp, nb))
             base = cur_b * SLOTS
             row = table[base : base + SLOTS]
             empt = np.flatnonzero(row == _EMPTY)
@@ -130,10 +138,7 @@ def insert_many(table: np.ndarray, stash: np.ndarray, hashes: np.ndarray) -> np.
 
 def probe_many(table: np.ndarray, stash: np.ndarray, hashes: np.ndarray) -> np.ndarray:
     """Vectorized membership: fp present in bucket1 or bucket2 (or stash)."""
-    nb = len(table) // SLOTS
-    fp = _fingerprint(hashes)
-    b1 = _bucket1(hashes, nb)
-    b2 = _alt_bucket(b1, fp, nb)
+    fp, b1, b2 = _keys(hashes, len(table) // SLOTS)
     hit = np.zeros(len(hashes), dtype=bool)
     for b in (b1, b2):
         rows = table[(b[:, None] * SLOTS + np.arange(SLOTS)[None, :])]
@@ -147,10 +152,7 @@ def delete_many(table: np.ndarray, stash: np.ndarray, hashes: np.ndarray) -> np.
     """O(1) deletion — the capability bloom lacks.  Removes ONE copy of
     each fingerprint from its bucket pair (or stash); safe only for items
     previously inserted (standard cuckoo-filter contract)."""
-    nb = len(table) // SLOTS
-    fp = _fingerprint(hashes)
-    b1 = _bucket1(hashes, nb)
-    b2 = _alt_bucket(b1, fp, nb)
+    fp, b1, b2 = _keys(hashes, len(table) // SLOTS)
     keep = np.ones(len(stash), dtype=bool)
     for f, x, y in zip(fp, b1, b2):
         done = False

@@ -1,15 +1,23 @@
 """D1/D2/D3 — partitioned URL-seen filter sidecar + exact dedup anti-join.
 
 The filter is cross-epoch persistent state (unlike Spark's per-query runtime
-bloom join pruning, which is also enabled — SURVEY.md §4 O8): one bloom blob
-per ``part_id = pmod(url_hash, N_FILTER_PARTS)`` partition, stored as a
-binary column row (SURVEY.md §1.2 seen_filter).  Probe (D1) and update (D3)
-are cogrouped ``applyInPandas`` (UD4) with numpy-vectorized k-hash bit ops —
-no per-row Python (BASELINE.json:6 "per-partition membership via
-Arrow-batched pandas UDFs").  The probe has one physical path: the
-candidate rows cross Arrow once and come back carrying their verdict
-(:func:`probe_filter`); the engine caches that result, so the two routes of
-:func:`flag_new` read one probe.
+bloom join pruning, which is also enabled — SURVEY.md §4 O8): one bloom or
+cuckoo (engine/cuckoo.py) blob per ``part_id = pmod(url_hash,
+N_FILTER_PARTS)`` partition, stored as a binary column row (SURVEY.md §1.2
+seen_filter).  The blob table has two Spark paths, both cogrouped
+``applyInPandas`` (UD4) with numpy-vectorized blob ops — no per-row Python
+(BASELINE.json:6 "per-partition membership via Arrow-batched pandas UDFs"):
+
+  * the probe (D1, :func:`probe_filter`): the candidate rows cross Arrow
+    once and come back carrying their verdict; the engine caches that
+    result, so the two routes of :func:`flag_new` read one probe;
+  * the rewrite (D3, :func:`_rewrite`), the only way blobs are written:
+    :func:`init_filter` rewrites one empty blob per part with the seed
+    hashes, :func:`update_filter` inserts an epoch's new hashes and
+    :func:`delete_from_filter` retires hashes from a cuckoo blob.
+
+Each filter-kind rule is written once, in the three blob helpers
+``_empty_blob``, ``_probe_blob`` and ``_edit_blob``.
 
 Exactness guarantee: the filter only *routes* — candidates it has definitely
 never seen skip the expensive anti-join against the full frontier key set;
@@ -33,8 +41,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
+from engine import cuckoo
 from engine.schemas import SEEN_FILTER
 
+_COLS = [f.name for f in SEEN_FILTER.fields]
 DEFAULT_NBITS = 1 << 22  # 4 Mbit = 512 KiB per partition blob
 DEFAULT_NHASH = 5
 
@@ -67,49 +77,68 @@ def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
 
 def _empty_blob(kind: str, nbits: int) -> bytes:
     if kind == "cuckoo":
-        from engine import cuckoo
-
-        nb = cuckoo.round_down_pow2(nbits // (cuckoo.FP_BITS * cuckoo.SLOTS))
-        return cuckoo.to_blob(cuckoo.new_table(nb), np.array([], dtype=np.int64))
+        table = cuckoo.new_table(cuckoo.buckets_for(nbits))
+        return cuckoo.to_blob(table, np.array([], dtype=np.int64))
     return bytes(nbits // 8)
-
-
-def _build_blob(kind: str, nbits: int, nhash: int, h: np.ndarray) -> bytes:
-    if kind == "cuckoo":
-        from engine import cuckoo
-
-        nb = cuckoo.round_down_pow2(nbits // (cuckoo.FP_BITS * cuckoo.SLOTS))
-        table = cuckoo.new_table(nb)
-        stash = cuckoo.insert_many(table, np.array([], dtype=np.int64), h)
-        return cuckoo.to_blob(table, stash)
-    bits = np.zeros(nbits // 8, dtype=np.uint8)
-    if len(h):
-        _set_bits(bits, _positions(h, nbits, nhash))
-    return bits.tobytes()
 
 
 def _probe_blob(kind: str, nbits: int, nhash: int, blob: bytes, h: np.ndarray) -> np.ndarray:
     if kind == "cuckoo":
-        from engine import cuckoo
-
-        nb = cuckoo.round_down_pow2(nbits // (cuckoo.FP_BITS * cuckoo.SLOTS))
-        table, stash = cuckoo.from_blob(blob, nb)
-        return cuckoo.probe_many(table, stash, h)
-    bits = np.frombuffer(blob, dtype=np.uint8)
-    return _probe_bits(bits, _positions(h, nbits, nhash))
+        return cuckoo.probe_many(*cuckoo.from_blob(blob, cuckoo.buckets_for(nbits)), h)
+    return _probe_bits(np.frombuffer(blob, dtype=np.uint8), _positions(h, nbits, nhash))
 
 
-def _update_blob(kind: str, nbits: int, nhash: int, blob: bytes, h: np.ndarray) -> bytes:
+def _edit_blob(
+    kind: str, nbits: int, nhash: int, blob: bytes, h: np.ndarray, delete: bool
+) -> bytes:
+    """``blob`` with ``h`` inserted, or deleted (cuckoo only: a bloom
+    "delete" would silently corrupt the exactness routing contract)."""
     if kind == "cuckoo":
-        from engine import cuckoo
-
-        nb = cuckoo.round_down_pow2(nbits // (cuckoo.FP_BITS * cuckoo.SLOTS))
-        table, stash = cuckoo.from_blob(blob, nb)
-        stash = cuckoo.insert_many(table, stash, h)
+        table, stash = cuckoo.from_blob(blob, cuckoo.buckets_for(nbits))
+        stash = (cuckoo.delete_many if delete else cuckoo.insert_many)(table, stash, h)
         return cuckoo.to_blob(table, stash)
+    if delete:
+        raise ValueError(f"delete_from_filter requires kind='cuckoo', got {kind!r}")
     bits = np.frombuffer(blob, dtype=np.uint8).copy()
     _set_bits(bits, _positions(h, nbits, nhash))
     return bits.tobytes()
+
+
+def _rewrite(
+    blobs: DataFrame, hashes: DataFrame, n_parts: int, epoch: int, delete: bool
+) -> DataFrame:
+    """D3, the one path that writes blobs: cogroup ``hashes`` with the blob
+    rows by part_id (one shuffle of the hashes; the blobs stay
+    partition-aligned) and insert or delete each part's hashes.  A part
+    with no hashes keeps its row unchanged; an edited part takes ``epoch``
+    and ``n_items`` moves by the hash count, floored at 0.
+
+    NB: never union null rows into the url_hash column — a nullable int64
+    batch arrives in pandas as float64 and large hashes silently lose
+    precision (observed as bloom false negatives -> dedup leaks)."""
+    keyed = with_part_id(hashes.select("url_hash"), n_parts)
+
+    def edit(h_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
+        if blob_pdf.empty:
+            return pd.DataFrame(columns=_COLS)
+        if h_pdf.empty:
+            return blob_pdf[_COLS]
+        row = blob_pdf.iloc[0]
+        assert pd.api.types.is_integer_dtype(h_pdf["url_hash"]), "url_hash must stay int64"
+        h = h_pdf["url_hash"].to_numpy(dtype=np.int64)
+        nbits, nhash = int(row["nbits"]), int(row["nhash"])
+        blob = _edit_blob(row["kind"], nbits, nhash, row["bits"], h, delete)
+        n_items = int(row["n_items"]) + (-len(h) if delete else len(h))
+        return pd.DataFrame(
+            [(int(row["part_id"]), row["kind"], nbits, nhash, blob, max(0, n_items), epoch)],
+            columns=_COLS,
+        )
+
+    return (
+        keyed.groupBy("part_id")
+        .cogroup(blobs.groupBy("part_id"))
+        .applyInPandas(edit, SEEN_FILTER)
+    )
 
 
 def init_filter(
@@ -120,35 +149,16 @@ def init_filter(
     nhash: int = DEFAULT_NHASH,
     kind: str = "bloom",
 ) -> DataFrame:
-    """Build blobs for ALL n_parts partitions, seeded with ``hashes``.
+    """Blobs for ALL n_parts partitions, seeded with ``hashes``: the D3
+    rewrite of one empty blob row per part, at epoch 0.
 
     ``kind``: 'bloom' (engine default) or 'cuckoo' (engine/cuckoo.py —
     lower FPR at equal bits, supports deletion; BASELINE.json:6 names
     both).  Probe/update dispatch on the kind stored in each blob row, so
     mixed catalogs read correctly.
     """
-    # NB: never union null rows into the url_hash column — a nullable int64
-    # batch arrives in pandas as float64 and large hashes silently lose
-    # precision (observed as bloom false negatives -> dedup leaks).
-    seeded = with_part_id(hashes.select("url_hash"), n_parts)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = int(pdf["part_id"].iloc[0])
-        h = pdf["url_hash"].to_numpy(dtype=np.int64)
-        assert h.dtype == np.int64
-        blob = _build_blob(kind, nbits, nhash, h)
-        return pd.DataFrame(
-            [(part, kind, nbits, nhash, blob, len(h), 0)],
-            columns=["part_id", "kind", "nbits", "nhash", "bits", "n_items", "epoch"],
-        )
-
-    built = seeded.groupBy("part_id").applyInPandas(build, SEEN_FILTER)
-
-    # partitions with no seed hashes still need an (empty) blob row
-    parts = spark.range(n_parts).select(F.col("id").cast("int").alias("part_id"))
-    missing = parts.join(built.select("part_id"), "part_id", "left_anti")
-    empty_blobs = missing.select(
-        "part_id",
+    empty = spark.range(n_parts).select(
+        F.col("id").cast("int").alias("part_id"),
         F.lit(kind).alias("kind"),
         F.lit(nbits).cast("long").alias("nbits"),
         F.lit(nhash).cast("int").alias("nhash"),
@@ -156,7 +166,7 @@ def init_filter(
         F.lit(0).cast("long").alias("n_items"),
         F.lit(0).cast("int").alias("epoch"),
     )
-    return built.unionByName(empty_blobs)
+    return _rewrite(empty, hashes, n_parts, 0, delete=False)
 
 
 def probe_filter(candidates: DataFrame, blobs: DataFrame, n_parts: int) -> DataFrame:
@@ -166,7 +176,7 @@ def probe_filter(candidates: DataFrame, blobs: DataFrame, n_parts: int) -> DataF
     vectorized per partition: the rows cross Arrow once and come back with
     their verdict, so no join-back is needed.  Integer columns must be
     null-free: a nullable int64 batch arrives in pandas as float64 (see
-    :func:`init_filter`)."""
+    :func:`_rewrite`)."""
     cands = with_part_id(candidates, n_parts)
     out_schema = StructType(cands.schema.fields + [StructField("maybe_seen", BooleanType())])
     cols = cands.columns
@@ -195,39 +205,8 @@ def probe_filter(candidates: DataFrame, blobs: DataFrame, n_parts: int) -> DataF
 
 
 def update_filter(blobs: DataFrame, new_hashes: DataFrame, n_parts: int, epoch: int) -> DataFrame:
-    """D3: new blob snapshot with the epoch's inserted hashes OR'd in."""
-    news = with_part_id(new_hashes.select("url_hash"), n_parts)
-
-    def upd(new_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
-        if blob_pdf.empty:
-            return pd.DataFrame(columns=[f.name for f in SEEN_FILTER.fields])
-        row = blob_pdf.iloc[0]
-        if new_pdf.empty:
-            return blob_pdf[[f.name for f in SEEN_FILTER.fields]]
-        nbits, nhash = int(row["nbits"]), int(row["nhash"])
-        assert pd.api.types.is_integer_dtype(new_pdf["url_hash"]), "url_hash must stay int64"
-        h = new_pdf["url_hash"].to_numpy(dtype=np.int64)
-        blob = _update_blob(row["kind"], nbits, nhash, row["bits"], h)
-        return pd.DataFrame(
-            [
-                (
-                    int(row["part_id"]),
-                    row["kind"],
-                    nbits,
-                    nhash,
-                    blob,
-                    int(row["n_items"]) + len(h),
-                    epoch,
-                )
-            ],
-            columns=[f.name for f in SEEN_FILTER.fields],
-        )
-
-    return (
-        news.groupBy("part_id")
-        .cogroup(blobs.groupBy("part_id"))
-        .applyInPandas(upd, SEEN_FILTER)
-    )
+    """D3: new blob snapshot with the epoch's inserted hashes added."""
+    return _rewrite(blobs, new_hashes, n_parts, epoch, delete=False)
 
 
 def delete_from_filter(
@@ -244,52 +223,9 @@ def delete_from_filter(
     TTL, so the engine loop deliberately does NOT call this; it is the
     catalog-level primitive the recrawl flow plugs into, kept correct by
     the round-trip test (tests/test_cuckoo.py::test_delete_from_filter_*).
-    Calling it on a bloom blob raises — silently "deleting" from a bloom
-    would corrupt the exactness routing contract.
-
-    Same cogrouped applyInPandas shape as update_filter: one shuffle of the
-    retired hashes by part_id, blobs stay partition-aligned.
+    Calling it on a bloom blob raises a ValueError when the job runs.
     """
-    gone = with_part_id(gone_hashes.select("url_hash"), n_parts)
-
-    def rm(gone_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
-        if blob_pdf.empty:
-            return pd.DataFrame(columns=[f.name for f in SEEN_FILTER.fields])
-        row = blob_pdf.iloc[0]
-        if gone_pdf.empty:
-            return blob_pdf[[f.name for f in SEEN_FILTER.fields]]
-        if row["kind"] != "cuckoo":
-            raise ValueError(
-                f"delete_from_filter requires kind='cuckoo', got {row['kind']!r}"
-            )
-        from engine import cuckoo
-
-        assert pd.api.types.is_integer_dtype(gone_pdf["url_hash"]), "url_hash must stay int64"
-        h = gone_pdf["url_hash"].to_numpy(dtype=np.int64)
-        nbits = int(row["nbits"])
-        nb = cuckoo.round_down_pow2(nbits // (cuckoo.FP_BITS * cuckoo.SLOTS))
-        table, stash = cuckoo.from_blob(row["bits"], nb)
-        stash = cuckoo.delete_many(table, stash, h)
-        return pd.DataFrame(
-            [
-                (
-                    int(row["part_id"]),
-                    row["kind"],
-                    nbits,
-                    int(row["nhash"]),
-                    cuckoo.to_blob(table, stash),
-                    max(0, int(row["n_items"]) - len(h)),
-                    epoch,
-                )
-            ],
-            columns=[f.name for f in SEEN_FILTER.fields],
-        )
-
-    return (
-        gone.groupBy("part_id")
-        .cogroup(blobs.groupBy("part_id"))
-        .applyInPandas(rm, SEEN_FILTER)
-    )
+    return _rewrite(blobs, gone_hashes, n_parts, epoch, delete=True)
 
 
 def flag_new(candidates_probed: DataFrame, frontier_keys: DataFrame) -> DataFrame:

@@ -57,17 +57,47 @@ def test_blob_serialization_roundtrip():
 @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
 def test_spark_filter_roundtrip_both_kinds(spark, kind):
     """init -> probe -> update -> probe through the Spark cogroup path;
-    zero false negatives for both filter kinds."""
-    nbits = 1 << 20
+    zero false negatives for both filter kinds.  The sparse key set seeds
+    fewer parts than exist and updates fewer still: init_filter returns
+    one row per part, an unseeded part's row is the empty blob at epoch 0,
+    and update_filter leaves a part that received no hashes unchanged."""
+    nbits, n_parts = 1 << 20, 4
     keys = spark.range(0, 20000).select(F.xxhash64("id").alias("url_hash"))
-    blobs = seenmod.init_filter(spark, keys, n_parts=4, nbits=nbits, kind=kind)
-    probed = seenmod.probe_filter(keys, blobs, n_parts=4)
-    assert probed.where(~F.col("maybe_seen")).count() == 0  # no FNs
     new = spark.range(20000, 25000).select(F.xxhash64("id").alias("url_hash"))
-    blobs2 = seenmod.update_filter(blobs, new, n_parts=4, epoch=1)
-    assert blobs2.select("kind").distinct().collect()[0]["kind"] == kind
-    probed2 = seenmod.probe_filter(new, blobs2, n_parts=4)
-    assert probed2.where(~F.col("maybe_seen")).count() == 0
+    part = F.pmod("url_hash", F.lit(n_parts))
+    inputs = [
+        (keys, new, set(range(n_parts)), set(range(n_parts))),
+        (keys.where(part < 2), new.where(part == 1), {0, 1}, {1}),
+    ]
+    for seed_keys, new_keys, seeded, touched in inputs:
+        assert {r[0] for r in seed_keys.select(part).distinct().collect()} == seeded
+        assert {r[0] for r in new_keys.select(part).distinct().collect()} == touched
+        blobs = seenmod.init_filter(spark, seed_keys, n_parts=n_parts, nbits=nbits, kind=kind)
+        blobs = blobs.persist()
+        probed = seenmod.probe_filter(seed_keys, blobs, n_parts=n_parts)
+        assert probed.where(~F.col("maybe_seen")).count() == 0  # no FNs
+        blobs2 = seenmod.update_filter(blobs, new_keys, n_parts=n_parts, epoch=1)
+        probed2 = seenmod.probe_filter(new_keys, blobs2, n_parts=n_parts)
+        assert probed2.where(~F.col("maybe_seen")).count() == 0
+
+        n_new = dict(new_keys.groupBy(part).count().collect())
+        before = {r["part_id"]: r for r in blobs.collect()}
+        after = {r["part_id"]: r for r in blobs2.collect()}
+        assert len(before) == len(after) == n_parts
+        assert set(before) == set(after) == set(range(n_parts))
+        for p in range(n_parts):
+            b, a = before[p], after[p]
+            assert b["kind"] == a["kind"] == kind
+            if p not in seeded:
+                assert (b["n_items"], b["epoch"]) == (0, 0), p
+                assert b["bits"] == seenmod._empty_blob(kind, nbits), p
+            if p in touched:
+                assert (a["n_items"], a["epoch"]) == (b["n_items"] + n_new[p], 1), p
+            else:
+                assert (a["n_items"], a["epoch"], a["bits"]) == (
+                    b["n_items"], b["epoch"], b["bits"]
+                ), p
+        blobs.unpersist()
 
 
 def test_delete_from_filter_roundtrip(spark):
@@ -120,13 +150,11 @@ def test_non_pow2_nb_rejected():
 def test_no_false_negatives_at_derived_nb():
     """seen.py derives nb from an arbitrary public nbits arg: the pow2
     round-down must keep the no-FN guarantee for awkward nbits values."""
-    from engine.seen import _build_blob, _probe_blob
-
-    from engine.cuckoo import FP_BITS, SLOTS, round_down_pow2
+    from engine.seen import _edit_blob, _empty_blob, _probe_blob
 
     rng = np.random.default_rng(7)
     for nbits in ((1 << 22) - 8192, 7000 * 64, 6000 * 64):
-        cap = round_down_pow2(nbits // (FP_BITS * SLOTS)) * SLOTS
+        cap = cuckoo.buckets_for(nbits) * cuckoo.SLOTS
         items = rng.integers(-(2**62), 2**62, int(cap * 0.6), dtype=np.int64)
-        blob = _build_blob("cuckoo", nbits, 5, items)
+        blob = _edit_blob("cuckoo", nbits, 5, _empty_blob("cuckoo", nbits), items, delete=False)
         assert _probe_blob("cuckoo", nbits, 5, blob, items).all(), nbits

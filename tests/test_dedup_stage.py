@@ -101,6 +101,17 @@ def test_extract_candidates_is_jvm_only(spark):
     ]
 
 
+def test_init_filter_plans_one_cogroup(spark):
+    """init_filter is the D3 rewrite of one empty blob row per part: one
+    cogroup, with no separate seed build and no union for unseeded parts."""
+    keys = spark.range(0, 100).select(F.xxhash64("id").alias("url_hash"))
+    blobs = seenmod.init_filter(spark, keys, n_parts=4, nbits=1 << 16)
+    names = _plan_node_names(spark, blobs._jdf.queryExecution().executedPlan())
+    assert names.count("FlatMapCoGroupsInPandas") == 1, names
+    assert "FlatMapGroupsInPandas" not in names, names
+    assert "Union" not in names, names
+
+
 @pytest.fixture(scope="module")
 def tiny_epoch(spark, tmp_path_factory):
     """init_run and one TINY epoch after it: the job count of each, the
