@@ -49,9 +49,6 @@ from pyspark.sql.types import StructType
 
 from engine.schemas import FRONTIER
 
-SNAPSHOT_TABLES = ("frontier", "seen_filter", "robots_rules", "politeness_budgets")
-APPEND_TABLES = ("documents", "crawl_log", "lineage", "metrics")
-
 
 class SnapshotCatalog:
     def __init__(self, spark: SparkSession, root: str):
@@ -120,9 +117,8 @@ class SnapshotCatalog:
                 shutil.rmtree(os.path.join(staging, name), ignore_errors=True)
 
     # ---- reads (always of committed state only) ----
-    def read_snapshot(self, table: str, epoch: int | None = None, schema=None) -> DataFrame:
-        ep = self.last_epoch() if epoch is None else epoch
-        entry = self.manifest(ep)["snapshots"][table]
+    def read_snapshot(self, table: str, schema=None) -> DataFrame:
+        entry = self.manifest(self.last_epoch())["snapshots"][table]
         if "parts" in entry:  # the cell-granular frontier
             return self.read_parts(entry["parts"], schema=schema or FRONTIER)
         # "paths": append-list snapshot (robots delta dirs); "path": single dir
@@ -179,8 +175,8 @@ class SnapshotCatalog:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*paths)
 
-    def read_appended(self, table: str, up_to_epoch: int | None = None) -> DataFrame | None:
-        last = self.last_epoch() if up_to_epoch is None else up_to_epoch
+    def read_appended(self, table: str) -> DataFrame | None:
+        last = self.last_epoch()
         if last is None:
             return None
         paths = []

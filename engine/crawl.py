@@ -99,15 +99,11 @@ class CrawlEngine:
         self.bench_budget = bench_budget
         self.filter_kind = filter_kind
         self.catalog = SnapshotCatalog(spark, root)
-        self._budgets: DataFrame | None = None  # cross-epoch cache (immutable dim)
 
     # ------------------------------------------------------------------ init
     def init_run(self, seeds: list[str]) -> None:
         """Epoch-0 commit: frontier from seeds, budgets, seed-host robots, filter."""
         cat = self.catalog
-        if self._budgets is not None:
-            self._budgets.unpersist()
-            self._budgets = None
         fr_obs = Observation("seed_frontier")
         frontier = seeds_to_frontier(self.spark, seeds, self.n_buckets).observe(
             fr_obs, F.count(F.lit(1)).alias("n")
@@ -198,11 +194,7 @@ class CrawlEngine:
             return wrapped
 
         spark, cat, cfg = self.spark, self.catalog, self.cfg
-        if self._budgets is None:
-            # politeness budgets are immutable after init: cache the tiny
-            # per-host dim across epochs instead of re-reading parquet
-            self._budgets = cat.read_snapshot("politeness_budgets").persist()
-        budgets = self._budgets
+        budgets = cat.read_snapshot("politeness_budgets", schema=POLITENESS_BUDGETS)
         prev_epoch = cat.last_epoch()
         prev_manifest = cat.manifest(prev_epoch)
         prev_meta = prev_manifest["meta"]

@@ -4,15 +4,14 @@ BASELINE.json:6 names a "partitioned cuckoo/bloom URL-seen filter";
 engine/seen.py is the bloom realization, this module the cuckoo one —
 same blob-per-partition storage contract (SEEN_FILTER schema, kind =
 'cuckoo'), same exactness story (the filter only routes; D2's anti-join
-stays exact), plus the cuckoo-specific wins: ~2-4x lower FPR at equal
-bits for fingerprint sizes >= 12, and O(1) deletion (needed if frontier
-rows are ever garbage-collected, which bloom cannot do).
+stays exact), plus the cuckoo-specific win: ~2-4x lower FPR at equal
+bits for fingerprint sizes >= 12.
 
 Layout inside ``bits``: ``nb`` buckets x 4 slots of uint16 fingerprints
 (0 = empty), little-endian, plus a small spill stash of int64 hashes for
-items evicted past MAX_KICKS (bounded; counted in n_items).  All probe /
-insert paths are numpy-vectorized per Arrow batch — no per-row Python in
-the Spark path (BASELINE.json:15).
+items evicted past MAX_KICKS (bounded; counted in n_items).  The probe is
+numpy-vectorized per Arrow batch; the insert places each hash in a Python
+loop, so a cuckoo crawl pays per-URL Python in its D3 filter write.
 """
 
 from __future__ import annotations
@@ -89,9 +88,10 @@ def from_blob(blob: bytes, nb_buckets: int) -> tuple[np.ndarray, np.ndarray]:
 
 
 def insert_many(table: np.ndarray, stash: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-    """Bulk insert; returns the (possibly grown) stash.  Vectorized first
-    pass places the easy majority; the eviction loop only touches the few
-    collisions (amortized O(1) kicks/item at <=95% load)."""
+    """Bulk insert; returns the (possibly grown) stash.  The keys are
+    computed vectorized, then each hash is placed in a Python loop; the
+    eviction loop only touches the few collisions (amortized O(1)
+    kicks/item at <=95% load)."""
     nb = len(table) // SLOTS
     fp, b1, b2 = _keys(hashes, nb)
     overflow: list[int] = []
@@ -147,25 +147,3 @@ def probe_many(table: np.ndarray, stash: np.ndarray, hashes: np.ndarray) -> np.n
         hit |= np.isin(fp.astype(np.int64), stash)
     return hit
 
-
-def delete_many(table: np.ndarray, stash: np.ndarray, hashes: np.ndarray) -> np.ndarray:
-    """O(1) deletion — the capability bloom lacks.  Removes ONE copy of
-    each fingerprint from its bucket pair (or stash); safe only for items
-    previously inserted (standard cuckoo-filter contract)."""
-    fp, b1, b2 = _keys(hashes, len(table) // SLOTS)
-    keep = np.ones(len(stash), dtype=bool)
-    for f, x, y in zip(fp, b1, b2):
-        done = False
-        for b in (int(x), int(y)):
-            base = b * SLOTS
-            row = table[base : base + SLOTS]
-            idx = np.flatnonzero(row == f)
-            if len(idx):
-                table[base + idx[0]] = _EMPTY
-                done = True
-                break
-        if not done and len(stash):
-            idx = np.flatnonzero((stash == int(f)) & keep)
-            if len(idx):
-                keep[idx[0]] = False
-    return stash[keep]

@@ -24,9 +24,6 @@ from pyspark.sql import functions as F
 
 POP_ORDER = ("priority", "depth", "url_hash")
 
-# Terminal/active statuses (SURVEY.md §1.2; 'disallowed' added per robots gate)
-STATUSES = ("pending", "done", "failed", "disallowed")
-
 
 def pop_frontier(eligible: DataFrame, salt: int) -> DataFrame:
     """F5: per-host top-k pop; ``eligible`` must carry a per-host ``k`` column.

@@ -4,9 +4,10 @@ Lineage: one row per (epoch, stage, data file written by that stage) with
 the file's row count and the id of the Spark task that wrote it, plus the
 input/output snapshot ids — enough to audit which write task contributed
 what to each committed epoch (BASELINE.json:14 "per-partition lineage rows
-and metrics").  Both tables are written on the driver with pyarrow: the
-row counts come from the parquet footers of files the epoch already wrote,
-so neither costs a Spark job.
+and metrics").  Both tables are written on the driver with pyarrow, typed
+by the arrow form of their engine/schemas.py schemas: the row counts come
+from the parquet footers of files the epoch already wrote, so neither
+costs a Spark job.
 """
 
 from __future__ import annotations
@@ -15,6 +16,9 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from engine.schemas import LINEAGE, METRICS
 
 
 def _write_table(path: str, table: pa.Table) -> None:
@@ -41,7 +45,7 @@ def write_lineage_parquet(
 ) -> int:
     """Write the lineage rows of the files under each stage's dirs; returns
     the row count.  ``partition_id`` is the writing task's partition, taken
-    from Spark's ``part-NNNNN-...`` file name.  Schema mirrors LINEAGE."""
+    from Spark's ``part-NNNNN-...`` file name."""
     stages, pids, rows = [], [], []
     for stage, dirs in stage_dirs.items():
         for f in [f for d in dirs for f in _data_files(d)]:
@@ -49,34 +53,16 @@ def write_lineage_parquet(
             pids.append(int(os.path.basename(f).split("-")[1]))
             rows.append(pq.read_metadata(f).num_rows)
     n = len(rows)
-    _write_table(
-        path,
-        pa.table(
-            {
-                "epoch": pa.array([epoch] * n, pa.int32()),
-                "stage": pa.array(stages, pa.string()),
-                "partition_id": pa.array(pids, pa.int32()),
-                "rows_out": pa.array(rows, pa.int64()),
-                "input_snapshot": pa.array([input_snapshot] * n, pa.string()),
-                "output_snapshot": pa.array([output_snapshot] * n, pa.string()),
-            }
-        ),
-    )
+    # columns in LINEAGE's field order
+    cols = [[epoch] * n, stages, pids, rows, [input_snapshot] * n, [output_snapshot] * n]
+    _write_table(path, pa.table(cols, schema=to_arrow_schema(LINEAGE)))
     return n
 
 
 def write_metrics_parquet(path: str, epoch: int, values: dict[str, float]) -> None:
     """Driver-side metrics append — pyarrow write, zero Spark jobs (the
-    metrics are already scalars on the driver).  Schema mirrors METRICS so
-    ``spark.read.parquet`` unions it with any Spark-written epochs."""
+    metrics are already scalars on the driver)."""
     keys = sorted(values)
-    _write_table(
-        path,
-        pa.table(
-            {
-                "epoch": pa.array([epoch] * len(keys), pa.int32()),
-                "key": pa.array(keys, pa.string()),
-                "value": pa.array([float(values[k]) for k in keys], pa.float64()),
-            }
-        ),
-    )
+    # columns in METRICS' field order
+    cols = [[epoch] * len(keys), keys, [float(values[k]) for k in keys]]
+    _write_table(path, pa.table(cols, schema=to_arrow_schema(METRICS)))

@@ -24,17 +24,6 @@ SPAN_TYPE = StructType(
     ]
 )
 
-DOCUMENTS = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("spans", ArrayType(SPAN_TYPE)),
-        # engine-internal extras (nullable, SURVEY.md §1.2)
-        StructField("url", StringType()),
-        StructField("host", StringType()),
-        StructField("epoch", IntegerType()),
-    ]
-)
-
 FRONTIER = StructType(
     [
         StructField("url_hash", LongType(), False),
@@ -78,16 +67,6 @@ POLITENESS_BUDGETS = StructType(
         StructField("host", StringType()),
         StructField("max_fetches_per_epoch", IntegerType()),
         StructField("min_delay_s", DoubleType()),
-    ]
-)
-
-CRAWL_LOG = StructType(
-    [
-        StructField("epoch", IntegerType()),
-        StructField("host", StringType()),
-        StructField("fetch_seq_in_host", IntegerType()),
-        StructField("url", StringType()),
-        StructField("url_hash", LongType()),
     ]
 )
 

@@ -5,19 +5,20 @@ bloom join pruning, which is also enabled — SURVEY.md §4 O8): one bloom or
 cuckoo (engine/cuckoo.py) blob per ``part_id = pmod(url_hash,
 N_FILTER_PARTS)`` partition, stored as a binary column row (SURVEY.md §1.2
 seen_filter).  The blob table has two Spark paths, both cogrouped
-``applyInPandas`` (UD4) with numpy-vectorized blob ops — no per-row Python
-(BASELINE.json:6 "per-partition membership via Arrow-batched pandas UDFs"):
+``applyInPandas`` (UD4) over Arrow batches (BASELINE.json:6 "per-partition
+membership via Arrow-batched pandas UDFs"), numpy-vectorized except the
+cuckoo insert's per-hash loop (engine/cuckoo.py ``insert_many``):
 
   * the probe (D1, :func:`probe_filter`): the candidate rows cross Arrow
     once and come back carrying their verdict; the engine caches that
     result, so the two routes of :func:`flag_new` read one probe;
   * the rewrite (D3, :func:`_rewrite`), the only way blobs are written:
-    :func:`init_filter` rewrites one empty blob per part with the seed
-    hashes, :func:`update_filter` inserts an epoch's new hashes and
-    :func:`delete_from_filter` retires hashes from a cuckoo blob.
+    :func:`init_filter` inserts the seed hashes into one empty blob per
+    part and :func:`update_filter` an epoch's new hashes.  The crawl is
+    single-pass, so no hash is ever removed.
 
 Each filter-kind rule is written once, in the three blob helpers
-``_empty_blob``, ``_probe_blob`` and ``_edit_blob``.
+``_empty_blob``, ``_probe_blob`` and ``_insert_blob``.
 
 Exactness guarantee: the filter only *routes* — candidates it has definitely
 never seen skip the expensive anti-join against the full frontier key set;
@@ -88,30 +89,24 @@ def _probe_blob(kind: str, nbits: int, nhash: int, blob: bytes, h: np.ndarray) -
     return _probe_bits(np.frombuffer(blob, dtype=np.uint8), _positions(h, nbits, nhash))
 
 
-def _edit_blob(
-    kind: str, nbits: int, nhash: int, blob: bytes, h: np.ndarray, delete: bool
-) -> bytes:
-    """``blob`` with ``h`` inserted, or deleted (cuckoo only: a bloom
-    "delete" would silently corrupt the exactness routing contract)."""
+def _insert_blob(kind: str, nbits: int, nhash: int, blob: bytes, h: np.ndarray) -> bytes:
+    """``blob`` with ``h`` inserted."""
     if kind == "cuckoo":
         table, stash = cuckoo.from_blob(blob, cuckoo.buckets_for(nbits))
-        stash = (cuckoo.delete_many if delete else cuckoo.insert_many)(table, stash, h)
+        stash = cuckoo.insert_many(table, stash, h)
         return cuckoo.to_blob(table, stash)
-    if delete:
-        raise ValueError(f"delete_from_filter requires kind='cuckoo', got {kind!r}")
     bits = np.frombuffer(blob, dtype=np.uint8).copy()
     _set_bits(bits, _positions(h, nbits, nhash))
     return bits.tobytes()
 
 
-def _rewrite(
-    blobs: DataFrame, hashes: DataFrame, n_parts: int, epoch: int, delete: bool
-) -> DataFrame:
+def _rewrite(blobs: DataFrame, hashes: DataFrame, n_parts: int, epoch: int) -> DataFrame:
     """D3, the one path that writes blobs: cogroup ``hashes`` with the blob
     rows by part_id (one shuffle of the hashes; the blobs stay
-    partition-aligned) and insert or delete each part's hashes.  A part
-    with no hashes keeps its row unchanged; an edited part takes ``epoch``
-    and ``n_items`` moves by the hash count, floored at 0.
+    partition-aligned) and insert each part's hashes.  A part with no
+    hashes keeps its row unchanged; an edited part takes ``epoch`` and
+    ``n_items`` grows by the hash count.  A part without a blob row fails
+    the job (:func:`init_filter` writes a row for every part).
 
     NB: never union null rows into the url_hash column — a nullable int64
     batch arrives in pandas as float64 and large hashes silently lose
@@ -119,18 +114,17 @@ def _rewrite(
     keyed = with_part_id(hashes.select("url_hash"), n_parts)
 
     def edit(h_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
-        if blob_pdf.empty:
-            return pd.DataFrame(columns=_COLS)
         if h_pdf.empty:
             return blob_pdf[_COLS]
+        assert not blob_pdf.empty, "no blob row for a part with hashes to insert"
         row = blob_pdf.iloc[0]
         assert pd.api.types.is_integer_dtype(h_pdf["url_hash"]), "url_hash must stay int64"
         h = h_pdf["url_hash"].to_numpy(dtype=np.int64)
         nbits, nhash = int(row["nbits"]), int(row["nhash"])
-        blob = _edit_blob(row["kind"], nbits, nhash, row["bits"], h, delete)
-        n_items = int(row["n_items"]) + (-len(h) if delete else len(h))
+        blob = _insert_blob(row["kind"], nbits, nhash, row["bits"], h)
+        n_items = int(row["n_items"]) + len(h)
         return pd.DataFrame(
-            [(int(row["part_id"]), row["kind"], nbits, nhash, blob, max(0, n_items), epoch)],
+            [(int(row["part_id"]), row["kind"], nbits, nhash, blob, n_items, epoch)],
             columns=_COLS,
         )
 
@@ -153,9 +147,9 @@ def init_filter(
     rewrite of one empty blob row per part, at epoch 0.
 
     ``kind``: 'bloom' (engine default) or 'cuckoo' (engine/cuckoo.py —
-    lower FPR at equal bits, supports deletion; BASELINE.json:6 names
-    both).  Probe/update dispatch on the kind stored in each blob row, so
-    mixed catalogs read correctly.
+    lower FPR at equal bits; BASELINE.json:6 names both).  Probe/update
+    dispatch on the kind stored in each blob row, so mixed catalogs read
+    correctly.
     """
     empty = spark.range(n_parts).select(
         F.col("id").cast("int").alias("part_id"),
@@ -166,7 +160,7 @@ def init_filter(
         F.lit(0).cast("long").alias("n_items"),
         F.lit(0).cast("int").alias("epoch"),
     )
-    return _rewrite(empty, hashes, n_parts, 0, delete=False)
+    return _rewrite(empty, hashes, n_parts, 0)
 
 
 def probe_filter(candidates: DataFrame, blobs: DataFrame, n_parts: int) -> DataFrame:
@@ -184,10 +178,7 @@ def probe_filter(candidates: DataFrame, blobs: DataFrame, n_parts: int) -> DataF
     def probe(cand_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
         if cand_pdf.empty:
             return pd.DataFrame(columns=cols + ["maybe_seen"])
-        if blob_pdf.empty:  # no blob for this part => nothing ever seen here
-            out = cand_pdf.copy()
-            out["maybe_seen"] = False
-            return out
+        assert not blob_pdf.empty, "no blob row for a part with candidates to probe"
         row0 = blob_pdf.iloc[0]
         assert pd.api.types.is_integer_dtype(cand_pdf["url_hash"]), "url_hash must stay int64"
         h = cand_pdf["url_hash"].to_numpy(dtype=np.int64)
@@ -206,26 +197,7 @@ def probe_filter(candidates: DataFrame, blobs: DataFrame, n_parts: int) -> DataF
 
 def update_filter(blobs: DataFrame, new_hashes: DataFrame, n_parts: int, epoch: int) -> DataFrame:
     """D3: new blob snapshot with the epoch's inserted hashes added."""
-    return _rewrite(blobs, new_hashes, n_parts, epoch, delete=False)
-
-
-def delete_from_filter(
-    blobs: DataFrame, gone_hashes: DataFrame, n_parts: int, epoch: int
-) -> DataFrame:
-    """Retire hashes from a CUCKOO filter snapshot — the deletion capability
-    bloom lacks (engine/cuckoo.py delete_many).
-
-    Decision on engine wiring (VERDICT r02 #7): deletion's production use is
-    the RECRAWL path — frontier rows whose documents age past a TTL are
-    retired from the seen filter and re-inserted as pending, so the next
-    epoch re-fetches them through the normal D1/D2 pipeline.  The sandbox
-    crawl semantics (BASELINE.json:6) define a single-pass crawl with no
-    TTL, so the engine loop deliberately does NOT call this; it is the
-    catalog-level primitive the recrawl flow plugs into, kept correct by
-    the round-trip test (tests/test_cuckoo.py::test_delete_from_filter_*).
-    Calling it on a bloom blob raises a ValueError when the job runs.
-    """
-    return _rewrite(blobs, gone_hashes, n_parts, epoch, delete=True)
+    return _rewrite(blobs, new_hashes, n_parts, epoch)
 
 
 def flag_new(candidates_probed: DataFrame, frontier_keys: DataFrame) -> DataFrame:

@@ -2,14 +2,12 @@
 
 Every ``queries()`` entry with an ``oracle_sql()`` twin is executed on
 Spark and DuckDB over the same sf0.001 parquet and compared on row count,
-sorted column names, and the order-insensitive value multiset — exactly
-what CORRECTNESS_r{N}.json records at sf0.01.
+sorted column names, and the order-insensitive value multiset under
+tools/check_parity.py's ``normalize`` (a float never equals an int) —
+exactly what CORRECTNESS_r{N}.json records at sf0.01.
 """
 
 from __future__ import annotations
-
-import math
-from decimal import Decimal
 
 import duckdb
 import pytest
@@ -17,6 +15,7 @@ import pytest
 import __spark_entry__ as se
 from analytics.common import TABLES
 from tests.conftest import SF_TEST
+from tools.check_parity import normalize
 
 _QUERIES = se.queries()
 _ORACLES = se.oracle_sql()
@@ -31,21 +30,6 @@ def ddb():
         )
     yield con
     con.close()
-
-
-def _norm(v):
-    if isinstance(v, Decimal):
-        v = float(v)
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else f"{v:.10g}"
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return str(v)
-
-
-def _normalize(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
 
 
 def test_all_queries_have_unique_names():
@@ -67,7 +51,7 @@ def test_oracle_parity(spark, ddb, name):
     ddata = cur.fetchall()
     assert sorted(df.columns) == sorted(dcols), f"{name}: column names differ"
     assert len(sdata) == len(ddata), f"{name}: row count differs"
-    assert _normalize(sdata, df.columns) == _normalize(ddata, dcols), (
+    assert normalize(sdata, df.columns) == normalize(ddata, dcols), (
         f"{name}: value multiset differs"
     )
 

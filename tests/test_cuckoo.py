@@ -34,17 +34,6 @@ def test_fpr_below_bloom_equivalent():
     assert fpr < 0.005
 
 
-def test_deletion():
-    items = _rand_hashes(5000, 4)
-    table = cuckoo.new_table(4096)
-    stash = cuckoo.insert_many(table, np.array([], dtype=np.int64), items)
-    gone, kept = items[:2500], items[2500:]
-    stash = cuckoo.delete_many(table, stash, gone)
-    assert cuckoo.probe_many(table, stash, kept).all()  # no collateral FNs
-    # deleted items mostly gone (fp collisions with kept items allowed)
-    assert cuckoo.probe_many(table, stash, gone).mean() < 0.4
-
-
 def test_blob_serialization_roundtrip():
     items = _rand_hashes(1000, 5)
     table = cuckoo.new_table(1024)
@@ -100,37 +89,21 @@ def test_spark_filter_roundtrip_both_kinds(spark, kind):
         blobs.unpersist()
 
 
-def test_delete_from_filter_roundtrip(spark):
-    """Retire-hashes flow through the Spark cogroup path (seen.py D3⁻¹):
-    kept hashes keep zero FNs; deleted hashes drop back below the FPR
-    band; re-inserting a retired hash (the recrawl flow) probes positive
-    again."""
-    keys = spark.range(0, 20000).select(F.xxhash64("id").alias("url_hash"))
-    gone = keys.where(F.pmod("url_hash", F.lit(2)) == 0)
-    kept = keys.where(F.pmod("url_hash", F.lit(2)) != 0)
-    blobs = seenmod.init_filter(spark, keys, n_parts=4, nbits=1 << 21, kind="cuckoo")
-    blobs2 = seenmod.delete_from_filter(blobs, gone, n_parts=4, epoch=2).persist()
-    assert seenmod.probe_filter(kept, blobs2, n_parts=4).where(
-        ~F.col("maybe_seen")
-    ).count() == 0  # no collateral FNs
-    hit_rate = (
-        seenmod.probe_filter(gone, blobs2, n_parts=4)
-        .agg(F.avg(F.col("maybe_seen").cast("double")))
-        .collect()[0][0]
-    )
-    assert hit_rate < 0.05  # deleted items gone (fp collisions allowed)
-    blobs3 = seenmod.update_filter(blobs2, gone, n_parts=4, epoch=3)
-    assert seenmod.probe_filter(gone, blobs3, n_parts=4).where(
-        ~F.col("maybe_seen")
-    ).count() == 0  # recrawl re-insert restores membership
-    blobs2.unpersist()
-
-
-def test_delete_from_filter_rejects_bloom(spark):
-    keys = spark.range(0, 100).select(F.xxhash64("id").alias("url_hash"))
-    blobs = seenmod.init_filter(spark, keys, n_parts=2, nbits=1 << 16, kind="bloom")
-    with pytest.raises(Exception, match="cuckoo"):
-        seenmod.delete_from_filter(blobs, keys, n_parts=2, epoch=1).collect()
+@pytest.mark.parametrize("op", ["probe", "update"])
+def test_missing_blob_row_fails(spark, op):
+    """A part with no blob row fails the job: hashes routed to it are
+    neither dropped from the filter (update) nor routed as never seen past
+    the exact D2 anti-join (probe)."""
+    n_parts = 4
+    keys = spark.range(0, 1000).select(F.xxhash64("id").alias("url_hash"))
+    blobs = seenmod.init_filter(spark, keys, n_parts=n_parts, nbits=1 << 16)
+    blobs = blobs.where(F.col("part_id") != 2)
+    if op == "probe":
+        out = seenmod.probe_filter(keys, blobs, n_parts=n_parts)
+    else:
+        out = seenmod.update_filter(blobs, keys, n_parts=n_parts, epoch=1)
+    with pytest.raises(Exception, match="no blob row"):
+        out.collect()
 
 
 def test_non_pow2_nb_rejected():
@@ -150,11 +123,11 @@ def test_non_pow2_nb_rejected():
 def test_no_false_negatives_at_derived_nb():
     """seen.py derives nb from an arbitrary public nbits arg: the pow2
     round-down must keep the no-FN guarantee for awkward nbits values."""
-    from engine.seen import _edit_blob, _empty_blob, _probe_blob
+    from engine.seen import _empty_blob, _insert_blob, _probe_blob
 
     rng = np.random.default_rng(7)
     for nbits in ((1 << 22) - 8192, 7000 * 64, 6000 * 64):
         cap = cuckoo.buckets_for(nbits) * cuckoo.SLOTS
         items = rng.integers(-(2**62), 2**62, int(cap * 0.6), dtype=np.int64)
-        blob = _edit_blob("cuckoo", nbits, 5, _empty_blob("cuckoo", nbits), items, delete=False)
+        blob = _insert_blob("cuckoo", nbits, 5, _empty_blob("cuckoo", nbits), items)
         assert _probe_blob("cuckoo", nbits, 5, blob, items).all(), nbits

@@ -15,8 +15,9 @@ from engine.synthgraph import TINY, gen_seed_urls
 from engine.urlnorm import canonicalize_url
 
 # Spark jobs of one TINY epoch (epoch 1 after init_run, test session
-# local[8] with 8 shuffle partitions); 41 before the dedup stage ran once
-TINY_EPOCH1_JOBS = 33
+# local[8] with 8 shuffle partitions); 41 before the dedup stage ran once,
+# 33 while epoch 1 built a politeness-budgets cache the engine held
+TINY_EPOCH1_JOBS = 31
 # Spark jobs of init_run on TINY, same session; 16 while init_run
 # persisted and counted its robots rules and counted the frontier and the
 # budgets

@@ -68,11 +68,19 @@ def test_failed_epoch_leaves_no_writer_or_cache(
     after the gather (``write_lineage_parquet``) — keeps epoch 1
     committed, leaves no write running and no cache persisted, and a
     same-session retry of the epoch reaches the uninterrupted run's
-    state."""
+    state.  No cache outlives an epoch, committed or not: every RDD the
+    session holds persisted was persisted before the engine existed (caches
+    left by earlier tests may be cleaned meanwhile, so the ids are compared,
+    not the count)."""
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+
+    def new_persisted() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keySet()) - before
+
     eng = CrawlEngine(spark, str(tmp_path / "f"), SMALL, n_filter_parts=4, salt=4)
     eng.run(1, seeds=gen_seed_urls(SMALL))
-    sc = spark.sparkContext
-    n_persisted = sc._jsc.getPersistentRDDs().size()
+    assert not new_persisted(), "a cache outlived epoch 1"
 
     def fault(*args, **kwargs):
         if point == "flag_new":  # args[0]: the persisted probe result
@@ -88,9 +96,10 @@ def test_failed_epoch_leaves_no_writer_or_cache(
     crawl_log = eng.catalog.stage_path(2, "crawl_log")
     assert os.path.exists(os.path.join(crawl_log, "_SUCCESS")), "a write outlived the epoch"
     assert eng.catalog.last_epoch() == 1
-    assert sc._jsc.getPersistentRDDs().size() == n_persisted
+    assert not new_persisted()
 
     eng.run_epoch(2)
+    assert not new_persisted()
     assert _final_state(eng) == two_epoch_state
 
 

@@ -120,10 +120,10 @@ def test_no_per_row_python_gate():
 
 
 def test_engine_defs_are_referenced():
-    """Every top-level def/class in engine/ is referenced by name at least
-    once outside its own definition, in engine/, analytics/, tests/,
-    tools/, perfbench/ or a root script: code no caller reaches is deleted,
-    not kept."""
+    """Every top-level def, class and assigned name in engine/ is
+    referenced by name at least once outside its own definition, in
+    engine/, analytics/, tests/, tools/, perfbench/ or a root script: code
+    no caller reaches is deleted, not kept."""
     repo = Path(__file__).resolve().parent.parent
     dirs = ("engine", "analytics", "tests", "tools", "perfbench")
     files = [p for d in dirs for p in (repo / d).glob("*.py")] + list(repo.glob("*.py"))
@@ -131,12 +131,18 @@ def test_engine_defs_are_referenced():
     unreferenced = []
     for py in sorted((repo / "engine").glob("*.py")):
         for node in ast.parse(texts[py]).body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, ast.Assign):
+                targets = [n for t in node.targets for n in ast.walk(t)]
+                names = [n.id for n in targets if isinstance(n, ast.Name)]
+            else:
                 continue
-            word = re.compile(rf"\b{re.escape(node.name)}\b")
-            own = len(word.findall(ast.get_source_segment(texts[py], node)))
-            if sum(len(word.findall(t)) for t in texts.values()) == own:
-                unreferenced.append(f"{py.name}:{node.name}")
+            for name in names:
+                word = re.compile(rf"\b{re.escape(name)}\b")
+                own = len(word.findall(ast.get_source_segment(texts[py], node)))
+                if sum(len(word.findall(t)) for t in texts.values()) == own:
+                    unreferenced.append(f"{py.name}:{name}")
     assert not unreferenced, f"engine definitions nothing references: {unreferenced}"
 
 
