@@ -10,6 +10,8 @@ flip the driver's value hash.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -24,6 +26,30 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+def registry() -> tuple[dict, dict, Callable]:
+    """A module's query registry: ``QUERIES, ORACLE, q = registry()``.
+
+    ``@q(name, sql)`` registers the decorated query under ``name`` in
+    QUERIES and its DuckDB twin, if any, in ORACLE.  A name registered
+    twice in one module fails at import (a pasted @q block must not
+    silently replace the original query and its oracle);
+    ``__spark_entry__.queries()`` makes the same check across modules."""
+    queries: dict = {}
+    oracle: dict = {}
+
+    def q(name: str, sql: str | None = None):
+        def deco(fn):
+            assert name not in queries, f"duplicate query name {name}"
+            queries[name] = fn
+            if sql is not None:
+                oracle[name] = sql
+            return fn
+
+        return deco
+
+    return queries, oracle, q
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from analytics.common import load
+from analytics.common import load, registry
 from engine import seen as seenmod
 from engine.canonicalize import canonicalize_udf, with_url_keys
 from engine.fetch import fetch_parse
@@ -28,22 +28,7 @@ from engine.robots import robots_gate
 from engine.seed import seeds_to_frontier
 from engine.synthgraph import TINY, gen_seed_urls
 
-QUERIES: dict = {}
-ORACLE: dict = {}
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        # intra-module twin of __spark_entry__'s cross-module guard: a
-        # pasted-and-unrenamed @q block must fail loudly, not silently
-        # replace the original query and its oracle (r05 review)
-        assert name not in QUERIES, f"duplicate query name {name}"
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, q = registry()
 
 
 # one definition of the synthetic 211-host frontier key, shared by

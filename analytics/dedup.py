@@ -28,21 +28,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from analytics.common import load, load_spread
+from analytics.common import load, load_spread, registry
 
-QUERIES: dict = {}
-ORACLE: dict = {}
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        assert name not in QUERIES, f"duplicate query name {name}"
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, q = registry()
 
 
 # ------------------------------------------------------------- exact dedup
@@ -116,23 +104,48 @@ def _tri_expr():
 
 
 def _trigram_shingles(corpus: DataFrame) -> DataFrame:
-    """(doc_id, text) -> exploded (doc_id, shingle) rows.
+    """(doc_id, text) -> exploded (doc_id, n, shingle) rows, n = the doc's
+    distinct-shingle count.  Carrying the set size on every row lets the
+    index join's aggregate read |A| and |B| with first(): no per-doc sizes
+    table reads the shingle rows a third time, and none is joined back.
 
-    The explode wraps the trigram EXPRESSION, never a projected column:
-    exploding a column ref triggers Catalyst's InferFiltersFromGenerate,
-    which pushes size(col) > 0 AND isnotnull(col) into the scan Filter —
-    silently duplicating the whole interpreted trigram build per row
-    (measured 2.4 s -> 7 s on dedup_containment when routed through the
-    column form).  With the expression inside the Generate no such
-    filter is inferred."""
-    return _trigram_words(corpus).select(
-        "doc_id", F.explode(F.array_distinct(_tri_expr())).alias("shingle")
+    The distinct array is projected ONCE and size() + explode read that
+    column (the two-reference project is not collapsed, so the trigram
+    build runs once per doc).  explode_OUTER, because the inner explode of
+    a column ref triggers Catalyst's InferFiltersFromGenerate, which pushes
+    size(col) > 0 AND isnotnull(col) into the scan Filter — duplicating the
+    interpreted trigram build per row (measured 2.4 s -> 7 s on
+    dedup_containment).  The outer form emits nothing extra here:
+    _trigram_words already dropped every doc without a trigram.
+
+    Consumers must not group by n: Catalyst then infers
+    isnotnull(size(array_distinct(...))) and pushes it below load_spread's
+    repartition, serializing the trigram build on the scan partition
+    (measured 6.3-6.8 s against 2.2 s on dedup_ngram_jaccard at sf0.1,
+    local[4])."""
+    return (
+        _trigram_words(corpus)
+        .select("doc_id", F.array_distinct(_tri_expr()).alias("sh"))
+        .select("doc_id", F.size("sh").alias("n"), "sh")
+        .select("doc_id", "n", F.explode_outer("sh").alias("shingle"))
     )
 
 
-def _shingles(spark: SparkSession, sf: str) -> DataFrame:
-    """Exploded (doc_id, shingle) rows — the inverted-index join's input."""
-    return _trigram_shingles(load_spread(spark, sf, "documents"))
+def _pair_counts(shd: DataFrame) -> DataFrame:
+    """Inverted-index self-join of (doc_id, n, shingle) rows: one row per
+    ordered doc pair d1 < d2 sharing >= 1 shingle, with n_common and both
+    set sizes n1, n2.  Only shingle-sharing pairs ever materialize (never
+    all-pairs), and the count partial-aggregates map-side."""
+    a, b = shd.alias("a"), shd.alias("b")
+    return (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
+        .agg(
+            F.count("*").alias("n_common"),
+            F.first("a.n").alias("n1"),
+            F.first("b.n").alias("n2"),
+        )
+    )
 
 
 _SHINGLES_SQL = """
@@ -170,26 +183,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     """Exact trigram-Jaccard near-dup pairs via the inverted-index join —
     only pairs sharing ≥1 shingle are ever materialized (never all-pairs),
     which is the property that survives a 100× corpus scale-up."""
-    shd = _shingles(spark, sf).persist()
-    sizes = shd.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = shd.alias("a")
-    b = shd.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jac = F.col("n_common").cast("double") / (
-        F.col("sa.n") + F.col("sb.n") - F.col("n_common")
-    )
-    return (
-        inter.join(sa, F.col("d1") == F.col("sa.doc_id"))
-        .join(sb, F.col("d2") == F.col("sb.doc_id"))
-        .where(jac >= 0.12)
-        .select("d1", "d2", F.round(jac, 4).alias("jaccard"))
-    )
+    inter = _pair_counts(_trigram_shingles(load_spread(spark, sf, "documents")))
+    jac = F.col("n_common").cast("double") / (F.col("n1") + F.col("n2") - F.col("n_common"))
+    return inter.where(jac >= 0.12).select("d1", "d2", F.round(jac, 4).alias("jaccard"))
 
 
 # ------------------------------------------------------------ MinHash + LSH
@@ -365,7 +361,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     Jaccard.  Scale path of dedup_ngram_jaccard: bucket-join volume is
     O(collisions), not O(n²); the exact verifier then runs only on
     candidates.  Rows-only for the driver (bucketed-candidate recall is
-    asserted vs exact Jaccard in tests/test_dedup.py).
+    asserted vs exact Jaccard in tests/test_pipeline_ops.py).
 
     The 512-byte signature arrays are joined back ONCE, not once per pair
     side (the r03/r04 shape): each candidate pair unpivots into two
@@ -375,8 +371,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     corpus-sized side (n_docs × 64 longs — never broadcastable), so
     scanning/shuffling it once instead of twice halves the dominant join
     input; the probe rows and the sig-carrying regroup are both
-    O(candidates), which LSH keeps ≪ n_docs."""
-    sigs = minhash_signatures_banded(_shingle_arrays(spark, sf)).persist()
+    O(candidates), which LSH keeps ≪ n_docs.
+
+    The signature table feeds both the band join and the join-back, so it
+    is cut once with an eager ``localCheckpoint`` (one Arrow pass): unlike
+    a persist, the cut registers no plan-matched cache entry that a later
+    call over a rewritten input would be served from."""
+    sigs = minhash_signatures_banded(_shingle_arrays(spark, sf)).localCheckpoint()
     bands = sigs.select(
         "doc_id", F.posexplode("bands").alias("band_id", "band_hash")
     )
@@ -429,7 +430,9 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     the r02 version exploded to (doc, word) rows and ran a 64-column sum
     hash aggregation, a full corpus shuffle for a per-doc computation.
     Built as one parsed expression (py4j-lambda plan-build cost, see
-    minhash_signatures)."""
+    minhash_signatures).  The fingerprints feed the band join and both
+    join-backs, so they are cut once with an eager ``localCheckpoint``
+    (see dedup_minhash_lsh)."""
     d = load_spread(spark, sf, "documents")
     votes_expr = (
         "aggregate(transform(split(text, ' '), w -> xxhash64(w)), "
@@ -446,7 +449,7 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
             F.expr(lo_expr).alias("sim_lo"),
             F.expr(hi_expr).alias("sim_hi"),
         )
-        .persist()
+        .localCheckpoint()
     )
     # 4 bands of 16 bits each (2 per half): near-dups (Hamming<=6) must
     # collide on >=1 band only if <=3 differing bands — banded recall is
@@ -679,12 +682,14 @@ def dedup_prefix_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     The df table is shingle-keyed and distributable; per-doc windows are
     bounded by doc length."""
     # the sorted shingle arrays feed BOTH the prefix build and the verify
-    # step: persist once (the interpreted trigram transform is the most
-    # expensive narrow stage — recomputing it 3x measured 16.7 s vs 10.5 s
-    # at sf0.1); per-doc set size comes from size(array), not a window
+    # step: cut them once with an eager localCheckpoint (the interpreted
+    # trigram transform is the most expensive narrow stage — recomputing it
+    # 3x measured 16.7 s vs 10.5 s at sf0.1), which leaves no plan-matched
+    # cache entry behind; per-doc set size comes from size(array), not a
+    # window
     arrs = _shingle_arrays(spark, sf).select(
         "doc_id", F.array_sort("shingles").alias("sh"), F.size("shingles").alias("n")
-    ).persist()
+    ).localCheckpoint()
     shd = arrs.select("doc_id", "n", F.explode("sh").alias("shingle"))
     dfreq = shd.groupBy("shingle").agg(F.count("*").alias("df"))
     w_doc = Window.partitionBy("doc_id").orderBy("df", "shingle")
@@ -784,21 +789,21 @@ ORACLE["dedup_containment"] = f"""
 
 
 @q("dedup_containment")
-def dedup_containment(
-    spark: SparkSession, sf: str, _eager: bool = True
-) -> DataFrame:
+def dedup_containment(spark: SparkSession, sf: str) -> DataFrame:
     """Asymmetric containment pairs over the trigram inverted index:
     emit (d1, d2) where ≥ 0.7 (CONT_THRESHOLD) of d1's distinct shingles
     appear in d2 — quote/syndication detection that resemblance dedup
     cannot see (see module comment for the synthesized quote pages).
 
-    Scale shape: identical to dedup_ngram_jaccard's index join — pairs
-    materialize ONLY via shared shingles (never all-pairs), counts
-    partial-aggregate map-side, and the |A| denominator joins from the
-    doc-sized `sizes` table on the d1 key.  The direction-doubling
-    (a != b instead of a < b) doubles candidate rows, not asymptotics;
-    stop-shingle capping would bound hot shingles at web scale exactly
-    as in dedup_prefix_jaccard."""
+    Scale shape: dedup_ngram_jaccard's index join — pairs materialize ONLY
+    via shared shingles (never all-pairs) and counts partial-aggregate
+    map-side.  n_common is SYMMETRIC, so the join + count runs once over
+    ordered pairs (d1 < d2, half the candidate rows of a != b) and ONE
+    inline() emits both orientations from each aggregate row, each with
+    its own denominator (n1 or n2, carried on the shingle rows): the pair
+    table is read once, no union re-runs the join and no sizes table is
+    joined back.  Stop-shingle capping would bound hot shingles at web
+    scale exactly as in dedup_prefix_jaccard."""
     d = load_spread(spark, sf, "documents").where(F.length("text") > 0)
     words = F.split("text", " ")
     h16 = F.conv(
@@ -814,46 +819,17 @@ def dedup_containment(
         ).alias("text"),
     )
     corpus = d.select("doc_id", "text").unionByName(quotes)
-    # localCheckpoint, NOT persist: this topology fans the shingle rows
-    # into 4 independent AQE query-stage materializations (join side a,
-    # side b, sizes, and the union's second branch), and a lazy persist
-    # loses the race — measured 13 jobs re-running the trigram build ~8x
-    # for a 6.3 s wall; the eager lineage cut bounds it to one build.
-    # _eager=False keeps the lineage lazy so the plan-shape test can see
-    # the real index join instead of an ExistingRDD scan (r05 review —
-    # the checkpointed plan made the test's join assertions vacuous).
-    shd = _trigram_shingles(corpus)
-    if _eager:
-        shd = shd.localCheckpoint()
-    sizes = shd.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = shd.alias("a")
-    b = shd.alias("b")
-    # n_common is SYMMETRIC, so the index join + count runs once over
-    # ordered pairs (d1 < d2, half the candidate rows of a != b) and both
-    # orientations are emitted afterwards — measured 7.97 s -> ~4 s at
-    # sf0.1 on the same box (the join/agg dominates; the union is free)
-    half = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    if _eager:
-        # pair table is collision-bounded; without the cut the Union's
-        # two branches each re-run the index join + agg
-        half = half.localCheckpoint()
-    inter = half.unionByName(
-        half.select(
-            F.col("d2").alias("d1"), F.col("d1").alias("d2"), "n_common"
+    half = _pair_counts(_trigram_shingles(corpus))
+    d1, d2 = F.col("d1"), F.col("d2")
+    both = half.select(
+        F.inline(
+            F.array(
+                F.struct(d1, d2, "n_common", F.col("n1").alias("n")),
+                F.struct(d2.alias("d1"), d1.alias("d2"), "n_common", F.col("n2").alias("n")),
+            )
         )
     )
-    sa = sizes.alias("sa")
-    cont = F.col("n_common").cast("double") / F.col("sa.n")
-    return (
-        inter.join(sa, F.col("d1") == F.col("sa.doc_id"))
-        .where(cont >= CONT_THRESHOLD)
-        .select("d1", "d2", "n_common", F.round(cont, 4).alias("containment"))
+    cont = F.col("n_common").cast("double") / F.col("n")
+    return both.where(cont >= CONT_THRESHOLD).select(
+        "d1", "d2", "n_common", F.round(cont, 4).alias("containment")
     )

@@ -30,21 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from analytics.common import load
+from analytics.common import load, registry
 
-QUERIES: dict = {}
-ORACLE: dict = {}
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        assert name not in QUERIES, f"duplicate query name {name}"
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, q = registry()
 
 
 # Deterministic synthetic link graph over the fixture tables: lineitem's

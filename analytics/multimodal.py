@@ -35,21 +35,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from analytics.common import load
+from analytics.common import load, registry
 
-QUERIES: dict = {}
-ORACLE: dict = {}
+QUERIES, ORACLE, q = registry()
 
 _FAKE_DECODE = True  # real decode (PIL / soundfile / pyav) not available here
-
-
-def q(name: str):
-    def deco(fn):
-        assert name not in QUERIES, f"duplicate query name {name}"
-        QUERIES[name] = fn
-        return fn
-
-    return deco
 
 
 def media_table(spark: SparkSession, sf: str) -> DataFrame:

@@ -23,22 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from analytics.common import load
+from analytics.common import load, registry
 from analytics.sampling import _MIX_SALT, _SPLIT_SALT
 
-QUERIES: dict = {}
-ORACLE: dict = {}
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        assert name not in QUERIES, f"duplicate query name {name}"
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, q = registry()
 
 
 MIN_WORDS = 10  # quality gate: minimum document length in words

@@ -17,21 +17,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from analytics.common import load_spread
+from analytics.common import load_spread, registry
 
-QUERIES: dict = {}
-ORACLE: dict = {}
-
-
-def q(name: str, sql: str | None = None):
-    def deco(fn):
-        assert name not in QUERIES, f"duplicate query name {name}"
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, q = registry()
 
 
 def _dot(a, b) -> Column:

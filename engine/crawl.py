@@ -419,21 +419,23 @@ class CrawlEngine:
 
             # --- R1 for NEXT epoch's gate: rules for hosts first discovered by
             # this epoch's inserts, committed with this epoch (init_run's R1
-            # note); an empty delta leaves no dir and keeps the snapshot ---
+            # note); an empty delta leaves no staging dir and keeps the
+            # snapshot ---
             def robots_delta() -> tuple[int, list[str] | None]:
                 new_hosts = (
                     inserts.select("host")
                     .distinct()
                     .join(robots.select("host").distinct(), "host", "left_anti")
                 )
-                dpath = os.path.join(cat.stage_path(epoch, "robots_rules"), "delta")
+                rpath = cat.stage_path(epoch, "robots_rules")
+                dpath = os.path.join(rpath, "delta")
                 n = self._write_rules(new_hosts, epoch, dpath)
                 if not n:
-                    shutil.rmtree(dpath)
+                    shutil.rmtree(rpath)
                     return prev_robots_rows, None
                 paths = robots_paths + [dpath]
                 if len(paths) > MAX_CELL_DIRS:
-                    cpath = os.path.join(cat.stage_path(epoch, "robots_rules"), "compact")
+                    cpath = os.path.join(rpath, "compact")
                     self._write(spark.read.schema(ROBOTS_RULES).parquet(*paths), cpath)
                     paths = [cpath]
                 return prev_robots_rows + n, paths

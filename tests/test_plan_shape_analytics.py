@@ -108,13 +108,9 @@ def test_load_spread_parallelizes_single_file_scan(spark):
 def test_minhash_signature_stage_has_no_shuffle(spark):
     """Signature computation is per-doc local: the plan between the scan
     and the Arrow eval must contain no Exchange (the repartition Exchange
-    from load_spread is the single allowed one).  clearCache first: an
-    earlier test's persist() would otherwise swap an InMemoryRelation into
-    this plan, whose explain string re-prints the cached fragment's
-    Exchange nodes and AQE duplicates."""
+    from load_spread is the single allowed one)."""
     from analytics import dedup
 
-    spark.catalog.clearCache()
     p = plan(dedup.minhash_signatures(dedup._shingle_arrays(spark, SF_TEST)))
     # formatted explain prints each node twice (tree line + detail header);
     # count detail headers "(n) Exchange" = actual Exchange nodes
@@ -607,16 +603,11 @@ def test_crawl_trap_hosts_windows_over_rollup(spark):
 
 def test_dedup_containment_index_join_partial_agg(spark):
     """Candidate pairs come from the shingle-equality index join with a
-    map-side partial count; no Python, no nested-loop all-pairs.
-
-    _eager=False keeps the lineage lazy: the production localCheckpoints
-    hide the index join behind ExistingRDD scans, which made these
-    assertions vacuous (r05 review) — a regression to an all-pairs or
-    Python-eval candidate join would have passed unseen."""
+    map-side partial count; no Python, no nested-loop all-pairs.  The
+    query's lineage is uncut, so the plan shows the join itself."""
     from analytics import dedup as D
 
-    spark.catalog.clearCache()
-    p = plan(D.dedup_containment(spark, SF_TEST, _eager=False))
+    p = plan(D.dedup_containment(spark, SF_TEST))
     # any equi-HASH join is the index-join shape (BHJ at tiny sf, SMJ/SHJ
     # at scale) — the banned shapes below are the regression
     assert any(

@@ -146,14 +146,19 @@ def test_robots_rules_cover_every_frontier_host(spark, tmp_path):
     """R1 needs no bootstrap: after init_run and after every epoch, each
     host holding a frontier row (any status) has committed robots rules,
     and the manifest's robots_rules row count is the committed table's.
-    Half the hosts are seeded, so later epochs discover the rest."""
+    Half the hosts are seeded, so later epochs discover the rest.  An
+    epoch whose delta is empty leaves no robots_rules staging dir."""
     eng = CrawlEngine(spark, str(tmp_path / "r"), SMALL, n_filter_parts=4, salt=4)
     eng.init_run(gen_seed_urls(SMALL)[: SMALL.n_hosts // 2])
     cat = eng.catalog
-    n_rule_hosts = []
+    n_rule_hosts, empty_deltas = [], 0
     for epoch in range(4):
         if epoch:
             eng.run_epoch(epoch)
+            rows = [cat.manifest(e)["snapshots"]["robots_rules"]["rows"] for e in (epoch - 1, epoch)]
+            staged = os.path.exists(cat.stage_path(epoch, "robots_rules"))
+            assert staged == (rows[1] > rows[0]), epoch
+            empty_deltas += not staged
         assert cat.last_epoch() == epoch
         frontier_hosts = {
             r["host"] for r in cat.read_snapshot("frontier").select("host").distinct().collect()
@@ -164,6 +169,7 @@ def test_robots_rules_cover_every_frontier_host(spark, tmp_path):
         assert cat.manifest(epoch)["snapshots"]["robots_rules"]["rows"] == rules.count(), epoch
         n_rule_hosts.append(len(rule_hosts))
     assert n_rule_hosts[-1] > n_rule_hosts[0], "fixture must discover hosts after init"
+    assert empty_deltas, "fixture must run an epoch that discovers no host"
 
 
 def test_failed_init_leaves_no_commit_or_cache(spark, tmp_path, monkeypatch, two_epoch_state):

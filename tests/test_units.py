@@ -120,16 +120,16 @@ def test_no_per_row_python_gate():
 
 
 def test_engine_defs_are_referenced():
-    """Every top-level def, class and assigned name in engine/ is
-    referenced by name at least once outside its own definition, in
-    engine/, analytics/, tests/, tools/, perfbench/ or a root script: code
-    no caller reaches is deleted, not kept."""
+    """Every top-level def, class and assigned name in engine/ and
+    analytics/ is referenced by name at least once outside its own
+    definition, in engine/, analytics/, tests/, tools/, perfbench/ or a
+    root script: code no caller reaches is deleted, not kept."""
     repo = Path(__file__).resolve().parent.parent
     dirs = ("engine", "analytics", "tests", "tools", "perfbench")
     files = [p for d in dirs for p in (repo / d).glob("*.py")] + list(repo.glob("*.py"))
     texts = {p: p.read_text() for p in files}
     unreferenced = []
-    for py in sorted((repo / "engine").glob("*.py")):
+    for py in sorted(p for d in ("engine", "analytics") for p in (repo / d).glob("*.py")):
         for node in ast.parse(texts[py]).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 names = [node.name]
@@ -143,7 +143,7 @@ def test_engine_defs_are_referenced():
                 own = len(word.findall(ast.get_source_segment(texts[py], node)))
                 if sum(len(word.findall(t)) for t in texts.values()) == own:
                     unreferenced.append(f"{py.name}:{name}")
-    assert not unreferenced, f"engine definitions nothing references: {unreferenced}"
+    assert not unreferenced, f"definitions nothing references: {unreferenced}"
 
 
 def test_engine_options_are_set_by_a_caller():
