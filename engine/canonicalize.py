@@ -40,14 +40,14 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: canonicalize_url(u) if u is not None else None)
 
 
-def host_expr(url_col: str = "url") -> Column:
-    """C3: registrable host of an already-canonical URL (JVM-side)."""
-    return F.regexp_extract(F.col(url_col), _HOST_RE, 1)
+def host_expr() -> Column:
+    """C3: registrable host of the already-canonical ``url`` (JVM-side)."""
+    return F.regexp_extract(F.col("url"), _HOST_RE, 1)
 
 
-def path_expr(url_col: str = "url") -> Column:
-    """Path component (no query) of an already-canonical URL (JVM-side)."""
-    return F.regexp_extract(F.col(url_col), _PATH_RE, 1)
+def path_expr() -> Column:
+    """Path component (no query) of the already-canonical ``url`` (JVM-side)."""
+    return F.regexp_extract(F.col("url"), _PATH_RE, 1)
 
 
 def host_bucket_expr(n_buckets: int) -> Column:
@@ -56,10 +56,10 @@ def host_bucket_expr(n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(F.col("host")), F.lit(n_buckets)).cast("int")
 
 
-def with_url_keys(df: DataFrame, n_buckets: int, url_col: str = "url") -> DataFrame:
-    """C2 + C3: url_hash, host, host_bucket columns from a canonical URL."""
+def with_url_keys(df: DataFrame, n_buckets: int) -> DataFrame:
+    """C2 + C3: url_hash, host, host_bucket columns from the canonical ``url``."""
     return (
-        df.withColumn("url_hash", F.xxhash64(F.col(url_col)))
-        .withColumn("host", host_expr(url_col))
+        df.withColumn("url_hash", F.xxhash64(F.col("url")))
+        .withColumn("host", host_expr())
         .withColumn("host_bucket", host_bucket_expr(n_buckets))
     )

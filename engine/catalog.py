@@ -19,13 +19,11 @@ Table kinds:
     ``politeness_budgets``): each epoch writes a full immutable snapshot
     dir (robots: an appended delta dir); the manifest points at the newest.
   * the ``frontier`` snapshot is a map of cells to immutable leaf dirs:
-    one cell per host bucket for pending rows (rewritten only when the
-    epoch pops or disallows rows of that bucket, otherwise appended to by
-    insert dirs and compacted past ``crawl.MAX_CELL_DIRS`` dirs), and one
+    one cell per host bucket for pending rows, every one of which each
+    epoch rewrites (a merged dir plus at most one insert dir), and one
     cell per terminal status that gains one leaf dir per epoch and is
     never rewritten (see the cell notes below).  At production scale this
-    is an Iceberg ``MERGE INTO`` that rewrites only matched partitions
-    (SURVEY.md §2.2 SC6).
+    is an Iceberg ``MERGE INTO`` (SURVEY.md §2.2 SC6).
   * append tables (``documents``, ``crawl_log``, ``lineage``,
     ``metrics``): each epoch appends a new directory; a read unions all
     committed epochs' directories (parquet append sink, SC4).
@@ -131,15 +129,18 @@ class SnapshotCatalog:
     # ---- cell-granular snapshots (frontier) ----
     # The frontier snapshot is a dict of CELLS, each a list of immutable
     # leaf dirs.  Pending rows live in one cell per host bucket
-    # (``"pending/3"``): the pop and the merge prune on the bucket, so an
-    # epoch rewrites only the pending cells it touched and appends insert
-    # dirs to the rest.  Rows that left 'pending' are only ever read whole
-    # (D2's url_hash anti-join), never pruned by bucket, so each epoch adds
-    # ONE leaf dir per terminal status to the cell named by the status
-    # alone (``"done"``, ``"failed"``, ``"disallowed"``); those dirs are never
+    # (``"pending/3"``).  Every pending row's host pops a row or has it
+    # disallowed, so each epoch touches every pending cell: the merge
+    # rewrites all pending rows (O(pending)) into one merged dir per cell,
+    # and the epoch's inserts add one insert dir per cell, so a pending
+    # cell never holds more than two dirs.  Rows that left 'pending' are
+    # only ever read whole (D2's url_hash anti-join), so each epoch adds ONE
+    # leaf dir per terminal status to the cell named by the status alone
+    # (``"done"``, ``"failed"``, ``"disallowed"``); those dirs are never
     # rewritten or compacted.  This is the manifest-level equivalent of
-    # Iceberg's add/remove-data-file commit (SC6): O(delta) epochs, and a
-    # pending scan prunes at the MANIFEST (terminal dirs are never listed).
+    # Iceberg's add/remove-data-file commit (SC6): terminal rows cost
+    # O(delta), and a pending scan prunes at the MANIFEST (terminal dirs
+    # are never listed).
 
     @staticmethod
     def cell_key(status: str, bucket: int | None = None) -> str:
@@ -150,27 +151,17 @@ class SnapshotCatalog:
         ep = self.last_epoch() if epoch is None else epoch
         return self.manifest(ep)["snapshots"]["frontier"]["parts"]
 
-    def read_parts(
-        self,
-        parts: dict,
-        schema: StructType,
-        status: str | None = None,
-        buckets: set[int] | None = None,
-    ) -> DataFrame:
-        """Union of the selected cells' leaf dirs, read with ``schema``; an
-        empty frame of ``schema`` when no cell matches.  ``buckets`` selects
-        bucketed (pending) cells only.  The schema skips footer-based
-        schema inference, which is a Spark job; the dir listing itself runs
-        on the driver (engine/session.py sets the parallel-listing threshold
-        above any catalog's dir count)."""
+    def read_parts(self, parts: dict, schema: StructType, status: str | None = None) -> DataFrame:
+        """Union of the leaf dirs of the cells of ``status`` (all cells when
+        None), read with ``schema``; an empty frame of ``schema`` when no
+        cell matches.  The schema skips footer-based schema inference,
+        which is a Spark job; the dir listing itself runs on the driver
+        (engine/session.py sets the parallel-listing threshold above any
+        catalog's dir count)."""
         paths = []
         for cell, dirs in parts.items():
-            st, _, bk = cell.partition("/")
-            if status is not None and st != status:
-                continue
-            if buckets is not None and not (bk and int(bk) in buckets):
-                continue
-            paths.extend(dirs)
+            if status is None or cell.partition("/")[0] == status:
+                paths.extend(dirs)
         if not paths:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*paths)

@@ -10,7 +10,7 @@ Per-epoch dataflow (SURVEY.md §3.1, shuffles labeled):
   → F5 salted two-stage window-rank pop                 [shuffle 1: (host,salt); shuffle 2: host (pruned)]
   → F6+X1+X2+C1 fused fetch/parse/extract/canonicalize (mapInPandas,
     raw outlinks → canonical ``links``)                 [narrow]
-  ── the F7 touched-cell merge starts here, on a thread pool ──
+  ── the F7 pending-cell rewrite starts here, on a thread pool ──
   → dedup phase, on the main thread, materialized ONCE into a cache:
     X2 explode ``links`` + intra-epoch min_by dedup     [shuffle 3: url_hash]
     → D1 bloom probe (cogrouped applyInPandas)          [shuffle 4: part_id]
@@ -22,16 +22,18 @@ Per-epoch dataflow (SURVEY.md §3.1, shuffles labeled):
   → K1 atomic manifest commit                           [driver]
 
 Frontier layout (engine/catalog.py cell notes): pending rows live in one
-cell per host_bucket, because the pop and the merge prune on the bucket;
-the merge rewrites only the pending cells this epoch popped or disallowed
-rows of, and inserts append one dir per bucket.  Rows that leave 'pending'
-are read only whole, by D2's anti-join, so each epoch writes them as ONE
-leaf dir per terminal status, appended to that status's cell and never
-rewritten or compacted.  Cell writes repartition to the session's shuffle
-partition count, so they run as several tasks with one file per cell.  No
-read lists its dirs through a Spark job: the session keeps the parallel
-listing threshold above any catalog's dir count (engine/session.py) and
-frontier reads pass the schema, so a read costs driver-side listing only.
+cell per host_bucket.  Every pending row's host pops at least one row or
+has that row disallowed (k >= 1), so each epoch touches every pending
+cell: the merge rewrites all pending rows, O(pending) and not O(delta),
+and each pending cell ends the epoch with one merged dir and at most one
+insert dir.  Rows that leave 'pending' are read only whole, by D2's
+anti-join, so each epoch writes them as ONE leaf dir per terminal status,
+appended to that status's cell and never rewritten or compacted.  Cell
+writes repartition to the session's shuffle partition count, so they run
+as several tasks with one file per cell.  No read lists its dirs through
+a Spark job: the session keeps the parallel listing threshold above any
+catalog's dir count (engine/session.py) and frontier reads pass the
+schema, so a read costs driver-side listing only.
 
 Determinism: every ordering decision reduces to the total key
 (priority, depth, url_hash), so the committed tables are identical at any
@@ -50,7 +52,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from engine import seen as seenmod
-from engine.canonicalize import host_bucket_expr, path_expr
+from engine.canonicalize import path_expr
 from engine.catalog import SnapshotCatalog
 from engine.fetch import fetch_parse
 from engine.frontier import apply_updates, pop_frontier, retry_transition
@@ -71,8 +73,7 @@ from engine.synthgraph import GraphConfig, gen_budgets
 # politeness budget of a host with no budgets row: every graph host has
 # one, so this only keeps the budgets join total
 DEFAULT_K = 1
-# dirs a pending cell, or the robots snapshot, may hold before it is
-# rewritten into one dir
+# dirs the robots snapshot may hold before it is rewritten into one dir
 MAX_CELL_DIRS = 16
 
 
@@ -155,13 +156,12 @@ class CrawlEngine:
             appends={},
             meta={
                 "cfg": repr(self.cfg),
-                # tracked state: lets epochs derive frontier/pending counts
+                # tracked state: lets epochs derive the pending count
                 # arithmetically instead of re-scanning the table (at
-                # 10^10-URL scale the full-frontier count is a job over
-                # millions of file footers — the invariant is free)
-                "frontier_rows": n_frontier,
+                # 10^10-URL scale a frontier count is a job over millions
+                # of file footers — the invariant is free); the frontier
+                # and robots counts are their snapshot entries' ``rows``
                 "pending": n_frontier,
-                "robots_rows": n_rules,
             },
         )
 
@@ -197,15 +197,15 @@ class CrawlEngine:
         budgets = cat.read_snapshot("politeness_budgets", schema=POLITENESS_BUDGETS)
         prev_epoch = cat.last_epoch()
         prev_manifest = cat.manifest(prev_epoch)
-        prev_meta = prev_manifest["meta"]
-        prev_rows = prev_meta["frontier_rows"]
-        prev_pending = prev_meta["pending"]
-        prev_robots_rows = prev_meta["robots_rows"]
+        prev_snaps = prev_manifest["snapshots"]
+        prev_rows = prev_snaps["frontier"]["rows"]
+        prev_pending = prev_manifest["meta"]["pending"]
+        prev_robots_rows = prev_snaps["robots_rules"]["rows"]
 
         # SC3 scan prune: the pending scan is pruned at the MANIFEST —
         # terminal (done/failed/disallowed) dirs are never even listed, let
         # alone read.  Both reads list their dirs on the driver (no job).
-        parts = prev_manifest["snapshots"]["frontier"]["parts"]
+        parts = prev_snaps["frontier"]["parts"]
         frontier = cat.read_parts(parts, schema=FRONTIER)
         pending = cat.read_parts(parts, status="pending", schema=FRONTIER)
 
@@ -214,20 +214,18 @@ class CrawlEngine:
         # ever held a frontier row (init_run's R1 note), so the epoch start
         # needs NO synchronous rules job — the acquisition for this epoch's
         # newly-discovered hosts runs below, overlapped with the writes.
-        robots_paths = prev_manifest["snapshots"]["robots_rules"]["paths"]
+        robots_paths = prev_snaps["robots_rules"]["paths"]
         robots = spark.read.schema(ROBOTS_RULES).parquet(*robots_paths)
         gated = robots_gate(pending.withColumn("path", path_expr()), robots).drop("path")
         # the pool of overlapped writes and every cache are released whether
         # or not the epoch commits: a failed epoch leaves no writer running
         # into its staging dirs and no persisted frame behind
         pool = ThreadPoolExecutor(max_workers=10)
-        # the disallowed count and buckets ride the gated cache as an
-        # observation: the pop's first job builds the cache and fires it
+        # the disallowed count rides the gated cache as an observation: the
+        # pop's first job builds the cache and fires it
         dis_obs = Observation(f"dis_stats_e{epoch}")
         gated = gated.observe(
-            dis_obs,
-            F.count(F.when(~F.col("allowed"), 1)).alias("n"),
-            F.collect_set(F.when(~F.col("allowed"), F.col("host_bucket"))).alias("bks"),
+            dis_obs, F.count(F.when(~F.col("allowed"), 1)).alias("n")
         ).persist()
         popped = probed = flagged = None
         try:
@@ -293,8 +291,8 @@ class CrawlEngine:
             # documents table are allowed, SURVEY.md §1.2).  ``okp`` is an int
             # partition column (hive partition inference has no boolean type),
             # so the failed-row consumers prune to the tiny okp=0 cells.  The
-            # fetch metrics and the popped host_bucket set ride the write as
-            # an observation (no stats job over the staged files).
+            # fetch metrics ride the write as an observation (no stats job
+            # over the staged files).
             fetched_dir = cat.stage_path(epoch, "fetched")
             retryable = (~F.col("ok")) & (F.col("retries") + 1 < F.lit(cfg.max_retries))
             fetch_obs = Observation(f"fetch_stats_e{epoch}")
@@ -306,7 +304,6 @@ class CrawlEngine:
                 .withColumn(
                     "n_outlinks", F.coalesce(F.size("outlinks"), F.lit(0)).cast("int")
                 )
-                .withColumn("host_bucket", host_bucket_expr(self.n_buckets))
                 .observe(
                     fetch_obs,
                     F.count(F.when(F.col("ok"), 1)).alias("n_ok"),
@@ -315,7 +312,6 @@ class CrawlEngine:
                     F.coalesce(
                         F.sum(F.when(F.col("ok"), F.col("n_outlinks"))), F.lit(0)
                     ).alias("links"),
-                    F.collect_set("host_bucket").alias("bks"),
                 ),
                 fetched_dir,
                 partition_cols=["okp"],
@@ -324,17 +320,18 @@ class CrawlEngine:
             stats, dis_stats = fetch_obs.get, dis_obs.get
             _mark("fetch_write")
 
-            # --- F7 merge of TOUCHED pending cells (cell-granular, O(delta)) ---
-            # Only pending cells holding popped/disallowed rows are rewritten;
-            # rows leaving 'pending' go to ONE new immutable dir per terminal
-            # status, appended to that status's cell and never rewritten — the
+            # --- F7 merge: every pending row, rewritten (O(pending)) ---
+            # Every pending cell holds a row that pops or is disallowed this
+            # epoch, so the merge rewrites all of them; rows leaving
+            # 'pending' go to ONE new immutable dir per terminal status,
+            # appended to that status's cell and never rewritten — the
             # manifest-level analogue of Iceberg MERGE INTO's add/remove-file
-            # commit (engine/catalog.py cell notes).  It needs only the two
-            # observations above, so it runs on the pool from here and
-            # overlaps the dedup phase and every write after it.  Atomicity is
-            # untouched: nothing is visible until the manifest rename below,
-            # and a failure in ANY job aborts the epoch before commit
-            # (futures re-raise at the gather).
+            # commit (engine/catalog.py cell notes).  It needs only the
+            # staged fetch output and the gated cache, so it runs on the pool
+            # from here and overlaps the dedup phase and every write after
+            # it.  Atomicity is untouched: nothing is visible until the
+            # manifest rename below, and a failure in ANY job aborts the
+            # epoch before commit (futures re-raise at the gather).
             updates = retry_transition(fetched, cfg.max_retries).unionByName(
                 disallowed.select(
                     "url_hash",
@@ -343,18 +340,13 @@ class CrawlEngine:
                     F.lit(None).cast("double").alias("new_priority"),
                 )
             )
-            touched = {b for b in set(stats["bks"]) | set(dis_stats["bks"]) if b is not None}
             fr_dir = cat.stage_path(epoch, "frontier")
-            cols = [f.name for f in FRONTIER.fields]
-
-            def write_merged() -> dict:
-                pending_src = cat.read_parts(
-                    parts, status="pending", buckets=touched, schema=FRONTIER
-                )
-                merged = apply_updates(pending_src.select(*cols), updates)
-                return self._write_cells(merged, os.path.join(fr_dir, "cells"))
-
-            fut_merged = pool.submit(_timed("merged", write_merged))
+            fut_merged = pool.submit(_timed(
+                "merged",
+                self._write_cells,
+                apply_updates(pending, updates),
+                os.path.join(fr_dir, "cells"),
+            ))
 
             # --- dedup phase: X2 → D1 → D2, computed once ---
             # ``flagged`` (every candidate, with ``is_new``) is materialized
@@ -394,15 +386,12 @@ class CrawlEngine:
                 F.lit(0).cast("int").alias("retries"),
                 "parent_hash",
             )
-            # F7 inserts: written as APPENDED per-bucket dirs under their
-            # pending cells — a pending cell whose rows were not popped or
-            # disallowed this epoch is never read OR rewritten for an insert
-            # (true O(delta): the r02 form still rewrote insert-only cells).
-            # Fragmentation is bounded by _compact_cells below.
+            # F7 inserts: one dir per bucket, appended to its pending cell
+            # next to the merged dir; the next epoch's merge folds both in.
             fut_insert_cells = pool.submit(_timed(
                 "insert_cells",
                 self._write_cells,
-                inserts.select(*cols),
+                inserts,
                 os.path.join(fr_dir, "inserts"),
             ))
 
@@ -456,15 +445,14 @@ class CrawlEngine:
             n_disallowed = int(dis_stats["n"])
             n_cands, n_new = int(ins_stats["n_cands"]), int(ins_stats["n"])
 
-            # assemble the cell map deterministically on the main thread:
-            # rewritten pending cells REPLACE their dir list, terminal dirs and
-            # insert dirs APPEND
-            rewritten = {cat.cell_key("pending", b) for b in touched}
-            new_parts = {c: list(d) for c, d in parts.items() if c not in rewritten}
+            # assemble the cell map deterministically on the main thread: the
+            # merge rewrote every pending row, so the previous pending cells
+            # are dropped; terminal dirs APPEND to their cells, and each
+            # pending cell is its merged dir plus its insert dir
+            new_parts = {c: list(d) for c, d in parts.items() if not c.startswith("pending/")}
             for cells in (merged_cells, insert_cells):
                 for cell, p in cells.items():
                     new_parts.setdefault(cell, []).append(p)
-            new_parts = self._compact_cells(new_parts, fr_dir)
 
             # --- L1 lineage: row counts from the footers of the files this
             # epoch wrote, read on the driver (no Spark job) ---
@@ -528,12 +516,7 @@ class CrawlEngine:
                 epoch,
                 snapshots,
                 appends,
-                meta={
-                    "metrics": metrics,
-                    "frontier_rows": frontier_rows,
-                    "pending": pending_end,
-                    "robots_rows": n_robots_rows,
-                },
+                meta={"metrics": metrics, "pending": pending_end},
             )
         finally:
             pool.shutdown(wait=True)
@@ -571,26 +554,6 @@ class CrawlEngine:
         return out
 
     # ---------------------------------------------------------------- helpers
-    def _compact_cells(self, new_parts: dict, fr_dir: str) -> dict:
-        """Bound pending-cell fragmentation: an untouched pending cell gains
-        one insert dir per epoch; past ``MAX_CELL_DIRS`` the cell is
-        rewritten into a single dir (Iceberg's rewrite_data_files analogue).
-        Amortized cost stays O(delta): each row is rewritten at most once
-        per MAX_CELL_DIRS epochs.  Terminal cells gain one dir per epoch
-        and are never compacted."""
-        frag = {
-            c: d
-            for c, d in new_parts.items()
-            if c.startswith("pending/") and len(d) > MAX_CELL_DIRS
-        }
-        if not frag:
-            return new_parts
-        df = self.catalog.read_parts(frag, schema=FRONTIER)
-        out = {c: d for c, d in new_parts.items() if c not in frag}
-        for cell, p in self._write_cells(df, os.path.join(fr_dir, "compact")).items():
-            out[cell] = [p]
-        return out
-
     def _write_rules(self, hosts: DataFrame, epoch: int, path: str) -> int:
         """R1: write the fetched robots rules of ``hosts`` to ``path`` and
         return the row count, observed on the write, so the counted rows

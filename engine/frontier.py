@@ -53,10 +53,11 @@ def apply_updates(frontier: DataFrame, updates: DataFrame) -> DataFrame:
 
     ``updates``: (url_hash, new_status, new_retries, new_priority) for rows
     popped or disallowed this epoch.  A left join + coalesce, so rows with
-    no update pass through unchanged; the engine writes the result as the
-    touched cells of the next immutable snapshot (SC5), and the insert
-    union of a full MERGE is the caller's (the engine appends insert dirs
-    instead of rewriting cells).
+    no update pass through unchanged.  The engine applies it to every
+    pending row, since each epoch touches every pending cell (O(pending)),
+    and writes the result as the next immutable snapshot's cells (SC5);
+    the insert union of a full MERGE is the caller's (the engine appends
+    insert dirs instead).
     """
     return (
         frontier.join(updates, "url_hash", "left")

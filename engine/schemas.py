@@ -121,7 +121,6 @@ FETCHED_STAGED = StructType(
         StructField("doc_id", StringType()),
         StructField("epoch", IntegerType()),
         StructField("n_outlinks", IntegerType()),
-        StructField("host_bucket", IntegerType()),
         StructField("okp", IntegerType()),
     ]
 )

@@ -12,10 +12,10 @@ cuckoo insert's per-hash loop (engine/cuckoo.py ``insert_many``):
   * the probe (D1, :func:`probe_filter`): the candidate rows cross Arrow
     once and come back carrying their verdict; the engine caches that
     result, so the two routes of :func:`flag_new` read one probe;
-  * the rewrite (D3, :func:`_rewrite`), the only way blobs are written:
-    :func:`init_filter` inserts the seed hashes into one empty blob per
-    part and :func:`update_filter` an epoch's new hashes.  The crawl is
-    single-pass, so no hash is ever removed.
+  * the rewrite (D3, :func:`update_filter`), the only way blobs are
+    written: an epoch inserts its new hashes with it, and
+    :func:`init_filter` calls it to insert the seed hashes into one empty
+    blob per part.  The crawl is single-pass, so no hash is ever removed.
 
 Each filter-kind rule is written once, in the three blob helpers
 ``_empty_blob``, ``_probe_blob`` and ``_insert_blob``.
@@ -100,7 +100,7 @@ def _insert_blob(kind: str, nbits: int, nhash: int, blob: bytes, h: np.ndarray) 
     return bits.tobytes()
 
 
-def _rewrite(blobs: DataFrame, hashes: DataFrame, n_parts: int, epoch: int) -> DataFrame:
+def update_filter(blobs: DataFrame, hashes: DataFrame, n_parts: int, epoch: int) -> DataFrame:
     """D3, the one path that writes blobs: cogroup ``hashes`` with the blob
     rows by part_id (one shuffle of the hashes; the blobs stay
     partition-aligned) and insert each part's hashes.  A part with no
@@ -160,7 +160,7 @@ def init_filter(
         F.lit(0).cast("long").alias("n_items"),
         F.lit(0).cast("int").alias("epoch"),
     )
-    return _rewrite(empty, hashes, n_parts, 0)
+    return update_filter(empty, hashes, n_parts, 0)
 
 
 def probe_filter(candidates: DataFrame, blobs: DataFrame, n_parts: int) -> DataFrame:
@@ -170,7 +170,7 @@ def probe_filter(candidates: DataFrame, blobs: DataFrame, n_parts: int) -> DataF
     vectorized per partition: the rows cross Arrow once and come back with
     their verdict, so no join-back is needed.  Integer columns must be
     null-free: a nullable int64 batch arrives in pandas as float64 (see
-    :func:`_rewrite`)."""
+    :func:`update_filter`)."""
     cands = with_part_id(candidates, n_parts)
     out_schema = StructType(cands.schema.fields + [StructField("maybe_seen", BooleanType())])
     cols = cands.columns
@@ -193,11 +193,6 @@ def probe_filter(candidates: DataFrame, blobs: DataFrame, n_parts: int) -> DataF
         .cogroup(blobs.groupBy("part_id"))
         .applyInPandas(probe, out_schema)
     )
-
-
-def update_filter(blobs: DataFrame, new_hashes: DataFrame, n_parts: int, epoch: int) -> DataFrame:
-    """D3: new blob snapshot with the epoch's inserted hashes added."""
-    return _rewrite(blobs, new_hashes, n_parts, epoch)
 
 
 def flag_new(candidates_probed: DataFrame, frontier_keys: DataFrame) -> DataFrame:

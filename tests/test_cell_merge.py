@@ -1,11 +1,14 @@
-"""F7 cell-granular merge: an epoch rewrites a strict subset of cells.
+"""F7 cell-granular merge: an epoch rewrites every pending cell and only
+appends to terminal cells.
 
-SURVEY.md §1.2 / §2.1-F7: pending rows live in one cell per host_bucket and
-an epoch rewrites only the pending cells it touched; rows that leave
-'pending' are written as ONE new immutable dir per (epoch, terminal status),
-appended to that status's cell and never rewritten.  Untouched cells carry
-forward by identity.  This is the sandbox analogue of Iceberg MERGE INTO's
-O(delta) file commit.
+SURVEY.md §1.2 / §2.1-F7: pending rows live in one cell per host_bucket.
+Every pending row's host pops a row or has it disallowed, so each epoch
+rewrites all pending rows (O(pending)): a pending cell holds that epoch's
+merged dir and at most one insert dir.  Rows that leave 'pending' are
+written as ONE new immutable dir per (epoch, terminal status), appended to
+that status's cell and never rewritten, so terminal dirs carry forward by
+identity.  This is the sandbox analogue of Iceberg MERGE INTO's
+add/remove-file commit.
 """
 
 from __future__ import annotations
@@ -16,10 +19,9 @@ from collections import defaultdict
 import pytest
 from pyspark.sql import functions as F
 
-import engine.crawl as crawlmod
 from engine.crawl import CrawlEngine
 from engine.schemas import FRONTIER
-from engine.synthgraph import TINY, gen_seed_urls
+from engine.synthgraph import TINY, TINY_FLAKY, gen_seed_urls
 
 EPOCHS = 3
 
@@ -83,7 +85,7 @@ def test_terminal_cells_append_only(tiny_crawl):
     fr = cat.read_snapshot("frontier")
     n = fr.count()
     assert n == fr.select("url_hash").distinct().count()
-    assert n == cat.manifest(cat.last_epoch())["meta"]["frontier_rows"]
+    assert n == cat.manifest(cat.last_epoch())["snapshots"]["frontier"]["rows"]
 
 
 @pytest.mark.slow
@@ -134,23 +136,21 @@ def test_committed_frontier_read_starts_no_job(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_cell_compaction_bounds_fragmentation(spark, tmp_path, monkeypatch):
-    """With MAX_CELL_DIRS=1 every fragmented pending cell is rewritten to a
-    single dir each epoch, terminal cells are left alone (one dir per epoch
-    at most), and the committed frontier content is unchanged (same rows as
-    an uncompacted run)."""
-    a = CrawlEngine(spark, str(tmp_path / "a"), TINY, n_buckets=8, n_filter_parts=4)
-    b = CrawlEngine(spark, str(tmp_path / "b"), TINY, n_buckets=8, n_filter_parts=4)
-    a.run(EPOCHS, gen_seed_urls(TINY))
-    monkeypatch.setattr(crawlmod, "MAX_CELL_DIRS", 1)
-    b.run(EPOCHS, gen_seed_urls(TINY))
-    for cell, dirs in b.catalog.frontier_parts().items():
-        limit = 1 if cell.startswith("pending/") else EPOCHS
-        assert len(dirs) <= limit, (cell, dirs)
-    rows_a = sorted(
-        tuple(r) for r in a.catalog.read_snapshot("frontier").collect()
-    )
-    rows_b = sorted(
-        tuple(r) for r in b.catalog.read_snapshot("frontier").collect()
-    )
-    assert rows_a == rows_b
+def test_pending_cells_hold_only_this_epochs_dirs(spark, tmp_path):
+    """After init and after every epoch of a crawl with disallowed rows,
+    fetch failures and inserts, each pending cell names only dirs written
+    by that epoch: its merged dir and at most one insert dir."""
+    eng = CrawlEngine(spark, str(tmp_path / "c"), TINY_FLAKY, n_buckets=8, n_filter_parts=4)
+    eng.init_run(gen_seed_urls(TINY_FLAKY))
+    cat = eng.catalog
+    totals = defaultdict(int)
+    for ep in range(EPOCHS + 1):
+        if ep:
+            for key, v in eng.run_epoch(ep).items():
+                totals[key] += v
+        pending = {c: d for c, d in cat.frontier_parts(ep).items() if c.startswith("pending/")}
+        assert pending, ep
+        for cell, dirs in pending.items():
+            assert 1 <= len(dirs) <= 2, (ep, cell, dirs)
+            assert all(f"epoch={ep:06d}" in d for d in dirs), (ep, cell, dirs)
+    assert totals["disallowed"] and totals["urls_fetch_fail"] and totals["outlinks_new"], totals

@@ -172,6 +172,36 @@ def test_robots_rules_cover_every_frontier_host(spark, tmp_path):
     assert empty_deltas, "fixture must run an epoch that discovers no host"
 
 
+def test_robots_compaction_keeps_rows(spark, tmp_path, monkeypatch):
+    """With MAX_CELL_DIRS=1 every epoch that writes a robots delta compacts
+    the robots snapshot into one dir, and after every epoch the committed
+    rules are those of an uncompacted run.  Half the hosts are seeded, so
+    epochs discover the rest and write deltas."""
+    seeds = gen_seed_urls(SMALL)[: SMALL.n_hosts // 2]
+
+    def rules(cat):
+        return sorted(tuple(r) for r in cat.read_snapshot("robots_rules").collect())
+
+    def step(eng):
+        eng.init_run(seeds)
+        yield 0
+        for epoch in range(1, 4):
+            eng.run_epoch(epoch)
+            yield epoch
+
+    plain = CrawlEngine(spark, str(tmp_path / "plain"), SMALL, n_filter_parts=4, salt=4)
+    want = {epoch: rules(plain.catalog) for epoch in step(plain)}
+    monkeypatch.setattr(crawlmod, "MAX_CELL_DIRS", 1)
+    eng = CrawlEngine(spark, str(tmp_path / "compact"), SMALL, n_filter_parts=4, salt=4)
+    cat, deltas = eng.catalog, 0
+    for epoch in step(eng):
+        if epoch and os.path.exists(cat.stage_path(epoch, "robots_rules")):
+            deltas += 1
+            assert len(cat.manifest(epoch)["snapshots"]["robots_rules"]["paths"]) == 1, epoch
+        assert rules(cat) == want[epoch], epoch
+    assert deltas, "fixture must write a robots delta"
+
+
 def test_failed_init_leaves_no_commit_or_cache(spark, tmp_path, monkeypatch, two_epoch_state):
     """A raise inside init_run's robots write (the fetcher's Python worker
     fails) commits nothing, leaves no cache persisted, and a resume then
