@@ -18,12 +18,12 @@ Table kinds:
   * snapshot tables (``seen_filter``, ``robots_rules``,
     ``politeness_budgets``): each epoch writes a full immutable snapshot
     dir (robots: an appended delta dir); the manifest points at the newest.
-  * the ``frontier`` snapshot is a map of cells to immutable leaf dirs:
-    one cell per host bucket for pending rows, every one of which each
-    epoch rewrites (a merged dir plus at most one insert dir), and one
-    cell per terminal status that gains one leaf dir per epoch and is
-    never rewritten (see the cell notes below).  At production scale this
-    is an Iceberg ``MERGE INTO`` (SURVEY.md §2.2 SC6).
+  * the ``frontier`` snapshot is a map of cells, one per status, to
+    immutable leaf dirs: the ``pending`` cell, which each epoch rewrites
+    (a merged dir plus at most one insert dir), and one cell per terminal
+    status that gains one leaf dir per epoch and is never rewritten (see
+    the cell notes below).  At production scale this is an Iceberg
+    ``MERGE INTO`` (SURVEY.md §2.2 SC6).
   * append tables (``documents``, ``crawl_log``, ``lineage``,
     ``metrics``): each epoch appends a new directory; a read unions all
     committed epochs' directories (parquet append sink, SC4).
@@ -128,23 +128,18 @@ class SnapshotCatalog:
 
     # ---- cell-granular snapshots (frontier) ----
     # The frontier snapshot is a dict of CELLS, each a list of immutable
-    # leaf dirs.  Pending rows live in one cell per host bucket
-    # (``"pending/3"``).  Every pending row's host pops a row or has it
-    # disallowed, so each epoch touches every pending cell: the merge
-    # rewrites all pending rows (O(pending)) into one merged dir per cell,
-    # and the epoch's inserts add one insert dir per cell, so a pending
-    # cell never holds more than two dirs.  Rows that left 'pending' are
-    # only ever read whole (D2's url_hash anti-join), so each epoch adds ONE
-    # leaf dir per terminal status to the cell named by the status alone
-    # (``"done"``, ``"failed"``, ``"disallowed"``); those dirs are never
-    # rewritten or compacted.  This is the manifest-level equivalent of
-    # Iceberg's add/remove-data-file commit (SC6): terminal rows cost
-    # O(delta), and a pending scan prunes at the MANIFEST (terminal dirs
-    # are never listed).
-
-    @staticmethod
-    def cell_key(status: str, bucket: int | None = None) -> str:
-        return status if bucket is None else f"{status}/{bucket}"
+    # leaf dirs, keyed by status: readers prune on status alone (the
+    # pending scan), so that is the only partition key.  Every pending
+    # row's host pops a row or has it disallowed, so each epoch rewrites
+    # all pending rows (O(pending)) into one merged dir, and the epoch's
+    # inserts add one insert dir, so the ``"pending"`` cell never holds
+    # more than two dirs.  Rows that left 'pending' are only ever read
+    # whole (D2's url_hash anti-join), so each epoch adds ONE leaf dir per
+    # terminal status to that status's cell (``"done"``, ``"failed"``,
+    # ``"disallowed"``); those dirs are never rewritten or compacted.  This
+    # is the manifest-level equivalent of Iceberg's add/remove-data-file
+    # commit (SC6): terminal rows cost O(delta), and a pending scan prunes
+    # at the MANIFEST (terminal dirs are never listed).
 
     def frontier_parts(self, epoch: int | None = None) -> dict:
         """Cell map of the committed frontier."""
@@ -154,10 +149,11 @@ class SnapshotCatalog:
     def read_parts(self, parts: dict, schema: StructType, status: str | None = None) -> DataFrame:
         """Union of the leaf dirs of the cells of ``status`` (all cells when
         None), read with ``schema``; an empty frame of ``schema`` when no
-        cell matches.  The schema skips footer-based schema inference,
-        which is a Spark job; the dir listing itself runs on the driver
-        (engine/session.py sets the parallel-listing threshold above any
-        catalog's dir count)."""
+        cell matches.  A key's status is its text before any ``/``, so the
+        per-bucket pending keys of older catalogs match too.  The schema
+        skips footer-based schema inference, which is a Spark job; the dir
+        listing itself runs on the driver (engine/session.py sets the
+        parallel-listing threshold above any catalog's dir count)."""
         paths = []
         for cell, dirs in parts.items():
             if status is None or cell.partition("/")[0] == status:

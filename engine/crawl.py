@@ -21,19 +21,21 @@ Per-epoch dataflow (SURVEY.md §3.1, shuffles labeled):
   → L1 lineage from the written files' parquet footers  [driver, no job]
   → K1 atomic manifest commit                           [driver]
 
-Frontier layout (engine/catalog.py cell notes): pending rows live in one
-cell per host_bucket.  Every pending row's host pops at least one row or
-has that row disallowed (k >= 1), so each epoch touches every pending
-cell: the merge rewrites all pending rows, O(pending) and not O(delta),
-and each pending cell ends the epoch with one merged dir and at most one
-insert dir.  Rows that leave 'pending' are read only whole, by D2's
-anti-join, so each epoch writes them as ONE leaf dir per terminal status,
-appended to that status's cell and never rewritten or compacted.  Cell
-writes repartition to the session's shuffle partition count, so they run
-as several tasks with one file per cell.  No read lists its dirs through
-a Spark job: the session keeps the parallel listing threshold above any
-catalog's dir count (engine/session.py) and frontier reads pass the
-schema, so a read costs driver-side listing only.
+Frontier layout (engine/catalog.py cell notes): the frontier is
+partitioned by status alone, since no reader prunes on anything else.
+Every pending row's host pops at least one row or has that row
+disallowed (k >= 1), so each epoch rewrites all pending rows, O(pending)
+and not O(delta), and the one pending cell ends the epoch with one merged
+dir and at most one insert dir.  Rows that leave 'pending' are read only
+whole, by D2's anti-join, so each epoch writes them as ONE leaf dir per
+terminal status, appended to that status's cell and never rewritten or
+compacted.  Cell writes repartition to the session's shuffle partition
+count, spreading pending rows by host_bucket, so they run as several
+tasks with at most one file per task in the pending dir and one file per
+terminal dir.  No read lists its dirs through a Spark job: the session
+keeps the parallel listing threshold above any catalog's dir count
+(engine/session.py) and frontier reads pass the schema, so a read costs
+driver-side listing only.
 
 Determinism: every ordering decision reduces to the total key
 (priority, depth, url_hash), so the committed tables are identical at any
@@ -321,8 +323,8 @@ class CrawlEngine:
             _mark("fetch_write")
 
             # --- F7 merge: every pending row, rewritten (O(pending)) ---
-            # Every pending cell holds a row that pops or is disallowed this
-            # epoch, so the merge rewrites all of them; rows leaving
+            # Every pending row's host pops a row or has it disallowed this
+            # epoch, so the merge rewrites the whole pending cell; rows leaving
             # 'pending' go to ONE new immutable dir per terminal status,
             # appended to that status's cell and never rewritten — the
             # manifest-level analogue of Iceberg MERGE INTO's add/remove-file
@@ -386,8 +388,8 @@ class CrawlEngine:
                 F.lit(0).cast("int").alias("retries"),
                 "parent_hash",
             )
-            # F7 inserts: one dir per bucket, appended to its pending cell
-            # next to the merged dir; the next epoch's merge folds both in.
+            # F7 inserts: one dir, appended to the pending cell next to the
+            # merged dir; the next epoch's merge folds both in.
             fut_insert_cells = pool.submit(_timed(
                 "insert_cells",
                 self._write_cells,
@@ -446,10 +448,14 @@ class CrawlEngine:
             n_cands, n_new = int(ins_stats["n_cands"]), int(ins_stats["n"])
 
             # assemble the cell map deterministically on the main thread: the
-            # merge rewrote every pending row, so the previous pending cells
-            # are dropped; terminal dirs APPEND to their cells, and each
-            # pending cell is its merged dir plus its insert dir
-            new_parts = {c: list(d) for c, d in parts.items() if not c.startswith("pending/")}
+            # merge rewrote every pending row, so the previous pending cell is
+            # dropped (also the per-bucket "pending/<b>" cells of catalogs
+            # written before pending rows shared one cell); terminal dirs
+            # APPEND to their cells, and the pending cell is the merged dir
+            # plus the insert dir
+            new_parts = {
+                c: list(d) for c, d in parts.items() if c.partition("/")[0] != "pending"
+            }
             for cells in (merged_cells, insert_cells):
                 for cell, p in cells.items():
                     new_parts.setdefault(cell, []).append(p)
@@ -573,32 +579,29 @@ class CrawlEngine:
         w.parquet(path)
 
     def _write_cells(self, df: DataFrame, path: str) -> dict[str, str]:
-        """Write frontier rows as one leaf dir per cell: pending rows per
-        host_bucket, every other status in one dir.  Returns
-        {cell_key: leaf_dir}.
+        """Write frontier rows as one leaf dir per status.  Returns
+        {status: leaf_dir}.
 
-        The ``_cell`` partition column is derived, so status and
-        host_bucket stay IN the data files (a hive leaf dir read directly
-        loses its partition columns).  Repartitioning on it to an explicit
-        count gives each cell exactly one file, and, unlike a count-less
-        repartition that AQE coalesces to one task, spreads the cells over
-        the session's shuffle partitions."""
-        cell = F.when(
-            F.col("status") == "pending",
-            F.concat(F.lit("pending-"), F.col("host_bucket").cast("string")),
+        The ``_cell`` partition column is a copy of ``status``, so status
+        stays IN the data files (a hive leaf dir read directly loses its
+        partition columns).  The repartition key spreads pending rows over
+        every write task by host_bucket and sends each terminal status to
+        one task, so the pending dir holds at most one file per task and
+        each terminal dir one file.  An explicit count keeps AQE from coalescing
+        the write to one task."""
+        key = F.when(
+            F.col("status") == "pending", F.col("host_bucket").cast("string")
         ).otherwise(F.col("status"))
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         (
-            df.withColumn("_cell", cell)
-            .repartition(n, "_cell")
+            df.withColumn("_cell", F.col("status"))
+            .repartition(n, key)
             .write.mode("overwrite")
             .partitionBy("_cell")
             .parquet(path)
         )
-        out: dict[str, str] = {}
-        for d in os.listdir(path):
-            if d.startswith("_cell="):
-                st, _, bk = d[len("_cell="):].partition("-")
-                key = self.catalog.cell_key(st, int(bk) if bk else None)
-                out[key] = os.path.join(path, d)
-        return out
+        return {
+            d[len("_cell="):]: os.path.join(path, d)
+            for d in os.listdir(path)
+            if d.startswith("_cell=")
+        }

@@ -1,13 +1,13 @@
-"""F7 cell-granular merge: an epoch rewrites every pending cell and only
+"""F7 cell-granular merge: an epoch rewrites the pending cell and only
 appends to terminal cells.
 
-SURVEY.md §1.2 / §2.1-F7: pending rows live in one cell per host_bucket.
+SURVEY.md §1.2 / §2.1-F7: the frontier is partitioned by status alone.
 Every pending row's host pops a row or has it disallowed, so each epoch
-rewrites all pending rows (O(pending)): a pending cell holds that epoch's
-merged dir and at most one insert dir.  Rows that leave 'pending' are
-written as ONE new immutable dir per (epoch, terminal status), appended to
-that status's cell and never rewritten, so terminal dirs carry forward by
-identity.  This is the sandbox analogue of Iceberg MERGE INTO's
+rewrites all pending rows (O(pending)): the one pending cell holds that
+epoch's merged dir and at most one insert dir.  Rows that leave 'pending'
+are written as ONE new immutable dir per (epoch, terminal status),
+appended to that status's cell and never rewritten, so terminal dirs carry
+forward by identity.  This is the sandbox analogue of Iceberg MERGE INTO's
 add/remove-file commit.
 """
 
@@ -43,7 +43,7 @@ def tiny_crawl(spark, tmp_path_factory):
     for ep in range(1, EPOCHS + 1):
         metrics[ep] = eng.run_epoch(ep)
         for cell, dirs in eng.catalog.frontier_parts(ep).items():
-            if not cell.startswith("pending/"):
+            if cell != "pending":
                 for d in dirs:
                     terminal_files.setdefault(d, _files(d))
     return eng, metrics, terminal_files
@@ -58,9 +58,9 @@ def test_terminal_cells_append_only(tiny_crawl):
     for ep in range(1, EPOCHS + 1):
         prev, cur = cat.frontier_parts(ep - 1), cat.frontier_parts(ep)
         for cell, dirs in cur.items():
-            if cell.startswith("pending/"):
+            if cell == "pending":
                 continue
-            # one cell per terminal status, not per (status, host_bucket)
+            # one cell per terminal status
             assert cell in ("done", "failed", "disallowed"), cell
             # earlier dirs survive verbatim, in order; the epoch adds at
             # most one dir of its own
@@ -125,7 +125,9 @@ def test_committed_frontier_read_starts_no_job(spark, tmp_path):
     )
     eng = CrawlEngine(spark, str(tmp_path / "c"), TINY, n_buckets=n_dirs)
     cat = eng.catalog
-    parts = {cat.cell_key("pending", b): [os.path.join(out, f"_b={b}")] for b in range(n_dirs)}
+    # per-bucket pending keys, the layout of catalogs written before the
+    # pending rows shared one cell: reads still match them by status
+    parts = {f"pending/{b}": [os.path.join(out, f"_b={b}")] for b in range(n_dirs)}
     cat.commit(0, {"frontier": {"rows": n_dirs, "parts": parts}}, appends={})
 
     tracker = spark.sparkContext.statusTracker()
@@ -135,22 +137,52 @@ def test_committed_frontier_read_starts_no_job(spark, tmp_path):
     assert df.count() == n_dirs
 
 
-@pytest.mark.slow
-def test_pending_cells_hold_only_this_epochs_dirs(spark, tmp_path):
-    """After init and after every epoch of a crawl with disallowed rows,
-    fetch failures and inserts, each pending cell names only dirs written
-    by that epoch: its merged dir and at most one insert dir."""
-    eng = CrawlEngine(spark, str(tmp_path / "c"), TINY_FLAKY, n_buckets=8, n_filter_parts=4)
+@pytest.fixture(scope="module")
+def flaky_crawl(spark, tmp_path_factory):
+    """A TINY_FLAKY crawl (disallowed rows, fetch failures, inserts) at the
+    default bucket count; records every epoch's cell map and the parquet
+    files its frontier staging dir holds, init included."""
+    eng = CrawlEngine(
+        spark, str(tmp_path_factory.mktemp("flaky")), TINY_FLAKY, n_filter_parts=4
+    )
     eng.init_run(gen_seed_urls(TINY_FLAKY))
     cat = eng.catalog
-    totals = defaultdict(int)
+    totals, parts, n_files = defaultdict(int), {}, {}
     for ep in range(EPOCHS + 1):
         if ep:
             for key, v in eng.run_epoch(ep).items():
                 totals[key] += v
-        pending = {c: d for c, d in cat.frontier_parts(ep).items() if c.startswith("pending/")}
-        assert pending, ep
-        for cell, dirs in pending.items():
-            assert 1 <= len(dirs) <= 2, (ep, cell, dirs)
-            assert all(f"epoch={ep:06d}" in d for d in dirs), (ep, cell, dirs)
+        parts[ep] = cat.frontier_parts(ep)
+        n_files[ep] = sum(
+            f.endswith(".parquet")
+            for _, _, files in os.walk(cat.stage_path(ep, "frontier"))
+            for f in files
+        )
     assert totals["disallowed"] and totals["urls_fetch_fail"] and totals["outlinks_new"], totals
+    return parts, n_files
+
+
+@pytest.mark.slow
+def test_pending_cells_hold_only_this_epochs_dirs(flaky_crawl):
+    """After init and after every epoch, exactly one pending cell exists,
+    and it names only dirs written by that epoch: its merged dir and at
+    most one insert dir."""
+    parts, _ = flaky_crawl
+    for ep, cells in parts.items():
+        pending = {c: d for c, d in cells.items() if c.partition("/")[0] == "pending"}
+        assert list(pending) == ["pending"], (ep, list(pending))
+        dirs = pending["pending"]
+        assert 1 <= len(dirs) <= 2, (ep, dirs)
+        assert all(f"epoch={ep:06d}" in d for d in dirs), (ep, dirs)
+
+
+@pytest.mark.slow
+def test_frontier_files_per_epoch_bounded_by_write_tasks(spark, flaky_crawl):
+    """An epoch's frontier writes hold at most one file per write task in
+    the pending dirs (merged and insert) plus one per terminal status:
+    2·n + 3 parquet files, n being the session's shuffle partitions, however
+    many host buckets the pending rows span."""
+    _, n_files = flaky_crawl
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for ep, count in n_files.items():
+        assert 0 < count <= 2 * n + 3, (ep, count, n)

@@ -3,6 +3,7 @@ parity on the flaky graph — run on a reduced graph to keep the suite fast."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -12,7 +13,7 @@ from pyspark.sql import functions as F
 import engine.crawl as crawlmod
 from engine import seen as seenmod
 from engine.crawl import CrawlEngine
-from engine.schemas import ROBOTS_RULES
+from engine.schemas import FRONTIER, ROBOTS_RULES
 from engine.synthgraph import GraphConfig, gen_seed_urls
 from pyref.oracle import run_crawl as oracle_run
 
@@ -34,11 +35,15 @@ def _final_state(eng):
     return fr, log, docs
 
 
-def test_resume_equals_uninterrupted(spark, tmp_path):
+@pytest.fixture(scope="module")
+def three_epoch_state(spark, tmp_path_factory):
+    eng = CrawlEngine(spark, str(tmp_path_factory.mktemp("ref3")), SMALL, n_filter_parts=4, salt=4)
+    eng.run(3, seeds=gen_seed_urls(SMALL))
+    return _final_state(eng)
+
+
+def test_resume_equals_uninterrupted(spark, tmp_path, three_epoch_state):
     seeds = gen_seed_urls(SMALL)
-    # uninterrupted 3-epoch run
-    eng_a = CrawlEngine(spark, str(tmp_path / "a"), SMALL, n_filter_parts=4, salt=4)
-    eng_a.run(3, seeds=seeds)
     # interrupted: 2 epochs, then a NEW engine instance resumes to 3 with
     # junk staging simulating a mid-epoch kill before commit
     eng_b1 = CrawlEngine(spark, str(tmp_path / "b"), SMALL, n_filter_parts=4, salt=4)
@@ -48,7 +53,40 @@ def test_resume_equals_uninterrupted(spark, tmp_path):
     (junk / "part-junk.parquet").write_bytes(b"not parquet")
     eng_b2 = CrawlEngine(spark, str(tmp_path / "b"), SMALL, n_filter_parts=4, salt=4)
     eng_b2.run(3, seeds=seeds, resume=True)
-    assert _final_state(eng_a) == _final_state(eng_b2)
+    assert _final_state(eng_b2) == three_epoch_state
+
+
+def test_resume_from_per_bucket_pending_cells(spark, tmp_path, three_epoch_state):
+    """A catalog whose pending rows sit in one cell per host bucket
+    (``pending/<b>`` keys, the layout before pending rows shared one cell)
+    resumes: the first new epoch drops every per-bucket cell, and the
+    committed rows equal an uninterrupted run's."""
+    seeds = gen_seed_urls(SMALL)
+    eng = CrawlEngine(spark, str(tmp_path / "c"), SMALL, n_filter_parts=4, salt=4)
+    eng.run(1, seeds=seeds)
+    cat = eng.catalog
+    manifest = cat.manifest(1)
+    parts = manifest["snapshots"]["frontier"]["parts"]
+    # rewrite epoch 1's pending cell as one leaf dir per bucket; ``_b`` is a
+    # copy, so host_bucket stays in the data files
+    old = str(tmp_path / "per_bucket")
+    (
+        cat.read_parts(parts, schema=FRONTIER, status="pending")
+        .withColumn("_b", F.col("host_bucket"))
+        .write.partitionBy("_b")
+        .parquet(old)
+    )
+    buckets = {d[len("_b="):]: os.path.join(old, d) for d in os.listdir(old) if d.startswith("_b=")}
+    assert len(buckets) > 1
+    del parts["pending"]
+    parts.update({f"pending/{b}": [d] for b, d in buckets.items()})
+    with open(os.path.join(cat.root, "manifests", "manifest-000001.json"), "w") as f:
+        json.dump(manifest, f)
+
+    eng = CrawlEngine(spark, str(tmp_path / "c"), SMALL, n_filter_parts=4, salt=4)
+    eng.run(3, seeds=seeds, resume=True)
+    assert "/" not in "".join(eng.catalog.frontier_parts(2)), eng.catalog.frontier_parts(2)
+    assert _final_state(eng) == three_epoch_state
 
 
 @pytest.fixture(scope="module")
