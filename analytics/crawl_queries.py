@@ -122,7 +122,7 @@ def frontier_pop(spark: SparkSession, sf: str) -> DataFrame:
 )
 def frontier_merge(spark: SparkSession, sf: str) -> DataFrame:
     """F7: upsert semantics of engine.frontier.apply_updates (the engine's
-    merge of touched cells) plus the insert union, vs plain SQL."""
+    merge of the pending rows) plus the insert union, vs plain SQL."""
     f0 = _synth_frontier(spark, sf).drop("k")
     frontier = (
         f0.where(F.pmod("url_hash", F.lit(3)) != 0)

@@ -35,8 +35,9 @@ QUERIES, ORACLE, q = registry()
 def sc1_pushdown_scan(spark: SparkSession, sf: str) -> DataFrame:
     """SC1: parquet scan with predicate pushdown + column pruning.
 
-    Plan check (tests/test_plan_shape.py): PushedFilters carries both
-    predicates; ReadSchema is the 4 referenced columns only.
+    Plan check (tests/test_plan_shape_analytics.py::test_sc1_pushdown_and_pruning):
+    PushedFilters carries both predicates; ReadSchema is the 4 referenced
+    columns only.
     """
     li = load(spark, sf, "lineitem")
     return (

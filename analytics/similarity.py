@@ -9,7 +9,8 @@ array<float>[64], label).
   only bucket-mates, not the full corpus.  At cluster scale the bucket id
   is the shuffle key (one shuffle, skew-free by construction since the
   hyperplanes split the space evenly); brute-force is kept as the small-SF
-  baseline and recall oracle (tests/test_similarity.py).
+  baseline and recall oracle (the ``*_recall_vs_bruteforce`` tests in
+  tests/test_pipeline_ops.py).
 """
 
 from __future__ import annotations

@@ -51,8 +51,9 @@ def path_expr() -> Column:
 
 
 def host_bucket_expr(n_buckets: int) -> Column:
-    """Frontier host bucket of the ``host`` column: the one rule that names
-    a row's pending cell, for frontier rows and fetched rows alike."""
+    """Frontier host bucket of the ``host`` column: the key that spreads the
+    pending cell's rows over its write tasks (engine/crawl.py
+    ``_write_cells``)."""
     return F.pmod(F.xxhash64(F.col("host")), F.lit(n_buckets)).cast("int")
 
 

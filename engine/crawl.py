@@ -5,12 +5,13 @@ Per-epoch dataflow (SURVEY.md §3.1, shuffles labeled):
   pending scan (partition-pruned on status)             [no shuffle]
   → R2 robots gate (broadcast join + array HOF, zero-shuffle —
     rules were prefetched by init_run / the previous epoch, so R1
-    never sits on the epoch critical path)
+    never sits on the epoch critical path) → the gated cache
   → politeness k (broadcast join budgets)
   → F5 salted two-stage window-rank pop                 [shuffle 1: (host,salt); shuffle 2: host (pruned)]
   → F6+X1+X2+C1 fused fetch/parse/extract/canonicalize (mapInPandas,
     raw outlinks → canonical ``links``)                 [narrow]
-  ── the F7 pending-cell rewrite starts here, on a thread pool ──
+  ── the F7 merge of the gated cache (disallowed rows marked) with the
+     popped rows' Q1 transitions starts here, on a thread pool ──
   → dedup phase, on the main thread, materialized ONCE into a cache:
     X2 explode ``links`` + intra-epoch min_by dedup     [shuffle 3: url_hash]
     → D1 bloom probe (cogrouped applyInPandas)          [shuffle 4: part_id]
@@ -57,7 +58,7 @@ from engine import seen as seenmod
 from engine.canonicalize import path_expr
 from engine.catalog import SnapshotCatalog
 from engine.fetch import fetch_parse
-from engine.frontier import apply_updates, pop_frontier, retry_transition
+from engine.frontier import apply_updates, pending_rows, pop_frontier, retry_transition
 from engine.lineage import write_lineage_parquet, write_metrics_parquet
 from engine.parse import extract_candidates
 from engine.robots import fetch_robots, robots_gate
@@ -156,15 +157,9 @@ class CrawlEngine:
                 "seen_filter": {"path": sf_path, "rows": self.n_filter_parts},
             },
             appends={},
-            meta={
-                "cfg": repr(self.cfg),
-                # tracked state: lets epochs derive the pending count
-                # arithmetically instead of re-scanning the table (at
-                # 10^10-URL scale a frontier count is a job over millions
-                # of file footers — the invariant is free); the frontier
-                # and robots counts are their snapshot entries' ``rows``
-                "pending": n_frontier,
-            },
+            # the frontier and robots counts are their snapshot entries'
+            # ``rows``; an epoch counts its pending rows as it writes them
+            meta={"cfg": repr(self.cfg)},
         )
 
     # ----------------------------------------------------------------- epoch
@@ -174,8 +169,8 @@ class CrawlEngine:
 
         def _mark(name: str) -> None:
             # phase wall-clock profile, printed when SPARK_GRAFT_EPOCH_TIMING
-            # is set — the scaling harness uses it to attribute the
-            # non-scaling fraction of an epoch to a concrete stage
+            # is set — perfbench's PhaseTap reads it to attribute an
+            # epoch's wall time to a concrete stage
             now = time.time()
             _ph[name] = round(now - _tp[0], 2)
             _tp[0] = now
@@ -201,7 +196,6 @@ class CrawlEngine:
         prev_manifest = cat.manifest(prev_epoch)
         prev_snaps = prev_manifest["snapshots"]
         prev_rows = prev_snaps["frontier"]["rows"]
-        prev_pending = prev_manifest["meta"]["pending"]
         prev_robots_rows = prev_snaps["robots_rules"]["rows"]
 
         # SC3 scan prune: the pending scan is pruned at the MANIFEST —
@@ -223,16 +217,10 @@ class CrawlEngine:
         # or not the epoch commits: a failed epoch leaves no writer running
         # into its staging dirs and no persisted frame behind
         pool = ThreadPoolExecutor(max_workers=10)
-        # the disallowed count rides the gated cache as an observation: the
-        # pop's first job builds the cache and fires it
-        dis_obs = Observation(f"dis_stats_e{epoch}")
-        gated = gated.observe(
-            dis_obs, F.count(F.when(~F.col("allowed"), 1)).alias("n")
-        ).persist()
+        gated = gated.persist()
         popped = probed = flagged = None
         try:
             _mark("gate_build")
-            disallowed = gated.where(~F.col("allowed"))
             eligible = gated.where(F.col("allowed"))
 
             # --- politeness k + F5 pop ---
@@ -296,7 +284,6 @@ class CrawlEngine:
             # fetch metrics ride the write as an observation (no stats job
             # over the staged files).
             fetched_dir = cat.stage_path(epoch, "fetched")
-            retryable = (~F.col("ok")) & (F.col("retries") + 1 < F.lit(cfg.max_retries))
             fetch_obs = Observation(f"fetch_stats_e{epoch}")
             self._write(
                 fetch_parse(popped, cfg)
@@ -310,7 +297,6 @@ class CrawlEngine:
                     fetch_obs,
                     F.count(F.when(F.col("ok"), 1)).alias("n_ok"),
                     F.count(F.when(~F.col("ok"), 1)).alias("n_fail"),
-                    F.count(F.when(retryable, 1)).alias("n_retry_pending"),
                     F.coalesce(
                         F.sum(F.when(F.col("ok"), F.col("n_outlinks"))), F.lit(0)
                     ).alias("links"),
@@ -319,35 +305,36 @@ class CrawlEngine:
                 partition_cols=["okp"],
             )
             fetched = spark.read.schema(FETCHED_STAGED).parquet(fetched_dir)
-            stats, dis_stats = fetch_obs.get, dis_obs.get
+            stats = fetch_obs.get
             _mark("fetch_write")
 
             # --- F7 merge: every pending row, rewritten (O(pending)) ---
-            # Every pending row's host pops a row or has it disallowed this
-            # epoch, so the merge rewrites the whole pending cell; rows leaving
-            # 'pending' go to ONE new immutable dir per terminal status,
-            # appended to that status's cell and never rewritten — the
-            # manifest-level analogue of Iceberg MERGE INTO's add/remove-file
-            # commit (engine/catalog.py cell notes).  It needs only the
-            # staged fetch output and the gated cache, so it runs on the pool
-            # from here and overlaps the dedup phase and every write after
-            # it.  Atomicity is untouched: nothing is visible until the
-            # manifest rename below, and a failure in ANY job aborts the
+            # The one place pending rows change status: the gated cache with
+            # its disallowed rows marked (retries and priority kept), plus the
+            # popped rows' Q1 transitions.  Every pending row's host pops a row
+            # or has it disallowed, so the merge rewrites the whole pending
+            # cell; rows leaving 'pending' go to ONE new immutable dir per
+            # terminal status, appended to that status's cell and never
+            # rewritten — the manifest-level analogue of Iceberg MERGE INTO's
+            # add/remove-file commit (engine/catalog.py cell notes).  Its
+            # counts ride the write, so they count the rows written.  It runs
+            # on the pool from here, overlapping the dedup phase and every
+            # write after it.  Atomicity is untouched: nothing is visible until
+            # the manifest rename below, and a failure in ANY job aborts the
             # epoch before commit (futures re-raise at the gather).
-            updates = retry_transition(fetched, cfg.max_retries).unionByName(
-                disallowed.select(
-                    "url_hash",
-                    F.lit("disallowed").alias("new_status"),
-                    F.col("retries").alias("new_retries"),
-                    F.lit(None).cast("double").alias("new_priority"),
-                )
+            marked = gated.withColumn(
+                "status",
+                F.when(~F.col("allowed"), F.lit("disallowed")).otherwise(F.col("status")),
+            ).select(*FRONTIER.fieldNames())
+            merge_obs = Observation(f"merge_stats_e{epoch}")
+            merged = apply_updates(marked, retry_transition(fetched, cfg.max_retries)).observe(
+                merge_obs,
+                F.count(F.when(F.col("status") == "pending", 1)).alias("n_pending"),
+                F.count(F.when(F.col("status") == "disallowed", 1)).alias("n_disallowed"),
             )
             fr_dir = cat.stage_path(epoch, "frontier")
             fut_merged = pool.submit(_timed(
-                "merged",
-                self._write_cells,
-                apply_updates(pending, updates),
-                os.path.join(fr_dir, "cells"),
+                "merged", self._write_cells, merged, os.path.join(fr_dir, "cells")
             ))
 
             # --- dedup phase: X2 → D1 → D2, computed once ---
@@ -376,18 +363,7 @@ class CrawlEngine:
             ins_stats = ins_obs.get
             _mark("dedup")
 
-            inserts = flagged.where("is_new").select(
-                "url_hash",
-                "url",
-                "host",
-                "host_bucket",
-                "depth",
-                F.col("depth").cast("double").alias("priority"),
-                F.lit(epoch).cast("int").alias("discovered_epoch"),
-                F.lit("pending").alias("status"),
-                F.lit(0).cast("int").alias("retries"),
-                "parent_hash",
-            )
+            inserts = pending_rows(flagged.where("is_new"), epoch)
             # F7 inserts: one dir, appended to the pending cell next to the
             # merged dir; the next epoch's merge folds both in.
             fut_insert_cells = pool.submit(_timed(
@@ -441,10 +417,9 @@ class CrawlEngine:
             sf_path = fut_seen.result()
             _mark("overlap_stats_writes")
 
-            n_ok, n_fail = int(stats["n_ok"]), int(stats["n_fail"])
-            n_retry_pending, n_links = int(stats["n_retry_pending"]), int(stats["links"])
+            n_ok, n_fail, n_links = int(stats["n_ok"]), int(stats["n_fail"]), int(stats["links"])
             n_popped = n_ok + n_fail
-            n_disallowed = int(dis_stats["n"])
+            merge_stats = merge_obs.get
             n_cands, n_new = int(ins_stats["n_cands"]), int(ins_stats["n"])
 
             # assemble the cell map deterministically on the main thread: the
@@ -490,12 +465,11 @@ class CrawlEngine:
             _mark("assemble")
 
             # --- metrics (definitions shared with pyref.oracle) ---
-            # pending_end and frontier_rows follow arithmetically from the
-            # status-transition semantics (every popped row leaves 'pending'
-            # and only retryable failures re-enter; inserts are all pending),
-            # so no post-write table scan is needed.
+            # pending_end: the merge's pending rows plus the inserts (all
+            # pending); the merge rewrites rows in place, so frontier_rows
+            # grows by the inserts alone.  No post-write table scan.
             frontier_rows = prev_rows + n_new
-            pending_end = prev_pending - n_popped - n_disallowed + n_retry_pending + n_new
+            pending_end = int(merge_stats["n_pending"]) + n_new
             wall = time.time() - t0
             metrics = {
                 "urls_popped": n_popped,
@@ -505,7 +479,7 @@ class CrawlEngine:
                 "outlinks_extracted": n_links,
                 "outlinks_candidates": n_cands,
                 "outlinks_new": n_new,
-                "disallowed": n_disallowed,
+                "disallowed": int(merge_stats["n_disallowed"]),
                 "pending_end": pending_end,
                 "wall_ms": wall * 1000.0,
                 "urls_per_sec": (n_popped / wall) if wall > 0 else 0.0,
@@ -522,7 +496,7 @@ class CrawlEngine:
                 epoch,
                 snapshots,
                 appends,
-                meta={"metrics": metrics, "pending": pending_end},
+                meta={"metrics": metrics},
             )
         finally:
             pool.shutdown(wait=True)

@@ -1,4 +1,4 @@
-"""Frontier operators: F5 salted window-rank pop, F7 update apply, Q1 retry + P1 priority.
+"""Frontier operators: F5 salted window-rank pop, F7 update apply, new rows, Q1 retry + P1 priority.
 
 F5 is the heart of the engine (BASELINE.json:6 "depth/priority-ordered
 frontier pop … salted window-rank over hash-partitioned host groups to
@@ -52,12 +52,12 @@ def apply_updates(frontier: DataFrame, updates: DataFrame) -> DataFrame:
     """F7: apply this epoch's status transitions to frontier rows.
 
     ``updates``: (url_hash, new_status, new_retries, new_priority) for rows
-    popped or disallowed this epoch.  A left join + coalesce, so rows with
-    no update pass through unchanged.  The engine applies it to every
-    pending row, since each epoch touches every pending cell (O(pending)),
-    and writes the result as the next immutable snapshot's cells (SC5);
-    the insert union of a full MERGE is the caller's (the engine appends
-    insert dirs instead).
+    popped this epoch.  A left join + coalesce, so rows with no update pass
+    through unchanged.  The engine applies it to every pending row, with
+    the R2-disallowed rows already marked, since each epoch touches every
+    pending row (O(pending)), and writes the result as the next immutable
+    snapshot's cells (SC5); the insert union of a full MERGE is the
+    caller's (the engine appends insert dirs instead).
     """
     return (
         frontier.join(updates, "url_hash", "left")
@@ -65,6 +65,23 @@ def apply_updates(frontier: DataFrame, updates: DataFrame) -> DataFrame:
         .withColumn("retries", F.coalesce(F.col("new_retries"), F.col("retries")))
         .withColumn("priority", F.coalesce(F.col("new_priority"), F.col("priority")))
         .drop("new_status", "new_retries", "new_priority")
+    )
+
+
+def pending_rows(keyed: DataFrame, epoch: int) -> DataFrame:
+    """Seeds (epoch 0) and inserts as frontier rows: pending, no retries, P1
+    priority = depth.  ``keyed`` carries the url keys, depth and parent_hash."""
+    return keyed.select(
+        "url_hash",
+        "url",
+        "host",
+        "host_bucket",
+        "depth",
+        F.col("depth").cast("double").alias("priority"),
+        F.lit(epoch).cast("int").alias("discovered_epoch"),
+        F.lit("pending").alias("status"),
+        F.lit(0).cast("int").alias("retries"),
+        "parent_hash",
     )
 
 

@@ -25,8 +25,13 @@ def extract_candidates(fetched: DataFrame, cfg: GraphConfig, n_buckets: int) -> 
         (F.col("depth") + 1).cast("int").alias("depth"),
         F.explode("links").alias("url"),
     )
-    keyed = with_url_keys(links, n_buckets)
-    # same-epoch dedup: keep min (depth, parent_hash) per url_hash (normative).
+    return first_discovery(with_url_keys(links, n_buckets))
+
+
+def first_discovery(keyed: DataFrame) -> DataFrame:
+    """Collapse duplicate discoveries of a url_hash to the one with the
+    smallest (depth, parent_hash) — the normative rule, for seeds and
+    same-epoch candidates alike."""
     # min_by instead of a row_number window: the aggregate runs a partial
     # pass before the url_hash shuffle, so same-epoch duplicate discoveries
     # (the common case — popular pages are re-linked by many parents)

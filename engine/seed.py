@@ -2,11 +2,12 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.canonicalize import canonicalize_udf, with_url_keys
-from engine.schemas import FRONTIER
+from engine.frontier import pending_rows
+from engine.parse import first_discovery
 
 
 def seeds_to_frontier(
@@ -18,7 +19,8 @@ def seeds_to_frontier(
     """Seed list (in-memory SC7 or ``spark.read.text`` SC2) → frontier rows.
 
     depth=0, priority=0.0, status='pending', discovered_epoch=0; duplicate
-    canonical URLs collapse to one row (first by url text — deterministic).
+    seeds canonicalize to identical rows, so collapsing them by the
+    candidates' rule keeps that one row.
     """
     if seed_path is not None:
         raw = spark.read.text(seed_path).select(F.col("value").alias("raw_url"))
@@ -29,18 +31,7 @@ def seeds_to_frontier(
         .where(F.col("url").isNotNull())
         .drop("raw_url")
     )
-    keyed = with_url_keys(canon, n_buckets)
-    w = Window.partitionBy("url_hash").orderBy("url")
-    deduped = keyed.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1)
-    return deduped.select(
-        "url_hash",
-        "url",
-        "host",
-        "host_bucket",
-        F.lit(0).cast("int").alias("depth"),
-        F.lit(0.0).alias("priority"),
-        F.lit(0).cast("int").alias("discovered_epoch"),
-        F.lit("pending").alias("status"),
-        F.lit(0).cast("int").alias("retries"),
-        F.lit(None).cast("long").alias("parent_hash"),
-    ).select(*[f.name for f in FRONTIER.fields])
+    keyed = with_url_keys(canon, n_buckets).select(
+        "*", F.lit(0).cast("int").alias("depth"), F.lit(None).cast("long").alias("parent_hash")
+    )
+    return pending_rows(first_discovery(keyed), 0)

@@ -7,8 +7,8 @@ fingerprints are byte-identical to the engine's JVM-side
 Implements the public-domain XXH64 algorithm (Yann Collet's spec).
 Spark's ``XxHash64`` expression hashes a string column's UTF-8 bytes with
 the standard algorithm; the result is the same 64-bit value interpreted as
-a signed long.  ``tests/test_xxh64.py`` asserts parity against Spark on a
-vector of strings and longs.
+a signed long.  ``tests/test_units.py::test_xxh64_spark_parity`` asserts
+parity against Spark on a vector of strings and longs.
 
 No pyspark imports here — this module must stay importable by the pure
 oracle and by executor-side UDF code without a JVM.

@@ -19,7 +19,9 @@ from collections import defaultdict
 import pytest
 from pyspark.sql import functions as F
 
+import engine.crawl as crawlmod
 from engine.crawl import CrawlEngine
+from engine.frontier import apply_updates
 from engine.schemas import FRONTIER
 from engine.synthgraph import TINY, TINY_FLAKY, gen_seed_urls
 
@@ -34,24 +36,33 @@ def _files(d: str) -> list[tuple[str, int, int]]:
 @pytest.fixture(scope="module")
 def tiny_crawl(spark, tmp_path_factory):
     """A 3-epoch TINY crawl, stepped epoch by epoch; records every terminal
-    dir's files right after the epoch that committed it."""
+    dir's files right after the epoch that committed it, and the leaf node
+    names of the optimized plan of each epoch's merge input."""
     eng = CrawlEngine(
         spark, str(tmp_path_factory.mktemp("cells")), TINY, n_buckets=8, n_filter_parts=4
     )
     eng.init_run(gen_seed_urls(TINY))
-    metrics, terminal_files = {}, {}
-    for ep in range(1, EPOCHS + 1):
-        metrics[ep] = eng.run_epoch(ep)
-        for cell, dirs in eng.catalog.frontier_parts(ep).items():
-            if cell != "pending":
-                for d in dirs:
-                    terminal_files.setdefault(d, _files(d))
-    return eng, metrics, terminal_files
+    metrics, terminal_files, merge_leaves = {}, {}, []
+
+    def capture(frontier, updates):
+        leaves = frontier._jdf.queryExecution().optimizedPlan().collectLeaves()
+        merge_leaves.append([leaves.apply(i).nodeName() for i in range(leaves.size())])
+        return apply_updates(frontier, updates)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(crawlmod, "apply_updates", capture)
+        for ep in range(1, EPOCHS + 1):
+            metrics[ep] = eng.run_epoch(ep)
+            for cell, dirs in eng.catalog.frontier_parts(ep).items():
+                if cell != "pending":
+                    for d in dirs:
+                        terminal_files.setdefault(d, _files(d))
+    return eng, metrics, terminal_files, merge_leaves
 
 
 @pytest.mark.slow
 def test_terminal_cells_append_only(tiny_crawl):
-    eng, _, terminal_files = tiny_crawl
+    eng, _, terminal_files, _ = tiny_crawl
     cat = eng.catalog
     assert cat.last_epoch() == EPOCHS
 
@@ -93,7 +104,7 @@ def test_lineage_rows_match_metrics(tiny_crawl):
     """Lineage rows (one per file a stage wrote) add up to the epoch's
     metrics: pop and fetch_parse to urls_popped, dedup_insert to
     outlinks_new."""
-    eng, metrics, _ = tiny_crawl
+    eng, metrics, _, _ = tiny_crawl
     cat = eng.catalog
     lineage = cat.read_appended("lineage")
     sums = defaultdict(int)
@@ -106,6 +117,19 @@ def test_lineage_rows_match_metrics(tiny_crawl):
         entry = cat.manifest(ep)["appends"]["lineage"]
         assert entry["rows"] == lineage.where(F.col("epoch") == ep).count(), ep
     assert lineage.where(F.col("partition_id") < 0).count() == 0
+
+
+@pytest.mark.slow
+def test_merge_reads_the_gated_cache(tiny_crawl):
+    """The merge is the one place pending rows change status: its input is
+    the gated cache (one leaf, an InMemoryRelation) with the disallowed
+    rows marked, not a second scan of the pending dirs.  No manifest
+    carries a tracked pending count: pending_end is counted on the merge's
+    write."""
+    eng, _, _, merge_leaves = tiny_crawl
+    assert merge_leaves == [["InMemoryRelation"]] * EPOCHS, merge_leaves
+    for ep in range(EPOCHS + 1):
+        assert "pending" not in eng.catalog.manifest(ep)["meta"], ep
 
 
 def test_committed_frontier_read_starts_no_job(spark, tmp_path):

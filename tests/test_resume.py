@@ -142,11 +142,25 @@ def test_failed_epoch_leaves_no_writer_or_cache(
 
 
 def test_flaky_retry_parity(spark, tmp_path):
-    """Q1: deterministic failures/retries match the oracle exactly."""
+    """Q1: deterministic failures/retries match the oracle exactly, and so
+    does every epoch's metrics row, pending_end included: failed fetches
+    re-enter 'pending' until their retries run out."""
     seeds = gen_seed_urls(FLAKY)
     eng = CrawlEngine(spark, str(tmp_path / "f"), FLAKY, n_filter_parts=4, salt=4)
-    eng.run(3, seeds=seeds)
-    want = oracle_run(seeds, FLAKY, max_epochs=3)
+    got_metrics = eng.run(4, seeds=seeds)
+    want = oracle_run(seeds, FLAKY, max_epochs=4)
+    keys = (
+        "urls_popped",
+        "urls_fetch_ok",
+        "urls_fetch_fail",
+        "outlinks_candidates",
+        "outlinks_new",
+        "disallowed",
+        "pending_end",
+    )
+    assert len(got_metrics) == len(want.metrics) == 4
+    for got, exp in zip(got_metrics, want.metrics):
+        assert {k: got[k] for k in keys} == {k: exp[k] for k in keys}, exp["epoch"]
     got_log = sorted(
         (r["epoch"], r["host"], r["fetch_seq_in_host"], r["url"], r["url_hash"])
         for r in eng.catalog.read_appended("crawl_log").collect()

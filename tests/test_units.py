@@ -146,6 +146,26 @@ def test_engine_defs_are_referenced():
     assert not unreferenced, f"definitions nothing references: {unreferenced}"
 
 
+def test_named_test_files_exist():
+    """Every ``tests/test_*.py`` path named in a .py file under engine/,
+    analytics/, tools/, pyref/ or the repo root exists, and a
+    ``::name`` after it names a def in that file: a docstring that
+    points at a test points at the real one."""
+    repo = Path(__file__).resolve().parent.parent
+    files = [p for d in ("engine", "analytics", "tools", "pyref") for p in (repo / d).glob("*.py")]
+    files += list(repo.glob("*.py"))
+    ref = re.compile(r"(tests/test_\w+\.py)(?:::(\w+))?")
+    missing = []
+    for py in sorted(files):
+        for path, name in ref.findall(py.read_text()):
+            target = repo / path
+            if not target.exists() or (
+                name and not re.search(rf"^def {name}\b", target.read_text(), re.M)
+            ):
+                missing.append(f"{py.relative_to(repo)}: {path}{'::' + name if name else ''}")
+    assert not missing, f"references to tests that do not exist: {missing}"
+
+
 def test_engine_options_are_set_by_a_caller():
     """Every keyword option of CrawlEngine.__init__ is set by a non-test
     caller (run_crawl.py, bench.py, perfbench/ or tools/): an option that
